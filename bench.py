@@ -593,6 +593,7 @@ def main() -> int:
         jvm = jvm_diagnostics(spark)
         streaming = bench_streaming(spark, sf_dir)
         probe = round(min(probe_pre, cpu_probe()), 4)
+        default_parallelism = spark.sparkContext.defaultParallelism
         spark.stop()
         probe_mc = round(min(probe_mc_pre, cpu_probe_mc()), 4)
     finally:
@@ -602,6 +603,9 @@ def main() -> int:
     full = {
         "sf": sf,
         "cpus": int(cpus) if str(cpus).isdigit() else cpus,
+        # the live session's value beside the env-derived ``cpus``: a
+        # mismatch marks an artifact whose file name mislabels its run
+        "default_parallelism": default_parallelism,
         "warm_total": round(sum(t for t in warm.values() if t >= 0), 4),
         "cold_total": round(sum(t for t in cold.values() if t >= 0), 4),
         "queries": {

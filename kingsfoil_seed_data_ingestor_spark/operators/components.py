@@ -114,10 +114,8 @@ def _minlabel_phase(
     dst: str,
     budget: int,
     scope: CacheScope,
-    reliable_checkpoints: bool = True,
     jump: bool = False,
     extend: bool = False,
-    fuse: int = 1,
 ) -> tuple[DataFrame, bool, int]:
     """Bounded min-label propagation: returns ``(labels, converged,
     changing_rounds)`` with ``labels = (node, label)`` for every node
@@ -186,39 +184,16 @@ def _minlabel_phase(
     (no edge shuffle). Kept OFF for the pure referee wrapper so
     ``connected_components_minlabel`` stays the independent O(diameter)
     formulation the parity tests pin the fast paths against.
-
-    ``fuse`` (optimization round 12) runs ``fuse`` consecutive rounds
-    inside ONE checkpointed plan. The decision sequence is byte-equal
-    to the unfused loop: the fused frame carries each inner round's
-    ``(label, changed)`` beside the final one, a single ``Observation``
-    on the one materialization job yields every inner round's pending
-    count, and the budget / geometric-collapse / convergence checks
-    replay those counts in order — when the unfused loop would have
-    stopped after an inner round, the fused loop returns THAT round's
-    carried label state. **Measured and REJECTED as the default**
-    (kept as an option so the negative result stays reproducible —
-    ``tools/exp_fused_rounds.py``): each round's subtree is referenced
-    up to 4× by the next round's plan (delta filter, keep-own side,
-    and twice via the pointer self-join), and those references are NOT
-    deduplicated — the fused plan for two rounds carries 16 checkpoint
-    scans / 22 BroadcastExchanges with zero ReusedExchange nodes, and
-    under AQE every one of them is a separately-scheduled stage job.
-    Measured: spider fixture 74 jobs (fuse=2) vs 42 (fuse=1) at equal
-    wall; the 5-consumer component suite 46–129 jobs/query fused vs
-    23–63 unfused with wall 1.3–1.4× WORSE. The per-round checkpoint
-    is precisely what caps the reference blowup — removing it trades
-    one scheduling barrier for O(refs^rounds) duplicated stages.
     """
-    if reliable_checkpoints:
-        _ensure_checkpoint_dir(edges.sparkSession)
+    _ensure_checkpoint_dir(edges.sparkSession)
 
     from pyspark.sql import Observation
 
-    def _ckpt_with_pendings(df: DataFrame, flag_cols: list):
-        """Checkpoint one round and return ``(df, [counts...])`` — one
-        pending count per boolean flag column, all collected by the
-        SAME materialization job (the fused loop observes every inner
-        round's pending count here).
+    def _ckpt_with_pending(df: DataFrame):
+        """Eager reliable checkpoint of one round, returning ``(df,
+        pending)``: the count of ``changed`` rows is observed by the
+        SAME materialization job (a lazy reliable checkpoint would
+        recompute the plan a second time for the checkpoint write).
 
         A parquet write + read-back instead of the eager reliable
         checkpoint was tried and REJECTED by measurement (optimization
@@ -228,29 +203,11 @@ def _minlabel_phase(
         the parquet route pays the file-committer protocol + listing
         per round — the 5-consumer component suite measured 14.3–15.7 s
         (checkpoint) vs 22.4–30.2 s (parquet) best-of-3 interleaved."""
-        aggs = [
-            F.sum(F.col(c).cast("long")).alias(f"c{i}")
-            for i, c in enumerate(flag_cols)
-        ]
-        if reliable_checkpoints:
-            # eager: a lazy reliable checkpoint recomputes the plan a
-            # second time for the checkpoint write; the observed counts
-            # are collected by the same materialization job
-            obs = Observation()
-            out = df.observe(obs, *aggs).checkpoint(eager=True)
-            got = obs.get
-            return out, [got[f"c{i}"] for i in range(len(flag_cols))]
-        # lazy local checkpoint: the observed pending count right after
-        # this call materializes the blocks AND computes the count in
-        # ONE job — eager=True would spend a separate job per iteration
-        # just materializing
-        out = df.localCheckpoint(eager=False)
-        row = out.agg(*aggs).first()
-        return out, list(row)
-
-    def _ckpt_with_pending(df: DataFrame):
-        out, counts = _ckpt_with_pendings(df, ["changed"])
-        return out, counts[0]
+        obs = Observation()
+        out = df.observe(
+            obs, F.sum(F.col("changed").cast("long")).alias("pending")
+        ).checkpoint(eager=True)
+        return out, obs.get["pending"]
 
     sym = scope.persist(
         _symmetrize(edges, src, dst)
@@ -276,13 +233,10 @@ def _minlabel_phase(
     ).withColumn("changed", F.lit(True))
     labels, pending = _ckpt_with_pending(labels)
 
-    def _one_round(cur: DataFrame, carry: list) -> DataFrame:
-        """One min-label round over ``cur`` (node, label, changed,
-        *carry): min label among each node's CHANGED neighbors (delta
-        push), then keep min(own, that), then the optional pointer
-        jump. Returns (node, *carry, label, changed); ``carry`` columns
-        pass through untouched — the fused loop uses them to keep every
-        inner round's state beside the final one."""
+    def _one_round(cur: DataFrame) -> DataFrame:
+        """One min-label round over ``cur`` (node, label, changed): min
+        label among each node's CHANGED neighbors (delta push), then
+        keep min(own, that), then the optional pointer jump."""
         delta = cur.filter("changed").select("node", "label")
         neighbor_min = (
             sym.join(delta, sym.b == delta.node)
@@ -294,7 +248,6 @@ def _minlabel_phase(
             .join(neighbor_min.alias("n"), "node", "left")
             .select(
                 "node",
-                *[F.col(f"l.{c}").alias(c) for c in carry],
                 F.col("l.label").alias("_prev"),
                 F.least(
                     F.col("l.label"),
@@ -319,14 +272,12 @@ def _minlabel_phase(
                 out.join(ptr, out.label == F.col("_pn"), "left")
                 .select(
                     "node",
-                    *carry,
                     "_prev",
                     F.coalesce(F.col("_pl"), F.col("label")).alias("label"),
                 )
             )
         return out.select(
             "node",
-            *carry,
             "label",
             (F.col("label") < F.col("_prev")).alias("changed"),
         )
@@ -334,49 +285,17 @@ def _minlabel_phase(
     prev_pending = pending
     changing_rounds = 0
     converged = True
-    hops = max(1, int(fuse))
-    done = False
-    while not done:
-        # ``hops`` rounds built into ONE plan; inner-round states ride
-        # along as carried (_l{i}, _c{i}) columns so one checkpoint job
-        # materializes everything and one Observation reports every
-        # inner round's pending count
-        frame = labels
-        flags = []
-        for h in range(hops - 1):
-            frame = _one_round(frame, [c for pair in flags for c in pair])
-            lc = (f"_l{h}", f"_c{h}")
-            frame = frame.withColumn(lc[0], F.col("label")).withColumn(
-                lc[1], F.col("changed")
-            )
-            flags.append(lc)
-        frame = _one_round(frame, [c for pair in flags for c in pair])
-        flag_cols = [c for _, c in flags] + ["changed"]
-        labels, pendings = _ckpt_with_pendings(frame, flag_cols)
-        # replay the unfused loop's decision sequence over the inner
-        # rounds' pending counts, in order; when the unfused loop would
-        # have stopped after inner round ``h``, adopt THAT round's
-        # carried label state (byte-equal results and round counts)
-        for h, pending in enumerate(pendings):
-            if not pending:
-                done = True
-            elif changing_rounds + 1 > budget and not (
-                extend and pending * 2 <= prev_pending
-            ):
-                changing_rounds += 1
-                converged = False
-                done = True
-            else:
-                changing_rounds += 1
-                prev_pending = pending
-                continue
-            if h < hops - 1:  # stopped at an inner round: restore it
-                labels = labels.select(
-                    "node",
-                    F.col(f"_l{h}").alias("label"),
-                    F.col(f"_c{h}").alias("changed"),
-                )
+    while True:
+        labels, pending = _ckpt_with_pending(_one_round(labels))
+        if not pending:
             break
+        changing_rounds += 1
+        if changing_rounds > budget and not (
+            extend and pending * 2 <= prev_pending
+        ):
+            converged = False
+            break
+        prev_pending = pending
     return labels.select("node", "label"), converged, changing_rounds
 
 
@@ -386,7 +305,6 @@ def connected_components_minlabel(
     dst: str = "j",
     max_iterations: int = 25,
     scope: CacheScope | None = None,
-    reliable_checkpoints: bool = True,
 ) -> DataFrame:
     """(node, component) for every node incident to an edge, where
     ``component`` is the smallest node id in the node's connected
@@ -398,20 +316,10 @@ def connected_components_minlabel(
     early would silently split components). The adaptive default
     ``connected_components`` never has that failure mode; this wrapper
     is the independent referee the parity tests pin it against.
-
-    ``reliable_checkpoints``: per-iteration lineage truncation
-    defaults to durable checkpoint FILES — they cost a filesystem
-    round-trip per iteration but pin no executor storage, which keeps
-    the repo's cache-discipline contract (test_caching: zero persistent
-    RDDs after a query drains — ``localCheckpoint`` blocks linger until
-    the JVM context cleaner collects them). Pass ``False`` for
-    executor-local checkpoint blocks in latency-sensitive interactive
-    use; measured difference on local[32] is small (~0.2 s/round) and
-    results are byte-equal either way.
     """
     scope, own = scope_or_own(scope)
     labels, converged, _ = _minlabel_phase(
-        edges, src, dst, max_iterations, scope, reliable_checkpoints
+        edges, src, dst, max_iterations, scope
     )
     if not converged:
         raise RuntimeError(

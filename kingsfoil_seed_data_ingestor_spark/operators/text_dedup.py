@@ -137,21 +137,9 @@ def shingle_hash_table(
     return grams.distinct() if distinct else grams
 
 
-def _pairs_with_jaccard(posts: DataFrame, pair_filter: DataFrame | None = None) -> DataFrame:
-    """Shared-shingle counts → Jaccard for (i < j) pairs.
-
-    With ``pair_filter`` (a small (i, j) candidate table, e.g. from
-    LSH), the posting list is first semi-joined down to candidate
-    documents so the self-join only touches near-dup candidates.
-    """
+def _pairs_with_jaccard(posts: DataFrame) -> DataFrame:
+    """Shared-shingle counts → Jaccard for (i < j) pairs."""
     sizes = shingle_sizes(posts)
-    if pair_filter is not None:
-        cand_docs = (
-            pair_filter.select(F.col("i").alias("doc_id"))
-            .union(pair_filter.select(F.col("j").alias("doc_id")))
-            .distinct()
-        )
-        posts = posts.join(F.broadcast(cand_docs), "doc_id", "left_semi")
     a = posts.select(F.col("doc_id").alias("i"), "shingle")
     b = posts.select(F.col("doc_id").alias("j"), "shingle")
     shared = (
@@ -160,8 +148,6 @@ def _pairs_with_jaccard(posts: DataFrame, pair_filter: DataFrame | None = None) 
         .groupBy("i", "j")
         .agg(F.count(F.lit(1)).alias("common"))
     )
-    if pair_filter is not None:
-        shared = shared.join(pair_filter, ["i", "j"], "left_semi")
     # the aggregated pair table is small; AQE broadcasts the right side
     shared = shared.join(
         sizes.select(F.col("doc_id").alias("i"), F.col("n_shingles").alias("ni")), "i"
@@ -238,27 +224,6 @@ def minhash_signatures(
     return minhash_profiles(docs, num_hashes, n, id_col, text_col).select(
         "doc_id", "signature"
     )
-
-
-def minhash_signatures_from_posts(posts: DataFrame, num_hashes: int = 128) -> DataFrame:
-    """Signatures from an existing ``(doc_id, shingle)`` posting list —
-    lets callers that also need the postings build them once.
-
-    The shingle STRING is hashed exactly once per posting row; the k
-    lanes then re-hash that 8-byte value with per-lane seeds
-    (``xxhash64(k, H)``). Hashing a fixed-width long is a handful of
-    instructions vs a length-dependent string walk, so per-lane cost
-    drops ~10× while lanes stay fully independent (xxhash64 seed
-    avalanche) — same S-curve guarantees, and any recall regression
-    would surface in the brute-force Jaccard oracle."""
-    hashed = posts.select("doc_id", F.xxhash64(F.col("shingle")).alias("_H"))
-    minima = hashed.groupBy("doc_id").agg(
-        *[F.expr(f"min(xxhash64({k}, _H)) AS _h{k}") for k in range(num_hashes)]
-    )
-    signature = F.expr(
-        "array(" + ", ".join(f"_h{k}" for k in range(num_hashes)) + ")"
-    )
-    return minima.select("doc_id", signature.alias("signature"))
 
 
 def minhash_lanes_from_hashed_posts(posts: DataFrame, num_hashes: int = 96) -> DataFrame:
@@ -381,8 +346,6 @@ def lsh_candidate_pairs(
     signatures: DataFrame,
     bands: int = 16,
     rows_per_band: int = 4,
-    scope: CacheScope | None = None,
-    persist_banded: bool = True,
     max_bucket_size: int | None = None,
 ) -> DataFrame:
     """Distinct (i < j) pairs colliding in ≥1 LSH band.
@@ -391,9 +354,9 @@ def lsh_candidate_pairs(
     the key so buckets from different bands never mix. Shuffles on the
     band key only — candidate generation is linear in documents.
 
-    ``persist_banded=False`` skips pinning the banded table: right when
-    ``signatures`` is itself already cached (re-deriving the explode
-    from cache is cheaper than a second materialization round-trip).
+    The banded table is NOT persisted: ``minhash_near_dups`` passes
+    cached ``signatures``, and re-deriving the explode from that cache
+    is cheaper than a second materialization round-trip.
 
     ``max_bucket_size`` is the hot-bucket guard for corpus scale: a
     bucket of k colliding documents emits k(k-1)/2 candidate pairs, and
@@ -412,11 +375,6 @@ def lsh_candidate_pairs(
     banded = signatures.select(
         "doc_id", F.expr(lsh_band_expr(bands, rows_per_band)).alias("bk")
     ).select("doc_id", "bk.band", "bk.bucket")
-    # both sides of the self-join read the banded table; persist the
-    # (docs × bands) narrow rows so the signature aggregation runs once
-    scope, own = scope_or_own(scope)
-    if persist_banded:
-        banded = scope.persist(banded)
     if max_bucket_size is not None:
         ok = (
             banded.groupBy("band", "bucket")
@@ -427,42 +385,12 @@ def lsh_candidate_pairs(
         banded = banded.join(ok, ["band", "bucket"], "left_semi")
     left = banded.select(F.col("doc_id").alias("i"), "band", "bucket")
     right = banded.select(F.col("doc_id").alias("j"), "band", "bucket")
-    out = (
+    return (
         left.join(right, ["band", "bucket"])
         .filter(F.col("i") < F.col("j"))
         .select("i", "j")
         .distinct()
     )
-    return scope.attach(out) if own else out
-
-
-def verify_pairs_exact_jaccard(posts: DataFrame, cands: DataFrame) -> DataFrame:
-    """Exact Jaccard for a (small) candidate-pair table.
-
-    The candidate set after LSH is tiny relative to the corpus, so
-    instead of re-joining the full posting list on shingle (a second
-    corpus-wide shuffle), gather the shingle *set* of each candidate
-    document (semi-join keeps the scan pruned) and compute
-    ``|A∩B| / (|A|+|B|-|A∩B|)`` per pair. The per-pair array intersect
-    runs on Spark's interpreted expression path, but over only the
-    candidate pairs — O(candidates), not O(corpus).
-    """
-    cand_docs = (
-        cands.select(F.col("i").alias("doc_id"))
-        .union(cands.select(F.col("j").alias("doc_id")))
-        .distinct()
-    )
-    sets = (
-        posts.join(F.broadcast(cand_docs), "doc_id", "left_semi")
-        .groupBy("doc_id")
-        .agg(F.collect_list("shingle").alias("sh"))
-    )
-    paired = cands.join(
-        sets.select(F.col("doc_id").alias("i"), F.col("sh").alias("sh_i")), "i"
-    ).join(sets.select(F.col("doc_id").alias("j"), F.col("sh").alias("sh_j")), "j")
-    common = F.size(F.array_intersect("sh_i", "sh_j"))
-    jac = common / (F.size("sh_i") + F.size("sh_j") - common)
-    return paired.select("i", "j", jac.alias("jaccard"))
 
 
 def minhash_near_dups(
@@ -475,7 +403,6 @@ def minhash_near_dups(
     id_col: str = "doc_id",
     text_col: str = "text",
     scope: CacheScope | None = None,
-    gate_sets: bool = False,
 ) -> DataFrame:
     """LSH candidates verified by exact Jaccard ≥ threshold.
 
@@ -499,24 +426,12 @@ def minhash_near_dups(
     pathological threshold ever made them huge, Catalyst falls back to
     shuffle joins; the plan stays correct).
 
-    ``gate_sets`` chooses where the non-codegen ``collect_set`` needed
-    for exact-Jaccard verification runs (round-6 honesty fix — earlier
-    docstrings claimed the gated shape while running the corpus-wide
-    one):
-
-    * ``False`` (default): the set aggregate runs CORPUS-WIDE from the
-      posting-list cache, concurrently with the band join — no barrier,
-      and at bench scale (≲10⁵ docs) the overlap wins by ~0.7 s over
-      gating (measured sf0.1: 1.9 s vs 2.6 s).
-    * ``True``: the set aggregate is gated to CANDIDATE documents by a
-      left-semi join on the candidate ids (the shape of
-      ``verify_pairs_exact_jaccard``) — its cost scales with the
-      candidate set, not the corpus. This is the 100 TB switch: never
-      pay an ObjectHashAggregate over every document for sets only a
-      few thousand pairs will read. The barrier it introduces
-      (candidates must materialize before sets build) is noise at that
-      scale. Both paths return identical pairs
-      (``test_minhash_gate_sets_parity``).
+    The non-codegen ``collect_set`` needed for exact-Jaccard
+    verification runs CORPUS-WIDE from the posting-list cache,
+    concurrently with the band join — no barrier. Gating it to
+    candidate documents measured ~0.7 s slower at sf0.1 (2.6 s vs
+    1.9 s; PERF_NOTES §r6): the gate bounds work but serializes the
+    critical path until the corpus is far past bench scale.
     """
     scope, own = scope_or_own(scope)
     # one corpus pass builds the hashed posting list; the lanes
@@ -524,37 +439,11 @@ def minhash_near_dups(
     posts = scope.persist(
         shingle_hash_table(docs, n, id_col, text_col, distinct=False)
     )
-    if gate_sets:
-        profiles = scope.persist(minhash_lanes_from_hashed_posts(posts, num_hashes))
-        cands = scope.persist(
-            lsh_candidate_pairs(
-                profiles.select("doc_id", "signature"),
-                bands,
-                rows_per_band,
-                scope=scope,
-                persist_banded=False,
-            )
-        )
-        cand_docs = (
-            cands.select(F.col("i").alias("doc_id"))
-            .union(cands.select(F.col("j").alias("doc_id")))
-            .distinct()
-        )
-        sets = (
-            posts.join(F.broadcast(cand_docs), "doc_id", "left_semi")
-            .groupBy("doc_id")
-            .agg(F.collect_set("sh").alias("shset"))
-        )
-    else:
-        profiles = scope.persist(split_profiles_from_hashed_posts(posts, num_hashes))
-        cands = lsh_candidate_pairs(
-            profiles.select("doc_id", "signature"),
-            bands,
-            rows_per_band,
-            scope=scope,
-            persist_banded=False,
-        )
-        sets = profiles.select("doc_id", "shset")
+    profiles = scope.persist(split_profiles_from_hashed_posts(posts, num_hashes))
+    cands = lsh_candidate_pairs(
+        profiles.select("doc_id", "signature"), bands, rows_per_band
+    )
+    sets = profiles.select("doc_id", "shset")
     out = verify_candidates_from_sets(sets, cands, threshold)
     return scope.attach(out) if own else out
 
@@ -758,10 +647,14 @@ def simhash_subset_masks(
     return masks
 
 
+#: random-collision candidates per document that
+#: :func:`simhash_blocks_for` sizes the 32-bit block count to
+SIMHASH_TARGET_PER_DOC = 16
+
+
 def simhash_blocks_for(
     n: int,
     max_hamming: int = 3,
-    target_per_doc: int = 16,
     bits: int = 32,
     max_blocks: int = 8,
 ) -> int:
@@ -777,11 +670,11 @@ def simhash_blocks_for(
     sf1). With B blocks keyed on (B−d)-subsets, key width grows to
     ~bits·(B−d)/B while the table count grows C(B, d) — expected random
     candidates ≈ C(B,d)·N²/2^width. This picks the smallest B in
-    ``[d+1, max_blocks]`` holding that mass at ``target_per_doc``
-    candidates per document under the uniform model, i.e.
-    ``C(B,d)·N ≤ target·2^min_width(B)`` where ``min_width(B) =
-    (B−d)·(bits div B) + max(0, bits mod B − d)`` (the narrowest
-    subset). Ladder at d=3, target=16: B=4 to N≈1 k, 5 to ≈6.5 k,
+    ``[d+1, max_blocks]`` holding that mass at
+    ``SIMHASH_TARGET_PER_DOC`` (= target) candidates per document under
+    the uniform model, i.e. ``C(B,d)·N ≤ target·2^min_width(B)`` where
+    ``min_width(B) = (B−d)·(bits div B) + max(0, bits mod B − d)`` (the
+    narrowest subset). Ladder at d=3, target=16: B=4 to N≈1 k, 5 to ≈6.5 k,
     6 to ≈26 k, 7 to ≈60 k, 8 to ≈300 k; the ``max_blocks`` cap marks
     where a 32-bit fingerprint runs out of key entropy — corpora beyond
     it belong on the 64-bit family (:func:`simhash64_near_dups`)."""
@@ -792,7 +685,7 @@ def simhash_blocks_for(
         min_width = (n_blocks - d) * (bits // n_blocks) + max(
             0, (bits % n_blocks) - d
         )
-        if comb(n_blocks, d) * int(n) <= int(target_per_doc) * (1 << min_width):
+        if comb(n_blocks, d) * int(n) <= SIMHASH_TARGET_PER_DOC * (1 << min_width):
             return n_blocks
     return max_blocks
 
@@ -803,7 +696,6 @@ def simhash_near_dups_auto(
     id_col: str = "doc_id",
     text_col: str = "text",
     n_blocks: int | None = None,
-    target_per_doc: int = 16,
     scope: CacheScope | None = None,
 ) -> DataFrame:
     """:func:`simhash_near_dups` with the pigeonhole block count sized
@@ -824,11 +716,11 @@ def simhash_near_dups_auto(
 
     Cost model: C(B,d) narrow (doc_id, band, key) rows per document
     (≤ 56 at the B=8 cap) against random collision mass held at
-    ``target_per_doc`` per document — linear candidates at every N the
-    32-bit fingerprint can serve, vs the fixed family's Θ(N²/256)."""
+    ``SIMHASH_TARGET_PER_DOC`` per document — linear candidates at every
+    N the 32-bit fingerprint can serve, vs the fixed family's Θ(N²/256)."""
     if n_blocks is None:
         n = docs.count()
-        n_blocks = simhash_blocks_for(n, max_hamming, target_per_doc)
+        n_blocks = simhash_blocks_for(n, max_hamming)
     masks = simhash_subset_masks(n_blocks, max_hamming)
     hashes = simhash_table(docs, id_col, text_col)
     banded = hashes.select(

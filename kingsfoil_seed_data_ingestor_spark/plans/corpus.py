@@ -47,6 +47,7 @@ from kingsfoil_seed_data_ingestor_spark.plans.llm import (
     PACK_BUDGET,
     SQL_NORMALIZED,
     SQL_TOKENS,
+    sql_closure,
     sql_cosine,
     sql_dot,
     sql_hits,
@@ -843,30 +844,18 @@ def corpus_mix_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _sql_sem_exact_referee(cap: int) -> str:
     from kingsfoil_seed_data_ingestor_spark.plans.llm import _sql_referee_src
 
-    return f"""
-    WITH RECURSIVE src AS MATERIALIZED (
+    return sql_closure(
+        f"""
+    WITH src AS MATERIALIZED (
         SELECT * FROM {_sql_referee_src(cap)}
-    ),
-    pairs AS MATERIALIZED (
-        SELECT i.vec_id AS i, j.vec_id AS j
-        FROM src i JOIN src j ON i.vec_id < j.vec_id
-        WHERE {LLM_SQL_EMBED_COS} >= {LLM_EMBED_DUP_THRESHOLD}
-    ),
-    edges AS MATERIALIZED (
-        SELECT i AS src, j AS dst FROM pairs
-        UNION ALL
-        SELECT j AS src, i AS dst FROM pairs
-    ),
-    nodes AS (SELECT DISTINCT src AS node FROM edges),
-    reach AS (
-        SELECT node, node AS lbl FROM nodes
-        UNION
-        SELECT e.dst AS node, r.lbl AS lbl
-        FROM reach r JOIN edges e ON e.src = r.node
     )
-    SELECT node AS vec_id, MIN(lbl) AS cluster_id
-    FROM reach GROUP BY node
-    """
+    SELECT i.vec_id AS i, j.vec_id AS j
+    FROM src i JOIN src j ON i.vec_id < j.vec_id
+    WHERE {LLM_SQL_EMBED_COS} >= {LLM_EMBED_DUP_THRESHOLD}
+    """,
+        "vec_id",
+        "cluster_id",
+    )
 
 
 def _sem_exact_referee(spark: SparkSession, sf_dir: str, cap: int) -> DataFrame:
@@ -1015,8 +1004,9 @@ def semantic_augmented(
 def _sql_sem_blocked_referee(cap: int) -> str:
     from kingsfoil_seed_data_ingestor_spark.plans.llm import _sql_referee_src
 
-    return f"""
-    WITH RECURSIVE src AS MATERIALIZED (
+    return sql_closure(
+        f"""
+    WITH src AS MATERIALIZED (
         SELECT * FROM {_sql_referee_src(cap)}
     ),
     aug AS MATERIALIZED (
@@ -1030,29 +1020,16 @@ def _sql_sem_blocked_referee(cap: int) -> str:
         SELECT vec_id, embedding,
                {", ".join(f"{_sql_sem_bucket(b)} AS b{b}" for b in range(SEM_BANDS))}
         FROM aug
-    ),
-    pairs AS MATERIALIZED (
-        SELECT a.vec_id AS i, b.vec_id AS j
-        FROM bits a JOIN bits b
-          ON a.vec_id < b.vec_id
-         AND ({" OR ".join(f"a.b{b} = b.b{b}" for b in range(SEM_BANDS))})
-        WHERE {sql_cosine('a.embedding', 'b.embedding')} >= {SEM_THRESHOLD}
-    ),
-    edges AS MATERIALIZED (
-        SELECT i AS src, j AS dst FROM pairs
-        UNION ALL
-        SELECT j AS src, i AS dst FROM pairs
-    ),
-    nodes AS (SELECT DISTINCT src AS node FROM edges),
-    reach AS (
-        SELECT node, node AS lbl FROM nodes
-        UNION
-        SELECT e.dst AS node, r.lbl AS lbl
-        FROM reach r JOIN edges e ON e.src = r.node
     )
-    SELECT node AS vec_id, MIN(lbl) AS cluster_id
-    FROM reach GROUP BY node
-    """
+    SELECT a.vec_id AS i, b.vec_id AS j
+    FROM bits a JOIN bits b
+      ON a.vec_id < b.vec_id
+     AND ({" OR ".join(f"a.b{b} = b.b{b}" for b in range(SEM_BANDS))})
+    WHERE {sql_cosine('a.embedding', 'b.embedding')} >= {SEM_THRESHOLD}
+    """,
+        "vec_id",
+        "cluster_id",
+    )
 
 
 def _sem_blocked_referee(spark: SparkSession, sf_dir: str, cap: int) -> DataFrame:
@@ -1189,8 +1166,9 @@ def _sql_sem_auto_bucket(b: int) -> str:
     "dedup_semantic_clusters_auto",
     priority=45,  # in-window: the VERDICT r8 top ask — the scale-safe
     # N-aware family IS the driver-oracle-gated one
-    oracle=f"""
-    WITH RECURSIVE aug AS MATERIALIZED (
+    oracle=sql_closure(
+        f"""
+    WITH aug AS MATERIALIZED (
         SELECT vec_id, {_SQL_SEM_BASE} AS embedding FROM embeddings
         UNION ALL
         SELECT vec_id + {SEM_TWIN_A}, {_SQL_SEM_TWIN_A} FROM embeddings
@@ -1207,29 +1185,16 @@ def _sql_sem_auto_bucket(b: int) -> str:
         SELECT vec_id, embedding,
                {", ".join(f"{_sql_sem_auto_bucket(b)} AS b{b}" for b in range(SEM_AUTO_BANDS))}
         FROM aug
-    ),
-    pairs AS MATERIALIZED (
-        SELECT a.vec_id AS i, b.vec_id AS j
-        FROM bits a JOIN bits b
-          ON a.vec_id < b.vec_id
-         AND ({" OR ".join(f"a.b{b} = b.b{b}" for b in range(SEM_AUTO_BANDS))})
-        WHERE {sql_cosine('a.embedding', 'b.embedding')} >= {SEM_THRESHOLD}
-    ),
-    edges AS MATERIALIZED (
-        SELECT i AS src, j AS dst FROM pairs
-        UNION ALL
-        SELECT j AS src, i AS dst FROM pairs
-    ),
-    nodes AS (SELECT DISTINCT src AS node FROM edges),
-    reach AS (
-        SELECT node, node AS lbl FROM nodes
-        UNION
-        SELECT e.dst AS node, r.lbl AS lbl
-        FROM reach r JOIN edges e ON e.src = r.node
     )
-    SELECT node AS vec_id, MIN(lbl) AS cluster_id
-    FROM reach GROUP BY node
+    SELECT a.vec_id AS i, b.vec_id AS j
+    FROM bits a JOIN bits b
+      ON a.vec_id < b.vec_id
+     AND ({" OR ".join(f"a.b{b} = b.b{b}" for b in range(SEM_AUTO_BANDS))})
+    WHERE {sql_cosine('a.embedding', 'b.embedding')} >= {SEM_THRESHOLD}
     """,
+        "vec_id",
+        "cluster_id",
+    ),
     doc="N-AWARE sub-quadratic semantic duplicate clustering — the "
     "registered 100 TB family (VERDICT r8 #1). Identical planted-twin "
     "augmentation, exact-cosine rescore, and min-label closure as "

@@ -122,6 +122,42 @@ _JACCARD_PAIRS_CTE = f"""
     )
 """
 
+#: word-3-gram Jaccard ≥ 0.5 edges, the pair set the text components
+#: queries close
+_SQL_JACCARD_EDGES = f"""
+    WITH {_JACCARD_PAIRS_CTE}
+    SELECT i, j FROM p WHERE common::DOUBLE / (ni + nj - common) >= 0.5
+"""
+
+
+def sql_closure(pairs_sql: str, id_col: str, label_col: str) -> str:
+    """DuckDB oracle for connected components over a pair set: one
+    ``(id_col, label_col)`` row per node of an edge, labelled with the
+    smallest id in its component (what ``operators.components``
+    computes), via a recursive reachability CTE.
+
+    ``pairs_sql`` is a query returning undirected edges as ``(i, j)``.
+    It is MATERIALIZED: otherwise DuckDB inlines it (usually an O(n²)
+    brute-force pair query) into every reference AND every recursive
+    iteration of ``reach``, multiplying the n² work per iteration."""
+    return f"""
+    WITH RECURSIVE pairs AS MATERIALIZED ({pairs_sql}),
+    edges AS MATERIALIZED (
+        SELECT i AS src, j AS dst FROM pairs
+        UNION ALL
+        SELECT j AS src, i AS dst FROM pairs
+    ),
+    nodes AS (SELECT DISTINCT src AS node FROM edges),
+    reach AS (
+        SELECT node, node AS lbl FROM nodes
+        UNION
+        SELECT e.dst AS node, r.lbl AS lbl
+        FROM reach r JOIN edges e ON e.src = r.node
+    )
+    SELECT node AS {id_col}, MIN(lbl) AS {label_col}
+    FROM reach GROUP BY node
+    """
+
 
 # ----------------------------------------------------------------------
 # text analysis
@@ -1248,29 +1284,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_components",
-    oracle=f"""
-    WITH RECURSIVE {_JACCARD_PAIRS_CTE},
-    -- MATERIALIZED: without it DuckDB inlines pairs -> p (the O(n²)
-    -- brute-force CTE) into every reference AND every recursive
-    -- iteration of reach, multiplying the n² work per iteration
-    pairs AS MATERIALIZED (
-        SELECT i, j FROM p WHERE common::DOUBLE / (ni + nj - common) >= 0.5
-    ),
-    edges AS MATERIALIZED (
-        SELECT i AS src, j AS dst FROM pairs
-        UNION ALL
-        SELECT j AS src, i AS dst FROM pairs
-    ),
-    nodes AS (SELECT DISTINCT src AS node FROM edges),
-    reach AS (
-        SELECT node, node AS lbl FROM nodes
-        UNION
-        SELECT e.dst AS node, r.lbl AS lbl
-        FROM reach r JOIN edges e ON e.src = r.node
-    )
-    SELECT node AS doc_id, MIN(lbl) AS component_id
-    FROM reach GROUP BY node
-    """,
+    oracle=sql_closure(_SQL_JACCARD_EDGES, "doc_id", "component_id"),
     doc="Duplicate-CLUSTER formation: similarity is not transitive, so "
     "near-dup pairs (word-3-gram Jaccard ≥ 0.5) are closed into "
     "connected components by distributed min-label propagation "
@@ -1360,11 +1374,21 @@ def _components_chain(
 #: simhash_subset_masks), so both plans define the same answer and the
 #: oracle needs no banding parameter at all.
 _SQL_SIMHASH_PAIRS = f"""
-    WITH sh AS ({SQL_SIMHASH_TABLE})
+    WITH sh AS MATERIALIZED ({SQL_SIMHASH_TABLE})
     SELECT a.doc_id AS i, b.doc_id AS j,
            CAST(bit_count(xor(a.simhash, b.simhash)) AS INT) AS hamming
     FROM sh a JOIN sh b ON a.doc_id < b.doc_id
     WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
+    """
+
+#: the same brute-force definition over the 64-bit two-digest
+#: fingerprint
+_SQL_SIMHASH64_PAIRS = f"""
+    WITH sh AS MATERIALIZED ({SQL_SIMHASH64_TABLE})
+    SELECT a.doc_id AS i, b.doc_id AS j,
+           CAST(bit_count(xor(a.simhash64, b.simhash64)) AS INT) AS hamming
+    FROM sh a JOIN sh b ON a.doc_id < b.doc_id
+    WHERE bit_count(xor(a.simhash64, b.simhash64)) <= 3
     """
 
 
@@ -1403,28 +1427,9 @@ def dedup_simhash_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_simhash_groups",
     priority=55,  # same-family variant: dedup_simhash_auto is the pairs rep
-    oracle=f"""
-    WITH RECURSIVE sh AS MATERIALIZED ({SQL_SIMHASH_TABLE}),
-    pairs AS MATERIALIZED (
-        SELECT a.doc_id AS i, b.doc_id AS j
-        FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
+    oracle=sql_closure(
+        f"SELECT i, j FROM ({_SQL_SIMHASH_PAIRS})", "doc_id", "group_id"
     ),
-    edges AS MATERIALIZED (
-        SELECT i AS src, j AS dst FROM pairs
-        UNION ALL
-        SELECT j AS src, i AS dst FROM pairs
-    ),
-    nodes AS (SELECT DISTINCT src AS node FROM edges),
-    reach AS (
-        SELECT node, node AS lbl FROM nodes
-        UNION
-        SELECT e.dst AS node, r.lbl AS lbl
-        FROM reach r JOIN edges e ON e.src = r.node
-    )
-    SELECT node AS doc_id, MIN(lbl) AS group_id
-    FROM reach GROUP BY node
-    """,
     doc="SimHash near-dup GROUPS — the linear-output form a large-scale "
     "pipeline consumes: hamming ≤ 3 pairs from the N-aware multi-block "
     "banding (dedup_simhash_auto's candidate stage) closed into "
@@ -1476,13 +1481,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_simhash64",
     priority=55,  # overflow: 64-bit variant (dedup_simhash_auto is the in-window rep)
-    oracle=f"""
-    WITH sh AS ({SQL_SIMHASH64_TABLE})
-    SELECT a.doc_id AS i, b.doc_id AS j,
-           CAST(bit_count(xor(a.simhash64, b.simhash64)) AS INT) AS hamming
-    FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-    WHERE bit_count(xor(a.simhash64, b.simhash64)) <= 3
-    """,
+    oracle=_SQL_SIMHASH64_PAIRS,
     doc="64-bit SimHash near-dup pairs at hamming ≤ 3: 16-bit pigeonhole "
     "bands (65 536 buckets/band vs the 32-bit variant's 256) keep the "
     "candidate join fine-grained at billion-document scale. Oracle is "
@@ -1501,28 +1500,9 @@ def dedup_simhash64(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_simhash64_groups",
     priority=55,  # same-family variant: pairs reps carry the window slots
-    oracle=f"""
-    WITH RECURSIVE sh AS MATERIALIZED ({SQL_SIMHASH64_TABLE}),
-    pairs AS MATERIALIZED (
-        SELECT a.doc_id AS i, b.doc_id AS j
-        FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        WHERE bit_count(xor(a.simhash64, b.simhash64)) <= 3
+    oracle=sql_closure(
+        f"SELECT i, j FROM ({_SQL_SIMHASH64_PAIRS})", "doc_id", "group_id"
     ),
-    edges AS MATERIALIZED (
-        SELECT i AS src, j AS dst FROM pairs
-        UNION ALL
-        SELECT j AS src, i AS dst FROM pairs
-    ),
-    nodes AS (SELECT DISTINCT src AS node FROM edges),
-    reach AS (
-        SELECT node, node AS lbl FROM nodes
-        UNION
-        SELECT e.dst AS node, r.lbl AS lbl
-        FROM reach r JOIN edges e ON e.src = r.node
-    )
-    SELECT node AS doc_id, MIN(lbl) AS group_id
-    FROM reach GROUP BY node
-    """,
     doc="64-bit SimHash near-dup GROUPS — the production pairing at "
     "corpus scale: the wide fingerprint's 16-bit pigeonhole bands keep "
     "candidate generation fine-grained at billion-document corpora "
@@ -1557,13 +1537,12 @@ def dedup_simhash64_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: precedent applied to pigeonhole banding)
 SIMHASH64_BUCKET_CAP = 3
 
-
-@register(
-    "dedup_simhash64_capped",
-    priority=55,  # overflow: same family as dedup_simhash64
-    oracle=f"""
-    WITH sh AS ({SQL_SIMHASH64_TABLE}),
-    banded AS (
+#: the capped pigeonhole banding brute-force: band buckets holding more
+#: than the cap drop out of candidate generation, and a pair survives
+#: through any cold band it agrees on
+_SQL_SIMHASH64_CAPPED_PAIRS = f"""
+    WITH sh AS MATERIALIZED ({SQL_SIMHASH64_TABLE}),
+    banded AS MATERIALIZED (
         SELECT doc_id, simhash64, b.band,
                (simhash64 >> (b.band * 16)) & 65535 AS bucket
         FROM sh, (VALUES (0), (1), (2), (3)) AS b(band)
@@ -1581,7 +1560,13 @@ SIMHASH64_BUCKET_CAP = 3
     )
     SELECT i, j, CAST(bit_count(xor(hi, hj)) AS INT) AS hamming
     FROM cand WHERE bit_count(xor(hi, hj)) <= 3
-    """,
+    """
+
+
+@register(
+    "dedup_simhash64_capped",
+    priority=55,  # overflow: same family as dedup_simhash64
+    oracle=_SQL_SIMHASH64_CAPPED_PAIRS,
     doc="The round-8 hot-bucket guard under the oracle gate: 64-bit "
     "SimHash pigeonhole banding with band buckets larger than "
     f"{SIMHASH64_BUCKET_CAP} fingerprints dropped from candidate "
@@ -1611,39 +1596,9 @@ def dedup_simhash64_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_simhash64_groups_capped",
     priority=55,  # same-family variant: the uncapped groups query is the rep
-    oracle=f"""
-    WITH RECURSIVE sh AS MATERIALIZED ({SQL_SIMHASH64_TABLE}),
-    banded AS MATERIALIZED (
-        SELECT doc_id, simhash64, b.band,
-               (simhash64 >> (b.band * 16)) & 65535 AS bucket
-        FROM sh, (VALUES (0), (1), (2), (3)) AS b(band)
+    oracle=sql_closure(
+        f"SELECT i, j FROM ({_SQL_SIMHASH64_CAPPED_PAIRS})", "doc_id", "group_id"
     ),
-    ok AS (
-        SELECT band, bucket FROM banded
-        GROUP BY band, bucket HAVING count(*) <= {SIMHASH64_BUCKET_CAP}
-    ),
-    kept AS (SELECT banded.* FROM banded JOIN ok USING (band, bucket)),
-    pairs AS MATERIALIZED (
-        SELECT DISTINCT a.doc_id AS i, b.doc_id AS j
-        FROM kept a JOIN kept b
-          ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id
-        WHERE bit_count(xor(a.simhash64, b.simhash64)) <= 3
-    ),
-    edges AS MATERIALIZED (
-        SELECT i AS src, j AS dst FROM pairs
-        UNION ALL
-        SELECT j AS src, i AS dst FROM pairs
-    ),
-    nodes AS (SELECT DISTINCT src AS node FROM edges),
-    reach AS (
-        SELECT node, node AS lbl FROM nodes
-        UNION
-        SELECT e.dst AS node, r.lbl AS lbl
-        FROM reach r JOIN edges e ON e.src = r.node
-    )
-    SELECT node AS doc_id, MIN(lbl) AS group_id
-    FROM reach GROUP BY node
-    """,
     doc="The skew-guarded group map (optimization round 12, VERDICT r11 "
     "'What's wrong' #5): dedup_simhash64_groups' pair mass is "
     "Θ(cluster²) INTERNALLY on template-heavy corpora — correct but "
@@ -2437,29 +2392,7 @@ def dedup_embed_cosine_rhp_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dedup_fuzzy_apply",
     priority=60,  # tail band: union-find property test + spec test gate it
     oracle=f"""
-    WITH RECURSIVE {_JACCARD_PAIRS_CTE},
-    -- MATERIALIZED: without it DuckDB inlines pairs -> p (the O(n²)
-    -- brute-force CTE) into every reference AND every recursive
-    -- iteration of reach, multiplying the n² work per iteration
-    pairs AS MATERIALIZED (
-        SELECT i, j FROM p WHERE common::DOUBLE / (ni + nj - common) >= 0.5
-    ),
-    edges AS MATERIALIZED (
-        SELECT i AS src, j AS dst FROM pairs
-        UNION ALL
-        SELECT j AS src, i AS dst FROM pairs
-    ),
-    nodes AS (SELECT DISTINCT src AS node FROM edges),
-    reach AS (
-        SELECT node, node AS lbl FROM nodes
-        UNION
-        SELECT e.dst AS node, r.lbl AS lbl
-        FROM reach r JOIN edges e ON e.src = r.node
-    ),
-    comp AS (
-        SELECT node AS doc_id, MIN(lbl) AS component_id
-        FROM reach GROUP BY node
-    )
+    WITH comp AS ({sql_closure(_SQL_JACCARD_EDGES, "doc_id", "component_id")})
     SELECT d.source,
            COUNT(*) AS n_docs,
            CAST(COUNT(*) FILTER (

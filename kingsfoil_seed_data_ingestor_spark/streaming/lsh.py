@@ -720,6 +720,7 @@ class StreamingLSHIndex:
         from concurrent.futures import ThreadPoolExecutor
 
         from pyspark.sql import Observation
+        from pyspark.util import inheritable_thread_target
 
         posts_new = shingle_hash_table(
             docs_new, self.n, distinct=False
@@ -747,7 +748,21 @@ class StreamingLSHIndex:
         # one thread computes a block and the others read it. Crash
         # semantics are unchanged — a batch with SOME sinks written was
         # already possible sequentially; the replay overwrites every
-        # sink before progress is recorded.
+        # sink before progress is recorded. Each sink is wrapped with
+        # ``inheritable_thread_target`` so its jobs carry this thread's
+        # local properties — the stream's job group among them, which
+        # ``StreamingQuery.stop()`` cancels by. One wrap per sink: each
+        # wrap takes its own copy, and concurrent sinks write their SQL
+        # execution ids into it.
+        def _pool_run(*sinks) -> None:
+            with ThreadPoolExecutor(max_workers=len(sinks)) as pool:
+                futs = [
+                    pool.submit(inheritable_thread_target(spark)(w))
+                    for w in sinks
+                ]
+                for fut in futs:
+                    fut.result()
+
         obs = Observation()
         obs_banded = Observation()
 
@@ -768,9 +783,7 @@ class StreamingLSHIndex:
                 os.path.join(self._sub("posts"), f"batch_id={batch_id}")
             )
 
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            for fut in [pool.submit(w) for w in (_w_ids, _w_banded, _w_posts)]:
-                fut.result()
+        _pool_run(_w_ids, _w_banded, _w_posts)
         if fingerprint is None:
             fingerprint = [int(obs.get["n"]), int(obs.get["x"])]
 
@@ -892,9 +905,7 @@ class StreamingLSHIndex:
                 os.path.join(self._sub("novel"), f"batch_id={batch_id}")
             )
 
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            for fut in [pool.submit(w) for w in (_w_pairs, _w_novel)]:
-                fut.result()
+        _pool_run(_w_pairs, _w_novel)
         verified.unpersist()
         cand_docs.unpersist()
         posts_new.unpersist()

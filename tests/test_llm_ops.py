@@ -1573,21 +1573,6 @@ def test_referee_cap_bites_identically(spark):
     assert all(i <= cutoff for i in ids), (ids, cutoff)
 
 
-def test_minhash_gate_sets_parity(spark):
-    """The candidate-gated set aggregate (the 100 TB switch) returns
-    the exact pair set of the corpus-wide default, on real testdata."""
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    a = {
-        (r.i, r.j, r.jaccard)
-        for r in DD.minhash_near_dups(docs, threshold=0.8).collect()
-    }
-    b = {
-        (r.i, r.j, r.jaccard)
-        for r in DD.minhash_near_dups(docs, threshold=0.8, gate_sets=True).collect()
-    }
-    assert a == b and len(a) > 0
-
-
 # ----------------------------------------------------------------------
 # frozen-codebook IVF (round 6)
 # ----------------------------------------------------------------------

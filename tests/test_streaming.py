@@ -1306,6 +1306,38 @@ def test_streaming_lsh_lifecycle_guards(spark, tmp_path):
     assert {r.doc_id for r in index.novel_ids(spark).collect()} == novel_before
 
 
+def test_streaming_lsh_sink_jobs_keep_stream_job_group(spark, tmp_path):
+    """Every job a ``stream_lsh_dedup`` micro-batch submits — the
+    per-batch sinks written from a driver thread pool included — runs
+    under the stream's job group (its run id), which is what
+    ``StreamingQuery.stop()`` cancels. The status tracker lists jobs
+    without a group under ``None``; none may appear during the run."""
+    from kingsfoil_seed_data_ingestor_spark.streaming.lsh import (
+        StreamingLSHIndex,
+        stream_lsh_dedup,
+    )
+
+    docs = load(spark, SF_DIR, "documents").select("doc_id", "text")
+    src = tmp_path / "feed"
+    src.mkdir()
+    docs.write.parquet(str(src / "d0.parquet"))
+    stream = (
+        spark.readStream.schema(docs.schema)
+        .option("recursiveFileLookup", "true")
+        .parquet(str(src))
+    )
+    index = StreamingLSHIndex(str(tmp_path / "store"), threshold=0.8)
+    tracker = spark.sparkContext.statusTracker()
+    ungrouped_before = set(tracker.getJobIdsForGroup())
+    q = stream_lsh_dedup(stream, index, str(tmp_path / "ckpt"))
+    assert q.awaitTermination(300)
+
+    stray = set(tracker.getJobIdsForGroup()) - ungrouped_before
+    assert not stray, f"{len(stray)} stream jobs ran outside the job group"
+    assert tracker.getJobIdsForGroup(str(q.runId))
+    assert index.near_dup_pairs(spark).count() > 0
+
+
 # ----------------------------------------------------------------------
 # round 10: LSM store for the LSH index — compaction + probe pruning
 # ----------------------------------------------------------------------

@@ -1,12 +1,14 @@
-"""Count Spark jobs per registered query — the fused-round witness.
+"""Count Spark jobs per registered query.
 
 Usage: python tools/count_jobs.py [--sf DIR] query1 query2 ...
 
 Drains each query once to warm (codegen/caches), then drains again and
-reports the number of Spark jobs the second drain submitted (via the
-status tracker's cumulative job-id list). Job count is the durable
-signal for per-round fixed cost in iterative operators: at 100 TB every
-job is a full scheduling barrier.
+reports the number of Spark jobs the second drain submitted: the job
+ids the status tracker lists after the drain that it did not list
+before. Diffing id sets (not list lengths) stays exact once
+``spark.ui.retainedJobs`` starts evicting old jobs. Job count is the
+durable signal for per-round fixed cost in iterative operators: at
+100 TB every job is a full scheduling barrier.
 """
 
 from __future__ import annotations
@@ -41,13 +43,13 @@ def main() -> int:
     for n in names:
         drain(QUERIES[n].spark(spark, args.sf))  # warm pass
         spark.catalog.clearCache()
-        before = len(tracker.getJobIdsForGroup())
+        before = set(tracker.getJobIdsForGroup())
         t0 = time.perf_counter()
         drain(QUERIES[n].spark(spark, args.sf))
         dt = time.perf_counter() - t0
-        after = len(tracker.getJobIdsForGroup())
+        new_jobs = set(tracker.getJobIdsForGroup()) - before
         spark.catalog.clearCache()
-        print(f"{n:36s} jobs={after - before:4d}  {dt:7.3f}s")
+        print(f"{n:36s} jobs={len(new_jobs):4d}  {dt:7.3f}s")
     return 0
 
 

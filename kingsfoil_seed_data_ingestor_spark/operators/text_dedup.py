@@ -211,19 +211,20 @@ def minhash_signatures(
     """k min-hash values per document from k seeded xxhash64 functions
     over the shingle set.
 
-    Shape: hashed shingle posting list → ``groupBy(doc).agg(min(
-    xxhash64(k, sh)) × k)``. All k hashes evaluate in one tight
-    codegen'd aggregate pass with map-side partial aggregation — only
-    k partial minima per document cross the shuffle. (The earlier
-    array formulation — k separate ``transform``+``array_min`` lambdas
-    — ran on Spark's interpreted expression path and measured ~5×
-    slower; a two-parameter lambda in ``F.transform`` also silently
-    binds its second argument to the array index, so a seed must never
-    be a lambda parameter.)
+    Shape: NON-distinct hashed posting list → ``groupBy(doc).agg(min(
+    xxhash64(k, sh)) × k)``. Minima are multiset-invariant, so the
+    posting-list ``distinct`` shuffle is skipped, and the rows leave
+    the shingle window already partitioned by ``doc_id``. All k hashes
+    evaluate in one tight codegen'd aggregate pass with map-side
+    partial aggregation — only k partial minima per document cross the
+    shuffle. (The earlier array formulation — k separate
+    ``transform``+``array_min`` lambdas — ran on Spark's interpreted
+    expression path and measured ~5× slower; a two-parameter lambda in
+    ``F.transform`` also silently binds its second argument to the
+    array index, so a seed must never be a lambda parameter.)
     """
-    return minhash_profiles(docs, num_hashes, n, id_col, text_col).select(
-        "doc_id", "signature"
-    )
+    posts = shingle_hash_table(docs, n, id_col, text_col, distinct=False)
+    return minhash_lanes_from_hashed_posts(posts, num_hashes)
 
 
 def minhash_lanes_from_hashed_posts(posts: DataFrame, num_hashes: int = 96) -> DataFrame:
@@ -269,37 +270,6 @@ def split_profiles_from_hashed_posts(
     sigs = minhash_lanes_from_hashed_posts(posts, num_hashes)
     shsets = posts.groupBy("doc_id").agg(F.collect_set("sh").alias("shset"))
     return sigs.join(shsets, "doc_id")
-
-
-def minhash_profiles(
-    docs: DataFrame,
-    num_hashes: int = 96,
-    n: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Per-document ``(doc_id, signature, shset)`` in ONE aggregation.
-
-    The k min-hash lanes and the exact shingle set (for candidate
-    verification) come out of the same ``groupBy(doc_id)`` over a
-    NON-distinct hashed posting list: minima are multiset-invariant and
-    ``collect_set`` dedups inside the aggregate, so the posting-list
-    ``distinct`` shuffle disappears — and because the posting rows
-    leave the shingle window already hash-partitioned by ``doc_id``,
-    this aggregate needs no exchange at all. One pass over the corpus
-    produces everything LSH banding and verification will read.
-
-    ``shset`` is bounded by the document's token count (longs, 8 B
-    each), not the corpus — per-row state stays small at any scale.
-    """
-    posts = shingle_hash_table(docs, n, id_col, text_col, distinct=False)
-    lanes = [
-        F.min(F.xxhash64(F.lit(k), F.col("sh"))).alias(f"_h{k}")
-        for k in range(num_hashes)
-    ]
-    prof = posts.groupBy("doc_id").agg(*lanes, F.collect_set("sh").alias("shset"))
-    signature = F.array(*[F.col(f"_h{k}") for k in range(num_hashes)])
-    return prof.select("doc_id", signature.alias("signature"), "shset")
 
 
 def lsh_band_expr(bands: int, rows_per_band: int) -> str:

@@ -76,7 +76,6 @@ def _new_snapshot(cust: DataFrame) -> DataFrame:
 
 @register(
     "snapshot_diff_cdc",
-    priority=50,  # CDC family rep
     oracle=f"""
     WITH newt AS ({_SQL_NEW_SNAPSHOT}),
     j AS (
@@ -129,7 +128,6 @@ def snapshot_diff_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "snapshot_merge_apply",
-    priority=55,  # family variant: the roundtrip law over the diff above
     oracle=_SQL_NEW_SNAPSHOT,
     doc="Changelog replay / MERGE (operators/diff.py:apply_changes): "
     "delete removed keys, upsert added+changed payloads onto the old "

@@ -1,9 +1,9 @@
 """Query registry plumbing.
 
-Every named query carries BOTH a Spark DataFrame builder and (when
-SQL-expressible) an ANSI-SQL oracle string for DuckDB. The driver
-harness runs both at sf=0.01 and hash-compares values, so the builders
-follow strict determinism rules:
+Every named query carries BOTH a Spark DataFrame builder and an
+ANSI-SQL oracle string for DuckDB. The driver harness runs both at
+sf=0.01 and hash-compares values, so the builders follow strict
+determinism rules:
 
 * column names are aliased identically on both sides;
 * floating-point **sums** are never compared raw — money-style columns
@@ -18,11 +18,10 @@ follow strict determinism rules:
 from __future__ import annotations
 
 import glob
-import json
 import os
 import re
 from dataclasses import dataclass
-from typing import Callable, Optional
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -32,50 +31,30 @@ class Query:
     name: str
     doc: str
     spark: Callable[[SparkSession, str], DataFrame]
-    oracle: Optional[str]  # None ⇒ non-SQL-expressible, rows-only check
-    priority: int = 50  # registration rank — see `register`
-    seq: int = 0  # insertion order, tie-break within a priority band
+    oracle: str
+    parity: bool = False  # reference-parity set, pinned in the driver window
 
 
 QUERIES: dict[str, Query] = {}
 
 
-def register(name: str, oracle: Optional[str], doc: str = "", priority: int = 50):
+def register(name: str, oracle: str, doc: str = "", parity: bool = False):
     """Decorator: add a (spark_fn, oracle_sql) pair to the registry.
 
-    ``priority`` orders the registry exposed to the verification driver,
-    which caps its oracle check at the FIRST 50 queries. Allocation
-    principle (round 7, VERDICT r6 #6): the window carries each
-    FAMILY's strongest representative; same-family variants overflow
-    and keep their own in-suite oracle gate (tests/test_oracle_parity
-    hash-checks EVERY registered query at sf0.001 regardless of band).
-
-    Bands:
-    * 10 — reference-parity queries (always in-window, registered first)
-    * 20 — streaming batch-twins (one per distinct window/join semantic)
-    * 45-48 — extension family flagships: hash-checked trained-ANN
-      search + its recall metric, blocked semantic clustering, RHP
-      embedding near-dup, HLL sketch, JPEG multimodal decode, TPC-H
-      complex-join shape, corpus assembly, quantile sketch
-    * 50 — remaining distinct extension families in insertion order
-      (text analysis, sampling, decontamination, core dedup family
-      reps); the tail of this band overflows the cap
-    * 55 — same-family variants deliberately pushed past the cap
-      (simhash64 vs simhash, rolling-hash vs fingerprint, funnel vs
-      quality-scores, unigram-logprob vs tfidf, apply/incremental vs
-      exact dedup, SQ8-frozen vs float-frozen ANN)
-    * 60-80 — compositions/referees whose hard gate is a pytest
-      property (fidelity bounds, golden tables) on top of the oracle
+    ``parity`` marks the reference-parity queries (SURVEY §2), which
+    ``ordered_queries`` keeps inside the driver's capped check every
+    round. Registering a name twice is an error.
     """
 
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
+        if name in QUERIES:
+            raise ValueError(f"query {name!r} is already registered")
         QUERIES[name] = Query(
             name=name,
             doc=doc or (fn.__doc__ or ""),
             spark=fn,
             oracle=oracle,
-            priority=priority,
-            seq=len(QUERIES),
+            parity=parity,
         )
         return fn
 
@@ -85,45 +64,22 @@ def register(name: str, oracle: Optional[str], doc: str = "", priority: int = 50
 #: size of the driver's independent hash-check window (first N of
 #: ``ordered_queries()``)
 DRIVER_WINDOW = 50
-#: rotation policy, round 11 (VERDICT r10 #3, superseding the round-8
-#: 8-slot slide): only the reference-parity band stays pinned; every
-#: other registered query — streaming twins, extension flagships,
-#: band-50 reps, overflow variants, pytest-band referees — rotates
-#: through the window's remaining ``DRIVER_WINDOW − |pinned|`` slots
-#: (~31). The tail is filled NEVER-DRIVER-CHECKED queries first (the
-#: union of all ``CORRECTNESS_r*.json`` artifacts defines "checked", so
-#: each round's driver run feeds the next round's selection and the
-#: 45-query verification backlog burns down at ~31/round), then a
-#: round-sliding slice of the already-checked pool for freshness.
-#: Flagship bands 20–48 became rotation-eligible after ≥ 3 consecutive
-#: green in-window rounds each (r8–r10 artifacts: all full-pass —
-#: ``tests/test_registry_rotation.py`` re-verifies that precondition
-#: from the artifacts themselves).
 #: fallback only — the live value is derived by ``_detect_round`` so a
-#: forgotten manual bump can no longer freeze the window (VERDICT r8 #4)
+#: forgotten manual bump can no longer freeze the window
 _ROTATION_FALLBACK_ROUND = 11
-#: only this band is exempt from rotation (reference parity, SURVEY §2)
-PINNED_PRIORITY_MAX = 10
-#: rounds a flagship must have been green in-window before becoming
-#: rotation-eligible (met by all of bands 20–48 as of r11)
-FLAGSHIP_MIN_GREEN_ROUNDS = 3
-_ROTATION_BASE_ROUND = 8  # first round any rotation policy was active
 
 
 def _detect_round() -> int:
     """The build round currently in progress, without a manual source
-    edit each round (VERDICT r8 #4 — one forgotten bump silently
-    freezes the rotation and the driver re-checks the same window
-    forever). Resolution order:
+    edit each round (one forgotten bump would freeze the rotation and
+    the driver would re-check the same window forever). Resolution
+    order:
 
     1. ``SPARK_GRAFT_ROUND`` env (driver/operator override);
     2. newest ``CORRECTNESS_r{N}.json`` at the repo root — the driver
        writes round N's artifact AFTER round N, so the round being
        built is N+1;
     3. the pinned fallback (fresh checkout with no artifacts).
-
-    ``tests/test_registry_rotation.py`` asserts the fallback never lags
-    the artifacts, so path 3 can't silently regress either.
     """
     env = os.environ.get("SPARK_GRAFT_ROUND", "")
     if env.isdigit():
@@ -142,86 +98,15 @@ def _detect_round() -> int:
 ROTATION_ROUND = _detect_round()
 
 
-def _detect_checked() -> frozenset[str]:
-    """Query names the driver has independently hash-checked at least
-    once: the union of keys across every ``CORRECTNESS_r*.json`` at the
-    repo root. Like ``_detect_round`` this reads the driver's own
-    artifacts, so the selection can't drift from reality — the moment
-    round N's artifact lands, its window drops out of the burn-down
-    pool for round N+1."""
-    repo = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    names: set[str] = set()
-    for p in glob.glob(os.path.join(repo, "CORRECTNESS_r*.json")):
-        try:
-            with open(p) as fh:
-                names.update(json.load(fh).keys())
-        except (OSError, ValueError):
-            continue
-    return frozenset(names)
-
-
-CHECKED_NAMES = _detect_checked()
-
-
-def window_tail_names() -> list[str]:
-    """The rotation-eligible queries occupying the driver window's tail
-    this round (deterministic in ``ROTATION_ROUND`` + the artifact
-    set). Never-checked queries fill first — a wrap-around slice so the
-    start point still advances even if a round's artifact goes missing
-    — then a ``slots``-stride sliding slice of the checked pool keeps
-    previously-verified queries cycling back under the driver's
-    independent gate (full re-coverage every ⌈eligible/slots⌉ ≈ 4
-    rounds in the steady state)."""
-    base = sorted(QUERIES.values(), key=lambda q: (q.priority, q.seq))
-    eligible = [q for q in base if q.priority > PINNED_PRIORITY_MAX]
-    n_pinned = len(base) - len(eligible)
-    slots = DRIVER_WINDOW - n_pinned
-    if slots <= 0 or not eligible:
-        return []
-    unchecked = [q for q in eligible if q.name not in CHECKED_NAMES]
-    checked = [q for q in eligible if q.name in CHECKED_NAMES]
-    k = ROTATION_ROUND - _ROTATION_BASE_ROUND
-    tail: list[str] = []
-    if unchecked:
-        start = (k * slots) % len(unchecked)
-        take = min(slots, len(unchecked))
-        tail += [unchecked[(start + i) % len(unchecked)].name for i in range(take)]
-    rem = slots - len(tail)
-    if rem > 0 and checked:
-        start = (k * slots) % len(checked)
-        tail += [
-            checked[(start + i) % len(checked)].name
-            for i in range(min(rem, len(checked)))
-        ]
-    return tail
-
-
-def rotated_in_names() -> list[str]:
-    """Window members this round that the naive (priority, seq) first-
-    ``DRIVER_WINDOW`` ordering would NOT include — i.e. the queries the
-    rotation actively promoted past their registration rank."""
-    base = sorted(QUERIES.values(), key=lambda q: (q.priority, q.seq))
-    naive = {q.name for q in base[:DRIVER_WINDOW]}
-    pinned = [q.name for q in base if q.priority <= PINNED_PRIORITY_MAX]
-    window = set(pinned) | set(window_tail_names())
-    return [q.name for q in base if q.name in window and q.name not in naive]
-
-
 def ordered_queries() -> list[Query]:
-    """Registry ordered for the driver: the pinned reference-parity
-    band first (registration order), then this round's rotation tail
-    (stable order), then every remaining query in (priority, seq)
-    order. The first ``DRIVER_WINDOW`` entries are exactly
-    pinned + tail, so the driver's capped check covers SURVEY §2 parity
-    every round and the rotating verification slice on top."""
-    base = sorted(QUERIES.values(), key=lambda q: (q.priority, q.seq))
-    tail = set(window_tail_names())
-
-    def rank(q: Query) -> int:
-        if q.priority <= PINNED_PRIORITY_MAX:
-            return 0
-        return 1 if q.name in tail else 2
-
-    return sorted(base, key=lambda q: (rank(q), q.priority, q.seq))
+    """Registry ordered for the driver, which hash-checks only the
+    first ``DRIVER_WINDOW`` entries: the parity queries, then the other
+    queries in registration order, rotated so the window's remaining
+    slots take a slice that slides by its own width each
+    ``ROTATION_ROUND``. Every query cycles back under the driver's
+    check within ⌈others/slots⌉ rounds."""
+    parity = [q for q in QUERIES.values() if q.parity]
+    others = [q for q in QUERIES.values() if not q.parity]
+    slots = DRIVER_WINDOW - len(parity)
+    start = (ROTATION_ROUND * slots) % len(others) if others else 0
+    return parity + others[start:] + others[:start]

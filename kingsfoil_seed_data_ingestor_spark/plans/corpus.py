@@ -21,15 +21,12 @@ plus warehouse shapes that round out the §2 surface:
 - ``q3_shipping_priority`` / ``q18_large_orders`` — TPC-H Q3/Q18
   shapes (filtered-dim top-k; agg-before-join HAVING).
 
-All register in the overflow priority band (70): the driver's capped
-correctness window keeps its r4 composition, and these queries are
-hard-gated by the oracle-parity pytest (tests/test_oracle_parity.py)
-which runs every registered oracle cross-engine at sf0.001.
+Each is hard-gated by the oracle-parity pytest
+(tests/test_oracle_parity.py), which runs every registered oracle
+cross-engine at sf0.001.
 """
 
 from __future__ import annotations
-
-from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
@@ -38,7 +35,7 @@ from pyspark.sql import functions as F
 from kingsfoil_seed_data_ingestor_spark.functions import text as TX
 from kingsfoil_seed_data_ingestor_spark.operators import skew as SK
 from kingsfoil_seed_data_ingestor_spark.operators import text_dedup as DD
-from kingsfoil_seed_data_ingestor_spark.plans.core import register as _register
+from kingsfoil_seed_data_ingestor_spark.plans.core import register
 from kingsfoil_seed_data_ingestor_spark.plans.llm import (
     _SQL_EMBED_COS as LLM_SQL_EMBED_COS,
     _SQL_QUALITY,
@@ -55,8 +52,6 @@ from kingsfoil_seed_data_ingestor_spark.plans.llm import (
 from kingsfoil_seed_data_ingestor_spark.operators import similarity as SIM
 from kingsfoil_seed_data_ingestor_spark.plans.relational import DEC, exact_double
 from kingsfoil_seed_data_ingestor_spark.plans.tables import load
-
-register = partial(_register, priority=70)  # overflow band: oracle-parity pytest gates
 
 #: tokens per dedup span — see operators/text_dedup.SPAN (shared with
 #: the streaming twin in streaming/spans.py)
@@ -321,7 +316,6 @@ def events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "corpus_build_pipeline",
-    priority=48,  # in-window: the corpus-assembly family rep (end-to-end composition)
     oracle=f"""
     WITH t AS (
         SELECT doc_id, source, text, {SQL_TOKENS} AS toks,
@@ -1057,20 +1051,13 @@ def _sem_blocked_referee(spark: SparkSession, sf_dir: str, cap: int) -> DataFram
 
 @register(
     "dedup_semantic_clusters_blocked",
-    # round 9 demoted this from the driver window (45 → 55); round 10
-    # (VERDICT r9 #2) pushes it to the pytest-only band (55 → 72): the
-    # round-8 scaling curves (SCALING_r8.json) measured this FIXED
-    # 4-band×8-bit family's candidate mass at growth exponent 2.00 —
-    # correct at every oracle SF but a driver-window slot spent
-    # re-proving a known-quadratic family is a slot not spent on a
-    # production path. dedup_semantic_clusters_auto is the in-window
-    # successor: same augmentation/rescore/closure, band width derived
-    # from COUNT(*) identically in both engines. This variant stays
-    # registered as the fixed-band referee, hash-checked in-suite by
-    # test_oracle_parity; round 11 (VERDICT r10 #4) caps its input to
-    # the REFEREE_CAP_N lowest vec_ids in both engines so referee cost
-    # is O(1) in sf.
-    priority=72,
+    # the round-8 scaling curves (SCALING_r8.json) measured this FIXED
+    # 4-band×8-bit family's candidate mass at growth exponent 2.00.
+    # dedup_semantic_clusters_auto is the production successor: same
+    # augmentation/rescore/closure, band width derived from COUNT(*)
+    # identically in both engines. This variant stays registered as the
+    # fixed-band referee, with its input capped to the REFEREE_CAP_N
+    # lowest vec_ids in both engines so referee cost is O(1) in sf.
     oracle=_sql_sem_blocked_referee(LLM_REFEREE_CAP_N),
     doc="Sub-quadratic semantic duplicate clustering — the 100 TB "
     "composition: RHP-banded LSH candidates (32 deterministic ±1 "
@@ -1164,8 +1151,6 @@ def _sql_sem_auto_bucket(b: int) -> str:
 
 @register(
     "dedup_semantic_clusters_auto",
-    priority=45,  # in-window: the VERDICT r8 top ask — the scale-safe
-    # N-aware family IS the driver-oracle-gated one
     oracle=sql_closure(
         f"""
     WITH aug AS MATERIALIZED (
@@ -1522,7 +1507,6 @@ def q16_supplier_part_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q21_late_sole_shipper",
-    priority=48,  # in-window: the TPC-H complex-join family rep (multi-semi/anti-join shape)
     oracle="""
     WITH late AS (
         SELECT l_orderkey, l_suppkey
@@ -1980,7 +1964,6 @@ SESSION_GAP_US = 12 * 3600 * 1_000_000
 
 @register(
     "events_sessionize_gap",
-    priority=55,  # window-family variant: user_gaps/lateral_top1 rep the family
     oracle=f"""
     WITH l AS (
         SELECT user_id, event_id, ts, epoch_us(ts) AS us,
@@ -2058,7 +2041,6 @@ def events_sessionize_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "events_user_value_deciles",
-    priority=55,  # window-family variant (distribution functions)
     oracle="""
     WITH per AS (
         SELECT user_id,

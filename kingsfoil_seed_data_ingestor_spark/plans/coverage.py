@@ -19,8 +19,8 @@ from functools import partial
 
 from kingsfoil_seed_data_ingestor_spark.plans.core import register as _register
 
-# reference-parity band: always inside the driver's correctness window
-register = partial(_register, priority=10)
+# reference-parity set: always inside the driver's correctness window
+register = partial(_register, parity=True)
 from kingsfoil_seed_data_ingestor_spark.plans.tables import load
 
 DEC = "decimal(18,4)"

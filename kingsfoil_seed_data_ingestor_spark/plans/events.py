@@ -14,12 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from functools import partial
-
-from kingsfoil_seed_data_ingestor_spark.plans.core import register as _register
-
-# streaming-twin band: after reference parity, before extensions
-register = partial(_register, priority=20)
+from kingsfoil_seed_data_ingestor_spark.plans.core import register
 from kingsfoil_seed_data_ingestor_spark.plans.tables import load
 
 DEC = "decimal(18,4)"
@@ -234,9 +229,8 @@ HLL_RANK_MAX = 60 - 10 + 1
 HLL_SCALE = float(1 << HLL_RANK_MAX)
 
 
-@_register(
+@register(
     "events_distinct_users_hll",
-    priority=48,  # in-window: the mergeable-sketch family rep
     oracle=f"""
     WITH h AS (
         SELECT event_type,
@@ -349,9 +343,8 @@ KMV_K = 256
 KMV_NORM = float(1 << 60)
 
 
-@_register(
+@register(
     "events_audience_overlap_kmv",
-    priority=50,
     oracle=f"""
     WITH per AS (
         SELECT user_id,
@@ -475,9 +468,8 @@ CMS_W = 2048
 CMS_TOP = 15
 
 
-@_register(
+@register(
     "events_heavy_hitters_cms",
-    priority=55,  # sketch-family variant: HLL is the in-window rep
     oracle=f"""
     WITH j AS (SELECT d FROM (VALUES (0), (1), (2), (3)) t(d)),
     hashed AS (
@@ -616,9 +608,8 @@ BF_BPW = 62
 BF_K = 3
 
 
-@_register(
+@register(
     "events_bloom_prefilter",
-    priority=55,  # sketch-family variant: HLL is the in-window rep
     oracle=f"""
     WITH per AS (
         SELECT user_id,
@@ -787,9 +778,8 @@ _INC_DUR_US = 45 * 60 * 1_000_000
 _HOUR_US = 3_600 * 1_000_000
 
 
-@_register(
+@register(
     "events_incident_range_join",
-    priority=70,  # overflow: interval_join (equi+range) reps the family in-window
     oracle=f"""
     WITH inc AS (
         SELECT (1 + id // 3) * 10 + (id % 3) AS incident_id,
@@ -890,9 +880,8 @@ def events_incident_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 _DAY_US = 86_400 * 1_000_000
 
 
-@_register(
+@register(
     "events_grouping_sets",
-    priority=70,  # overflow: rollup/cube rep the grouping-sets family in-window
     oracle=f"""
     SELECT event_type,
            (epoch_us(ts) // {_DAY_US}) % 7 AS day_idx,
@@ -951,9 +940,8 @@ def events_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PIVOT_TYPES = ("click", "error", "purchase", "signup", "view")
 
 
-@_register(
+@register(
     "events_pivot_unpivot",
-    priority=70,  # overflow: q12's CASE-pivot reps the pivot family in-window
     oracle=f"""
     WITH days AS (
         SELECT DISTINCT epoch_us(ts) // {_DAY_US} AS day_idx FROM events

@@ -332,7 +332,6 @@ _SQL_ROLLING = f"""
 
 @register(
     "text_rolling_hash",
-    priority=55,  # overflow: fingerprint-family variant (text_fingerprint is the in-window rep)
     oracle=f"""
     SELECT doc_id, {_SQL_ROLLING} AS rh
     FROM documents WHERE doc_id < 50
@@ -364,7 +363,6 @@ _FUNNEL_FINAL = "predicted = 'en' AND score >= 0.5 AND n_tok BETWEEN 10 AND 1000
 
 @register(
     "text_quality_funnel",
-    priority=55,  # overflow: composition over text_quality_scores (the in-window rep)
     oracle=f"""
     WITH t AS (SELECT source, text, {SQL_TOKENS} AS toks FROM documents),
     m AS (
@@ -464,7 +462,6 @@ QSK_PROBS = (0.10, 0.50, 0.90, 0.99)
 
 @register(
     "text_length_quantile_sketch",
-    priority=48,  # in-window: the mergeable-quantile-sketch family rep
     oracle=f"""
     WITH d AS (SELECT doc_id, n_chars FROM documents),
     tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM d),
@@ -655,7 +652,6 @@ AES_K = 100
 
 @register(
     "corpus_sample_weighted",
-    priority=55,  # overflow: sample_stratified reps the sampling family
     oracle=f"""
     WITH h AS (
         SELECT doc_id, 1 + (n_chars % 5) AS weight,
@@ -811,7 +807,6 @@ INCR_REUPLOAD_IDS = (3, 7)
 
 @register(
     "dedup_incremental",
-    priority=55,  # overflow: incremental variant of exact-hash dedup (dedup_exact is the rep)
     oracle=f"""
     WITH base AS (
         SELECT doc_id, source, text FROM documents
@@ -1010,7 +1005,6 @@ def text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_unigram_logprob",
-    priority=55,  # overflow: corpus-statistics variant (text_tfidf is the in-window rep)
     oracle=f"""
     WITH t AS (
         SELECT doc_id, unnest({SQL_TOKENS}) AS tok FROM documents
@@ -1125,7 +1119,6 @@ def corpus_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_apply",
-    priority=55,  # overflow: apply-step variant of exact-hash dedup (dedup_exact is the rep)
     oracle=f"""
     WITH fp AS (
         SELECT doc_id, source, md5({SQL_NORMALIZED}) AS fp FROM documents
@@ -1221,7 +1214,6 @@ JACCARD_DF_CAP = 3
 
 @register(
     "dedup_ngram_jaccard_capped",
-    priority=70,  # overflow band: oracle-parity pytest gates it
     oracle=f"""
     WITH t AS (SELECT doc_id, {SQL_TOKENS} AS toks FROM documents),
     s AS (SELECT doc_id, unnest({sql_shingles(3)}) AS sh FROM t),
@@ -1426,7 +1418,6 @@ def dedup_simhash_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_simhash_groups",
-    priority=55,  # same-family variant: dedup_simhash_auto is the pairs rep
     oracle=sql_closure(
         f"SELECT i, j FROM ({_SQL_SIMHASH_PAIRS})", "doc_id", "group_id"
     ),
@@ -1461,11 +1452,10 @@ def dedup_simhash_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_simhash",
-    priority=72,  # fixed-band referee (VERDICT r10 #1): the 4×8-bit
-    # banding has 256 buckets/band — Θ(N²/256) random collisions,
-    # measured ~1.5 pair exponent. Kept as the equivalence referee for
-    # dedup_simhash_auto (identical output by the lossless-banding
-    # argument); the auto variant is the in-window rep.
+    # fixed-band referee: the 4×8-bit banding has 256 buckets/band —
+    # Θ(N²/256) random collisions, measured ~1.5 pair exponent. Kept as
+    # the equivalence referee for dedup_simhash_auto (identical output
+    # by the lossless-banding argument).
     oracle=_SQL_SIMHASH_PAIRS,
     doc="SimHash near-dup pairs at hamming ≤ 3 over the 32-bit "
     "fingerprint, FIXED 4×8-bit pigeonhole banding — the referee twin "
@@ -1480,7 +1470,6 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_simhash64",
-    priority=55,  # overflow: 64-bit variant (dedup_simhash_auto is the in-window rep)
     oracle=_SQL_SIMHASH64_PAIRS,
     doc="64-bit SimHash near-dup pairs at hamming ≤ 3: 16-bit pigeonhole "
     "bands (65 536 buckets/band vs the 32-bit variant's 256) keep the "
@@ -1499,7 +1488,6 @@ def dedup_simhash64(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_simhash64_groups",
-    priority=55,  # same-family variant: pairs reps carry the window slots
     oracle=sql_closure(
         f"SELECT i, j FROM ({_SQL_SIMHASH64_PAIRS})", "doc_id", "group_id"
     ),
@@ -1565,7 +1553,6 @@ _SQL_SIMHASH64_CAPPED_PAIRS = f"""
 
 @register(
     "dedup_simhash64_capped",
-    priority=55,  # overflow: same family as dedup_simhash64
     oracle=_SQL_SIMHASH64_CAPPED_PAIRS,
     doc="The round-8 hot-bucket guard under the oracle gate: 64-bit "
     "SimHash pigeonhole banding with band buckets larger than "
@@ -1595,7 +1582,6 @@ def dedup_simhash64_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_simhash64_groups_capped",
-    priority=55,  # same-family variant: the uncapped groups query is the rep
     oracle=sql_closure(
         f"SELECT i, j FROM ({_SQL_SIMHASH64_CAPPED_PAIRS})", "doc_id", "group_id"
     ),
@@ -1900,7 +1886,6 @@ def _frozen_recall_oracle(k: int = 10) -> str:
 
 @register(
     "embed_ann_ivf_frozen",
-    priority=45,  # in-window: r5 verdict asked for a hash-checked trained path
     oracle=_frozen_ivf_oracle(),
     doc="IVF search with the TRAINED coarse quantizer as a frozen "
     "codebook (operators/codebook.py: the exact kmeans_centroids "
@@ -2033,7 +2018,6 @@ def _frozen_sq8_oracle(shortlist_k: int = 20) -> str:
 
 @register(
     "embed_ann_ivf_sq8_frozen",
-    priority=55,  # overflow: quantized variant (embed_ann_ivf_frozen + recall_frozen are the in-window reps)
     oracle=_frozen_sq8_oracle(shortlist_k=20),
     doc="IVF-SQ8 two-pass search with the frozen trained codebook: "
     "pass 1 scores the float query against ROUND-HALF-UP int8 "
@@ -2065,7 +2049,6 @@ def embed_ann_ivf_sq8_frozen(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "embed_ann_recall_frozen",
-    priority=47,  # in-window beside the frozen search twins
     oracle=_frozen_recall_oracle(k=10),
     doc="Honesty metric for the frozen-codebook IVF path, fully "
     "hash-checked: recall@10 of the closed-form frozen search "
@@ -2176,7 +2159,6 @@ def dedup_embed_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_embed_cosine_tiled",
-    priority=80,  # overflow band: pytest pins tiled ≡ single-block pair-for-pair
     oracle=_SQL_EMBED_DEDUP,
     doc="Stress variant of dedup_embed_cosine: block_rows=96 forces a "
     "≥6-block grid (≥21 GEMM cells) even at sf0.01, proving the "
@@ -2273,16 +2255,13 @@ def _embed_rhp_referee(spark: SparkSession, sf_dir: str, cap: int) -> DataFrame:
 
 @register(
     "dedup_embed_cosine_rhp",
-    # round 10: DEMOTED from the driver window (48 → 72) — the sf1
-    # bench sweep (BENCH_SF1.json) caught this FIXED 4-band×4-bit
-    # family at 75.9 s for 20k vectors: with a constant 16-bucket band,
-    # random collisions are Θ(N²/16) — quadratic with a constant that
-    # stopped being small, the same verdict as the blocked clusters
-    # family. dedup_embed_cosine_rhp_auto (below) is the in-window
-    # successor with the N-aware masked band width. This variant stays
-    # registered as the fixed-band referee, hash-checked in-suite by
-    # test_oracle_parity.
-    priority=72,
+    # the sf1 bench sweep (BENCH_SF1.json) caught this FIXED
+    # 4-band×4-bit family at 75.9 s for 20k vectors: with a constant
+    # 16-bucket band, random collisions are Θ(N²/16) — quadratic with a
+    # constant that stopped being small, the same verdict as the
+    # blocked clusters family. dedup_embed_cosine_rhp_auto (below) is
+    # the production successor with the N-aware masked band width.
+    # This variant stays registered as the fixed-band referee.
     oracle=_sql_embed_rhp_referee(REFEREE_CAP_N),
     doc="Random-hyperplane LSH pre-blocked embedding near-dup, FIXED "
     "4 bands × 4 sign bits (deprecated-for-scale; kept as the "
@@ -2330,7 +2309,6 @@ def _sql_rhp_auto_bucket(b: int) -> str:
 
 @register(
     "dedup_embed_cosine_rhp_auto",
-    priority=48,  # in-window: the sub-quadratic embedding near-dup family rep
     oracle=f"""
     WITH params AS MATERIALIZED (
         SELECT CAST(COALESCE(MIN(r), {RHP_AUTO_MAX_R}) AS INT) AS r
@@ -2390,7 +2368,6 @@ def dedup_embed_cosine_rhp_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_fuzzy_apply",
-    priority=60,  # tail band: union-find property test + spec test gate it
     oracle=f"""
     WITH comp AS ({sql_closure(_SQL_JACCARD_EDGES, "doc_id", "component_id")})
     SELECT d.source,
@@ -2430,7 +2407,6 @@ def dedup_fuzzy_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "corpus_prune_perplexity",
-    priority=60,  # tail band: band-arithmetic spec test gates it
     oracle=f"""
     WITH t AS (
         SELECT doc_id, unnest({SQL_TOKENS}) AS tok FROM documents
@@ -2512,7 +2488,6 @@ def corpus_prune_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "multimodal_bytes_meta",
-    priority=80,  # overflow band: codec goldens + plumbing tests gate this family
     oracle=f"""
     WITH b AS (
         SELECT source, encode(text) AS payload, md5(text) AS content_md5
@@ -2553,7 +2528,6 @@ def multimodal_bytes_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "multimodal_bmp_decode",
-    priority=80,  # overflow band: BMP round-trip golden test is the hard gate
     oracle="""
     WITH p AS (
         SELECT doc_id, 8 + doc_id % 5 AS w, 6 + doc_id % 3 AS h
@@ -2584,7 +2558,6 @@ def multimodal_bmp_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "multimodal_png_decode",
-    priority=80,  # overflow band: PNG round-trip golden test is the hard gate
     oracle="""
     WITH p AS (
         SELECT doc_id, 7 + doc_id % 6 AS w, 5 + doc_id % 4 AS h,
@@ -2620,7 +2593,6 @@ def multimodal_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "multimodal_jpeg_decode",
-    priority=48,  # in-window: the multimodal family rep (strongest codec; fidelity bound stays in pytest)
     oracle="""
     SELECT doc_id AS asset_id,
            CAST(9 + doc_id % 8 AS INT) AS width,
@@ -2650,7 +2622,6 @@ def multimodal_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "multimodal_wav_decode",
-    priority=80,  # overflow band: WAV round-trip golden test is the hard gate
     oracle="""
     WITH p AS (
         SELECT doc_id, 400 + (doc_id % 7) * 160 AS n
@@ -2687,7 +2658,6 @@ _SQL_MULAW_E = (
 
 @register(
     "multimodal_wav_mulaw",
-    priority=80,  # overflow band: codec round-trip tests are the hard gate
     oracle=f"""
     WITH p AS (
         SELECT doc_id, 300 + (doc_id % 5) * 100 AS n
@@ -2753,7 +2723,6 @@ def multimodal_wav_mulaw(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "multimodal_wav_zcr",
-    priority=80,  # overflow band: WAV goldens + codec round-trip gate this
     oracle="""
     WITH p AS (
         SELECT doc_id, 400 + (doc_id % 7) * 160 AS n
@@ -2793,7 +2762,6 @@ def multimodal_wav_zcr(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "multimodal_wav_frames",
-    priority=80,  # overflow band: hand-built-waveform golden gates this
     oracle="""
     WITH p AS (
         SELECT doc_id, 400 + (doc_id % 7) * 160 AS n
@@ -2826,7 +2794,6 @@ def multimodal_wav_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "multimodal_bmp_resize",
-    priority=80,  # overflow band: NN-resize golden test is the hard gate
     oracle="""
     WITH p AS (
         SELECT doc_id, 8 + doc_id % 5 AS w, 6 + doc_id % 3 AS h
@@ -2864,7 +2831,6 @@ def multimodal_bmp_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "multimodal_gif_decode",
-    priority=80,  # overflow band: GIF round-trip golden test is the hard gate
     oracle="""
     WITH p AS (
         SELECT doc_id, 6 + doc_id % 7 AS w, 4 + doc_id % 5 AS h,
@@ -2904,7 +2870,6 @@ def multimodal_gif_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "multimodal_tiff_decode",
-    priority=80,  # overflow band: TIFF round-trip golden test is the hard gate
     oracle="""
     WITH p AS (
         SELECT doc_id, 5 + doc_id % 9 AS w, 3 + doc_id % 6 AS h
@@ -2953,7 +2918,6 @@ def multimodal_tiff_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "multimodal_image_bulk",
-    priority=70,  # overflow: throughput twin of the in-window jpeg rep
     oracle="""
     WITH p AS (
         SELECT doc_id, 7 + doc_id % 6 AS w, 5 + doc_id % 4 AS h,
@@ -3000,7 +2964,6 @@ def multimodal_image_bulk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "multimodal_audio_bulk",
-    priority=70,  # overflow: throughput twin of the in-window codec rep
     oracle=f"""
     WITH p AS (
         SELECT doc_id, 300 + (doc_id % 5) * 100 AS n
@@ -3116,7 +3079,6 @@ def _kmeans_profile_oracle() -> str:
 
 @register(
     "corpus_kmeans_clusters",
-    priority=70,  # overflow: the frozen-codebook family's in-window reps cover the shape
     oracle=_kmeans_profile_oracle(),
     doc="Corpus topic clustering with the frozen k-means codebook "
     "(operators/similarity.py frozen_cluster_profile): hard-assign "
@@ -3153,7 +3115,6 @@ _SQL_ALAW_SEG = (
 
 @register(
     "multimodal_wav_alaw",
-    priority=80,  # overflow band: full-range scalar-reference parity is the hard gate
     oracle=f"""
     WITH p AS (
         SELECT doc_id, 320 + (doc_id % 6) * 80 AS n
@@ -3234,7 +3195,6 @@ SOURCE_QUOTA = 40
 
 @register(
     "corpus_source_quota",
-    priority=70,  # overflow: sample_stratified reps the sampling family in-window
     oracle=f"""
     WITH ranked AS (
         SELECT source, n_chars,
@@ -3291,7 +3251,6 @@ def corpus_source_quota(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "documents_length_histogram",
-    priority=70,  # overflow: quantiles/sketch rep the distribution family in-window
     oracle="""
     SELECT CAST(length(bin(CAST(n_chars AS BIGINT))) AS INT) AS log2_bucket,
            CAST(COUNT(*) AS BIGINT) AS n_docs,

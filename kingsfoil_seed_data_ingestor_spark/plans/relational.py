@@ -17,8 +17,8 @@ from functools import partial
 
 from kingsfoil_seed_data_ingestor_spark.plans.core import register as _register
 
-# reference-parity band: always inside the driver's correctness window
-register = partial(_register, priority=10)
+# reference-parity set: always inside the driver's correctness window
+register = partial(_register, parity=True)
 from kingsfoil_seed_data_ingestor_spark.plans.tables import load
 
 # Exact money arithmetic: cast to decimal before aggregating so sums are

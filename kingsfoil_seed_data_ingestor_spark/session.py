@@ -17,6 +17,25 @@ from pyspark.sql import SparkSession
 DEFAULT_APP_NAME = "kingsfoil-spark"
 
 
+def default_driver_heap_gb(meminfo: str = "/proc/meminfo") -> int:
+    """Half the host's ``MemTotal`` in whole GiB, clamped to 1..24.
+
+    In local mode driver and executors share this one heap; half the
+    host leaves room for the Python workers and the page cache, and
+    24 GiB is ample for 32 concurrent task threads.
+    """
+    total_kb = 0
+    try:
+        with open(meminfo) as fh:
+            for line in fh:
+                if line.startswith("MemTotal:"):
+                    total_kb = int(line.split()[1])
+                    break
+    except OSError:
+        pass
+    return max(1, min(24, total_kb // (2 * 2**20)))
+
+
 def get_spark(
     app_name: str = DEFAULT_APP_NAME,
     master: str | None = None,
@@ -43,9 +62,10 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.ui.enabled", "false")
-        # local mode: driver and executors share one heap — size it for
-        # 32 concurrent task threads (the container has 128 GiB)
-        .config("spark.driver.memory", os.environ.get("KINGSFOIL_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("KINGSFOIL_DRIVER_MEM") or f"{default_driver_heap_gb()}g",
+        )
         # long-lived sessions: ContextCleaner only reclaims shuffle files
         # and torn-down broadcasts when the driver GCs; with a large heap
         # that can take arbitrarily long, so ask for a periodic GC often

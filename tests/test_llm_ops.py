@@ -188,7 +188,7 @@ def test_lsh_hot_bucket_guard(spark):
         ],
         "doc_id long, text string",
     )
-    sigs = DD.minhash_profiles(docs, 32, 3).select("doc_id", "signature")
+    sigs = DD.minhash_signatures(docs, 32, 3)
     uncapped = {(r.i, r.j) for r in DD.lsh_candidate_pairs(sigs, 16, 2).collect()}
     assert (0, 1) in uncapped and (10, 11) in uncapped
     capped = {

@@ -1,40 +1,31 @@
-"""Driver-window rotation invariants (VERDICT r7 #8, widened r11 per
-VERDICT r10 #3).
+"""Registry and driver-window rotation invariants.
 
 The external driver hash-checks only the first ``DRIVER_WINDOW`` of
-``ordered_queries()``. Round 11 replaced the 8-slot overflow slide with
-a burn-down policy: only the reference-parity band (priority ≤ 10) is
-pinned; the other ~31 window slots go to NEVER-driver-checked queries
-first (the union of CORRECTNESS_r*.json artifacts defines "checked"),
-then a sliding slice of the checked pool. These tests pin the
-properties that make that safe:
+``ordered_queries()``. The reference-parity queries (``parity=True``)
+are pinned there; the window's other slots take a slice of the
+remaining queries, in registration order, that slides each round.
+These tests pin the properties that make that safe:
 
-* the reference-parity band is NEVER displaced out of the window;
+* the parity set is NEVER displaced out of the window;
 * the window stays exactly full and deterministic;
-* every rotated-in query carries a full DuckDB value-hash oracle;
-* the burn-down actually converges: simulating driver feedback (each
-  round's window becomes checked) covers EVERY registered query within
-  three rounds — the VERDICT r10 #3 'Done' criterion;
-* the flagship bands (20–48) that became rotation-eligible really do
-  satisfy the ≥ 3-consecutive-green-rounds precondition, re-verified
-  from the artifacts themselves.
+* the slide re-covers every non-parity query within
+  ⌈non-parity/slots⌉ rounds;
+* the round is derived from the driver's artifacts, not hand-bumped;
+* a name can be registered only once.
 """
 
 from __future__ import annotations
 
 import glob
-import json
 import os
 import re
+
+import pytest
 
 from kingsfoil_seed_data_ingestor_spark import plans  # noqa: F401 — populates registry
 from kingsfoil_seed_data_ingestor_spark.plans import core
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-
-def _base_order():
-    return sorted(core.QUERIES.values(), key=lambda q: (q.priority, q.seq))
 
 
 def _window():
@@ -43,127 +34,43 @@ def _window():
 
 def test_rotation_preserves_parity_band():
     window = set(_window())
-    pinned = [q for q in _base_order() if q.priority <= core.PINNED_PRIORITY_MAX]
-    assert pinned, "registry lost its reference-parity band"
-    for q in pinned:
-        assert q.name in window, f"parity query {q.name} displaced by rotation"
+    parity = [q.name for q in core.QUERIES.values() if q.parity]
+    assert parity, "registry lost its reference-parity set"
+    for name in parity:
+        assert name in window, f"parity query {name} displaced by rotation"
 
 
 def test_window_full_deterministic_and_oracled():
     w1, w2 = _window(), _window()
     assert w1 == w2
     assert len(w1) == len(set(w1)) == core.DRIVER_WINDOW
+    ordered = [q.name for q in core.ordered_queries()]
+    assert sorted(ordered) == sorted(core.QUERIES), "ordering drops or repeats"
     for name in w1:
-        assert core.QUERIES[name].oracle is not None, (
-            f"{name} in the driver window without an oracle — the window "
-            "must only carry hash-checkable queries"
-        )
-
-
-def test_burndown_prefers_never_checked_queries():
-    """While never-driver-checked queries remain, they get every
-    rotation slot (VERDICT r10 #3: ≥ 16 newly-checked queries in the
-    r11 window — with ~31 free slots and 45 unchecked, the policy
-    fills all of them with fresh ones)."""
-    unchecked = {
-        q.name
-        for q in _base_order()
-        if q.priority > core.PINNED_PRIORITY_MAX
-        and q.name not in core.CHECKED_NAMES
-    }
-    if not unchecked:  # steady state: backlog fully burned down
-        return
-    tail = core.window_tail_names()
-    fresh = [n for n in tail if n in unchecked]
-    expected = min(len(tail), len(unchecked))
-    assert len(fresh) == expected, (
-        f"only {len(fresh)} of {expected} rotation slots went to "
-        f"never-checked queries"
-    )
-    assert len(fresh) >= min(16, len(unchecked)), (
-        "VERDICT r10 #3: the round must newly check at least 16 queries"
-    )
-
-
-def test_burndown_covers_every_query_within_three_rounds(monkeypatch):
-    """The 'Done' criterion: simulate the driver feedback loop — each
-    round's window is written to a CORRECTNESS artifact, which the next
-    round's selection reads — and assert EVERY registered query has
-    been driver-checked at least once within three rounds from now
-    (i.e. by round 13 when starting at 11), regardless of the starting
-    artifact state."""
-    checked = set(core.CHECKED_NAMES)
-    start_round = core.ROTATION_ROUND
-    for rnd in range(start_round, start_round + 3):
-        monkeypatch.setattr(core, "ROTATION_ROUND", rnd)
-        monkeypatch.setattr(core, "CHECKED_NAMES", frozenset(checked))
-        window = _window()
-        assert len(window) == core.DRIVER_WINDOW
-        checked.update(window)
-    assert checked >= set(core.QUERIES), (
-        f"{sorted(set(core.QUERIES) - checked)} still unchecked after 3 rounds"
-    )
+        assert core.QUERIES[name].oracle.strip(), f"{name} has an empty oracle"
 
 
 def test_steady_state_rotation_keeps_cycling(monkeypatch):
-    """Once the backlog is empty, the tail must keep sliding so
-    long-stable queries cycle back under the driver's independent gate
-    — every eligible query re-checked within ⌈eligible/slots⌉ rounds."""
-    monkeypatch.setattr(core, "CHECKED_NAMES", frozenset(core.QUERIES))
-    eligible = [
-        q.name for q in _base_order() if q.priority > core.PINNED_PRIORITY_MAX
-    ]
-    slots = core.DRIVER_WINDOW - (len(core.QUERIES) - len(eligible))
-    rounds_needed = -(-len(eligible) // slots)  # ceil
+    """The window's non-parity slots slide so every non-parity query
+    comes back under the driver's independent gate within
+    ⌈non-parity/slots⌉ consecutive rounds."""
+    others = [q.name for q in core.QUERIES.values() if not q.parity]
+    slots = core.DRIVER_WINDOW - (len(core.QUERIES) - len(others))
+    rounds_needed = -(-len(others) // slots)  # ceil
     seen: set[str] = set()
     for rnd in range(core.ROTATION_ROUND, core.ROTATION_ROUND + rounds_needed):
         monkeypatch.setattr(core, "ROTATION_ROUND", rnd)
-        tail = core.window_tail_names()
+        tail = [n for n in _window() if not core.QUERIES[n].parity]
         assert len(tail) == len(set(tail)) == slots
         seen.update(tail)
-    assert seen == set(eligible), (
-        "steady-state slide must touch every eligible query across rounds"
+    assert seen == set(others), (
+        "steady-state slide must touch every non-parity query across rounds"
     )
 
 
-def test_flagships_met_green_precondition_before_becoming_eligible():
-    """VERDICT r10 #3 allowed making bands 20–48 rotation-eligible
-    'once they have ≥ 3 consecutive green window rounds (they all
-    do)' — re-verify that claim from the artifacts instead of trusting
-    it: each flagship must appear with a full pass in the last
-    FLAGSHIP_MIN_GREEN_ROUNDS driver artifacts that predate the policy
-    change (r8–r10)."""
-    arts = {}
-    for p in glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", p)
-        if m:
-            with open(p) as fh:
-                arts[int(m.group(1))] = json.load(fh)
-    need = [r for r in (8, 9, 10) if r in arts]
-    if len(need) < core.FLAGSHIP_MIN_GREEN_ROUNDS:
-        return  # fresh checkout without the historical artifacts
-    flagships = [
-        q.name
-        for q in _base_order()
-        if core.PINNED_PRIORITY_MAX < q.priority < 50
-    ]
-    for name in flagships:
-        rows = [arts[rnd][name] for rnd in need if name in arts[rnd]]
-        # flagships registered mid-history (the r9/r10 _auto families)
-        # have shorter windows — the operative requirement is green in
-        # EVERY driver appearance to date, with at least one appearance
-        assert rows, f"flagship {name} has never been driver-checked"
-        for row in rows:
-            assert row.get("hash_match") and not row.get("err"), (
-                f"{name} was not green in a pre-eligibility round: {row}"
-            )
-
-
 def test_rotation_round_tracks_artifacts(monkeypatch):
-    """VERDICT r8 #4: the round is DERIVED, not hand-bumped. The env
-    override wins; else the newest CORRECTNESS_r{N}.json implies round
-    N+1; and the fallback constant must never lag the artifacts (the
-    staleness this guard exists to catch)."""
+    """The round is DERIVED, not hand-bumped. The env override wins;
+    else the newest CORRECTNESS_r{N}.json implies round N+1."""
     artifact_rounds = [
         int(m.group(1))
         for p in glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))
@@ -174,25 +81,17 @@ def test_rotation_round_tracks_artifacts(monkeypatch):
             "rotation round lags the newest correctness artifact — "
             "the window froze"
         )
-        # The FALLBACK constant is deliberately NOT asserted against the
-        # artifacts here (VERDICT r9 #1): when artifacts exist the live
-        # round is derived from them (the assert above proves tracking),
-        # and the constant only matters on artifact-less fresh checkouts
-        # — where this branch doesn't run.
     monkeypatch.setenv("SPARK_GRAFT_ROUND", "123")
     assert core._detect_round() == 123
     monkeypatch.delenv("SPARK_GRAFT_ROUND")
     assert core._detect_round() == core.ROTATION_ROUND
 
 
-def test_checked_names_track_artifacts():
-    """CHECKED_NAMES is the union of all driver artifacts — spot-check
-    a few names every artifact carries, and that window names from the
-    newest artifact are all considered checked."""
-    arts = sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")))
-    if not arts:
-        assert core.CHECKED_NAMES == frozenset()
-        return
-    with open(arts[-1]) as fh:
-        newest = set(json.load(fh))
-    assert newest <= core.CHECKED_NAMES
+def test_register_rejects_duplicate_name(monkeypatch):
+    """A second registration of a name must fail loudly instead of
+    silently replacing the first query."""
+    monkeypatch.setattr(core, "QUERIES", dict(core.QUERIES))
+    original = core.QUERIES["q1_pricing_summary"]
+    with pytest.raises(ValueError, match="q1_pricing_summary"):
+        core.register("q1_pricing_summary", oracle="SELECT 1")(lambda s, d: None)
+    assert core.QUERIES["q1_pricing_summary"] is original

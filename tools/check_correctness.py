@@ -42,18 +42,14 @@ def main() -> int:
         if only and name not in only:
             continue
         checked += 1
-        sql = oracles.get(name)
         try:
             sdf = fn(spark, sf_dir).toPandas()
         except Exception as e:  # noqa: BLE001
             failures.append(name)
             print(f"FAIL  {name}: spark raised {type(e).__name__}: {e}")
             continue
-        if sql is None:
-            print(f"ROWS  {name}: {len(sdf)} rows (no oracle — rows-only check)")
-            continue
         try:
-            odf = con.execute(sql).fetchdf()
+            odf = con.execute(oracles[name]).fetchdf()
         except Exception as e:  # noqa: BLE001
             failures.append(name)
             print(f"FAIL  {name}: oracle raised {type(e).__name__}: {e}")

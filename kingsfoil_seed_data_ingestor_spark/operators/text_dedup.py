@@ -18,9 +18,12 @@ table (``doc_id long, text string``):
   Defaults (128 hashes, 32 bands × 4 rows) put the S-curve midpoint
   at ≈0.5 with miss probability ≤ 5e-8 for pairs at Jaccard ≥ 0.8 —
   LSH recall is a parameter choice, not a hope.
-* **SimHash** — 32-bit parity fingerprint per document; candidates
-  pair on any matching 8-bit band (pigeonhole: hamming ≤ 3 ⇒ ≥1 of 4
-  bands equal), then exact hamming filter.
+* **SimHash** — 32- or 64-bit parity fingerprint per document; one
+  kernel, ``simhash_candidates``, pairs documents agreeing on any
+  masked key. Fed the multi-block pigeonhole masks of
+  ``simhash_subset_masks`` (hamming ≤ d ⇒ some (B−d)-block subset is
+  clean), it is lossless at any block count and width, so the block
+  count can grow with N; callers then filter the exact hamming.
 """
 
 from __future__ import annotations
@@ -316,7 +319,6 @@ def lsh_candidate_pairs(
     signatures: DataFrame,
     bands: int = 16,
     rows_per_band: int = 4,
-    max_bucket_size: int | None = None,
 ) -> DataFrame:
     """Distinct (i < j) pairs colliding in ≥1 LSH band.
 
@@ -327,17 +329,6 @@ def lsh_candidate_pairs(
     The banded table is NOT persisted: ``minhash_near_dups`` passes
     cached ``signatures``, and re-deriving the explode from that cache
     is cheaper than a second materialization round-trip.
-
-    ``max_bucket_size`` is the hot-bucket guard for corpus scale: a
-    bucket of k colliding documents emits k(k-1)/2 candidate pairs, and
-    buckets holding large exact-duplicate clusters (or a degenerate
-    band of an all-boilerplate corpus) turn the band join quadratic.
-    Buckets above the cap are dropped from CANDIDATE GENERATION only —
-    run exact dedup first (`exact_dedup` collapses identical contents
-    with one linear shuffle) so that near-dup LSH never sees the
-    identical-content mass; what remains above a generous cap is a
-    boilerplate cluster better handled by a doc-frequency filter.
-    Leave ``None`` (default, exact recall) for oracle-gated runs.
     """
     # single parsed expression for the band array — per-band Column
     # construction costs ~5 py4j round trips each (see
@@ -345,14 +336,6 @@ def lsh_candidate_pairs(
     banded = signatures.select(
         "doc_id", F.expr(lsh_band_expr(bands, rows_per_band)).alias("bk")
     ).select("doc_id", "bk.band", "bk.bucket")
-    if max_bucket_size is not None:
-        ok = (
-            banded.groupBy("band", "bucket")
-            .agg(F.count(F.lit(1)).alias("_bsz"))
-            .filter(F.col("_bsz") <= max_bucket_size)
-            .select("band", "bucket")
-        )
-        banded = banded.join(ok, ["band", "bucket"], "left_semi")
     left = banded.select(F.col("doc_id").alias("i"), "band", "bucket")
     right = banded.select(F.col("doc_id").alias("j"), "band", "bucket")
     return (
@@ -458,123 +441,6 @@ def simhash64_table(
     return per_bit.select("doc_id", TX.assemble_simhash64().alias("simhash64"))
 
 
-def simhash64_near_dups(
-    docs: DataFrame,
-    max_hamming: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_bucket_size: int | None = None,
-    scope: CacheScope | None = None,
-) -> DataFrame:
-    """Pairs (i < j) with 64-bit simhash hamming ≤ ``max_hamming`` via
-    pigeonhole banding: ``max_hamming + 1`` bands of 64/(d+1) bits — a
-    qualifying pair agrees exactly on ≥ 1 band. Shifts use the
-    *unsigned* right shift (the sign bit is data here).
-
-    ``max_bucket_size`` (round 8) is the hot-bucket guard this operator
-    was missing while ``lsh_candidate_pairs`` had one: a band bucket of
-    k fingerprints emits k(k-1)/2 candidate pairs, and boilerplate-
-    heavy corpora concentrate simhashes — one 16-bit bucket holding an
-    exact-duplicate cluster turns the band join quadratic. Buckets
-    above the cap are dropped from candidate generation only (run
-    ``exact_dedup`` first so identical content never reaches near-dup
-    banding). ``None`` (default) keeps exact pigeonhole recall for
-    oracle-gated runs."""
-    n_bands = max_hamming + 1
-    width = TX.SIMHASH64_BITS // n_bands
-    spans = [
-        (b * width, width if b < n_bands - 1 else TX.SIMHASH64_BITS - b * width)
-        for b in range(n_bands)
-    ]
-    hashes = simhash64_table(docs, id_col, text_col)
-    banded = hashes.select(
-        "doc_id",
-        "simhash64",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.shiftrightunsigned(F.col("simhash64"), start)
-                        .bitwiseAND(F.lit((1 << w) - 1) if w < 64 else F.lit(-1))
-                        .alias("bucket"),
-                    )
-                    for b, (start, w) in enumerate(spans)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", "simhash64", "bk.band", "bk.bucket")
-    # the banded table feeds both self-join sides (and the bucket-size
-    # aggregate when capped) — persist so the per-token md5 fingerprint
-    # aggregation runs once, not 2-3× (same rationale as
-    # lsh_candidate_pairs' persist). Same-session A/B at sf0.1:
-    # capped ~2.5 s → ~2.1 s; uncapped neutral-to-better (the pair
-    # distinct dominates there)
-    scope, own = scope_or_own(scope)
-    banded = scope.persist(banded)
-    if max_bucket_size is not None:
-        # window-count cap (optimization round 11; previously a
-        # groupBy-count + left-semi join): one exchange on
-        # (band, bucket) computes the bucket size AND leaves the kept
-        # rows partitioned exactly as the candidate self-join needs
-        # them, so both join sides reuse that exchange instead of
-        # paying the aggregate's shuffle plus a re-shuffle of banded
-        # through the semi join (plan: 10 → 6 exchanges). Also robust
-        # at corpus scale: the semi-join's under-cap bucket list grows
-        # with the corpus (most buckets are small) and would stop
-        # broadcasting, while the window is always exactly one
-        # full-banded shuffle. Semantics identical: keep rows whose
-        # (band, bucket) holds ≤ max_bucket_size fingerprints.
-        w_cap = Window.partitionBy("band", "bucket")
-        banded = (
-            banded.withColumn("_bsz", F.count(F.lit(1)).over(w_cap))
-            .filter(F.col("_bsz") <= max_bucket_size)
-            .drop("_bsz")
-        )
-    left = banded.select(
-        F.col("doc_id").alias("i"), F.col("simhash64").alias("h_i"), "band", "bucket"
-    )
-    right = banded.select(
-        F.col("doc_id").alias("j"), F.col("simhash64").alias("h_j"), "band", "bucket"
-    )
-    pairs = (
-        left.join(right, ["band", "bucket"])
-        .filter(F.col("i") < F.col("j"))
-    )
-    if max_bucket_size is None:
-        # first-agreeing-band guard (optimization round 11, the
-        # simhash_near_dups_auto treatment): both fingerprints ride
-        # every candidate row, so each row decides locally whether its
-        # band is the pair's lowest agreeing band and the multi-band
-        # ``.distinct()`` exchange disappears. NOT applicable under the
-        # hot-bucket cap: a dropped bucket can silence the lowest
-        # agreeing band and the pair must then survive via a colder
-        # one, which this local test cannot see — the capped path
-        # keeps the distinct.
-        def _agree(start: int, w: int):
-            mask = F.lit((1 << w) - 1) if w < 64 else F.lit(-1)
-            return (
-                F.shiftrightunsigned(F.col("h_i"), start).bitwiseAND(mask)
-                == F.shiftrightunsigned(F.col("h_j"), start).bitwiseAND(mask)
-            )
-
-        first_agree = F.lit(0)
-        for t in range(len(spans) - 1, -1, -1):
-            first_agree = F.when(_agree(*spans[t]), F.lit(t)).otherwise(first_agree)
-        pairs = pairs.filter(F.col("band") == first_agree).select(
-            "i", "j", "h_i", "h_j"
-        )
-    else:
-        pairs = pairs.select("i", "j", "h_i", "h_j").distinct()
-    hamming = F.bit_count(F.col("h_i").bitwiseXOR(F.col("h_j")))
-    out = (
-        pairs.withColumn("hamming", hamming)
-        .filter(F.col("hamming") <= max_hamming)
-        .select("i", "j", "hamming")
-    )
-    return scope.attach(out) if own else out
-
-
 def simhash_block_spans(n_blocks: int, bits: int = 32) -> list[tuple[int, int]]:
     """Split ``bits`` fingerprint bits into ``n_blocks`` nearly-equal
     ``(start, width)`` spans — the first ``bits % n_blocks`` blocks take
@@ -600,9 +466,14 @@ def simhash_subset_masks(
     entirely clean — the pair agrees exactly on that subset's masked
     fingerprint. Keying one "table" (band) per subset therefore finds
     every qualifying pair: the banding is LOSSLESS for hamming ≤ d at
-    any block count, which is what lets the block count scale with N
-    while the registered output (and its brute-force oracle) stays
-    bit-identical."""
+    any block count and any fingerprint width, which is what lets the
+    block count scale with N while the registered output (and its
+    brute-force oracle) stays bit-identical. ``n_blocks = d + 1`` is
+    the classic single-block pigeonhole banding.
+
+    Masks are returned as SIGNED 64-bit values (two's complement), the
+    type of a Spark long: a 64-bit mask covering bit 63 — the top block
+    ``0xFFFF << 48`` — would otherwise not be a valid literal."""
     from itertools import combinations
 
     spans = simhash_block_spans(n_blocks, bits)
@@ -613,7 +484,7 @@ def simhash_subset_masks(
         for b in subset:
             start, w = spans[b]
             m |= ((1 << w) - 1) << start
-        masks.append(m)
+        masks.append(m - (1 << 64) if m >> 63 else m)
     return masks
 
 
@@ -628,7 +499,7 @@ def simhash_blocks_for(
     bits: int = 32,
     max_blocks: int = 8,
 ) -> int:
-    """N-aware block count for :func:`simhash_near_dups_auto` — the
+    """N-aware block count for :func:`simhash_subset_masks` — the
     32-bit analogue of :func:`~kingsfoil_seed_data_ingestor_spark.
     operators.similarity.rhp_mask_bits`: pure integer arithmetic over a
     ``COUNT(*)`` scalar, no float/log2 boundary hazard.
@@ -647,7 +518,7 @@ def simhash_blocks_for(
     narrowest subset). Ladder at d=3, target=16: B=4 to N≈1 k, 5 to ≈6.5 k,
     6 to ≈26 k, 7 to ≈60 k, 8 to ≈300 k; the ``max_blocks`` cap marks
     where a 32-bit fingerprint runs out of key entropy — corpora beyond
-    it belong on the 64-bit family (:func:`simhash64_near_dups`)."""
+    it belong on the 64-bit fingerprint (:func:`simhash64_table`)."""
     from math import comb
 
     d = max_hamming
@@ -660,156 +531,97 @@ def simhash_blocks_for(
     return max_blocks
 
 
-def simhash_near_dups_auto(
-    docs: DataFrame,
-    max_hamming: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_blocks: int | None = None,
+def simhash_candidates(
+    hashes: DataFrame,
+    masks: list[int],
+    max_bucket_size: int | None = None,
     scope: CacheScope | None = None,
 ) -> DataFrame:
-    """:func:`simhash_near_dups` with the pigeonhole block count sized
-    to the corpus (one cheap count job first) — the scale treatment the
-    32-bit family was missing while the 64-bit one had its hot-bucket
-    cap and rhp got N-aware masking (VERDICT r10 #1).
+    """``(i, j, hamming)`` once for every pair (i < j) of a
+    ``(doc_id, fingerprint)`` table — either width — that agrees on at
+    least one masked key ``fingerprint & mask``: the one SimHash band
+    self-join. ``hamming`` is NOT filtered; callers keep the pairs they
+    want. Fed :func:`simhash_subset_masks` for ``d``, every pair at
+    hamming ≤ d is among the output.
 
-    Candidate generation keys each of C(B, d) bands on a masked
-    fingerprint (:func:`simhash_subset_masks`); because every
-    hamming ≤ d pair agrees on at least one full (B−d)-subset, recall
-    is EXACT at every block count and the output — after the exact
-    hamming post-filter — is identical to the brute-force O(n²)
-    definition. The registered query therefore reuses the uncapped
-    variant's DuckDB oracle verbatim: N only moves the candidate-mass
-    constant, never the answer, so no parameter needs cross-engine
-    re-derivation (contrast ``rhp_auto``, whose banding is lossy and
-    whose oracle re-derives the mask from COUNT(*)).
+    Cost model: one narrow (doc_id, band, key) row per document per
+    mask, and candidates = the key collisions. :func:`simhash_blocks_for`
+    sizes the 32-bit block count so random collisions stay at
+    ``SIMHASH_TARGET_PER_DOC`` per document (vs the fixed 4×8-bit
+    banding's Θ(N²/256)); the 64-bit fingerprint's 16-bit blocks keep
+    4 single-block keys fine-grained at billion-document corpora.
 
-    Cost model: C(B,d) narrow (doc_id, band, key) rows per document
-    (≤ 56 at the B=8 cap) against random collision mass held at
-    ``SIMHASH_TARGET_PER_DOC`` per document — linear candidates at every
-    N the 32-bit fingerprint can serve, vs the fixed family's Θ(N²/256)."""
-    if n_blocks is None:
-        n = docs.count()
-        n_blocks = simhash_blocks_for(n, max_hamming)
-    masks = simhash_subset_masks(n_blocks, max_hamming)
-    hashes = simhash_table(docs, id_col, text_col)
+    ``max_bucket_size`` is the hot-bucket guard: a (band, key) bucket of
+    k fingerprints emits k(k-1)/2 candidate pairs, and boilerplate-heavy
+    corpora concentrate simhashes — one bucket holding an exact-
+    duplicate cluster turns the band join quadratic. Buckets above the
+    cap are dropped from candidate generation only (run ``exact_dedup``
+    first so identical content never reaches near-dup banding); a pair
+    then survives through any colder band it agrees on. ``None``
+    (default) keeps exact pigeonhole recall."""
+    _, fp = hashes.columns
     banded = hashes.select(
         "doc_id",
-        "simhash",
+        F.col(fp).alias("h"),
         F.explode(
             F.array(
                 *[
                     F.struct(
                         F.lit(t).alias("band"),
-                        F.col("simhash").bitwiseAND(F.lit(m)).alias("key"),
+                        F.col(fp).bitwiseAND(F.lit(m)).alias("key"),
                     )
                     for t, m in enumerate(masks)
                 ]
             )
         ).alias("bk"),
-    ).select("doc_id", "simhash", "bk.band", "bk.key")
-    # both self-join sides read the banded table: persist so the
-    # per-token md5 fingerprint aggregation runs once (the
-    # simhash64_near_dups precedent)
+    ).select("doc_id", "h", "bk.band", "bk.key")
+    # the banded table feeds both self-join sides (and the bucket-size
+    # window when capped) — persist so the per-token md5 fingerprint
+    # aggregation runs once, not 2-3×. Same-session A/B at sf0.1:
+    # capped ~2.5 s → ~2.1 s; uncapped neutral-to-better
     scope, own = scope_or_own(scope)
     banded = scope.persist(banded)
-    left = banded.select(
-        F.col("doc_id").alias("i"), F.col("simhash").alias("h_i"), "band", "key"
-    )
-    right = banded.select(
-        F.col("doc_id").alias("j"), F.col("simhash").alias("h_j"), "band", "key"
-    )
-    # first-agreeing-band guard (optimization round 11): a pair that
-    # agrees on k of the C(B,d) masked subsets used to surface k times
-    # and pay a corpus-wide ``.distinct()`` exchange to dedup. Both
-    # fingerprints ride every candidate row, so each row can decide
-    # locally whether ITS band is the pair's lowest agreeing band —
-    # a chain of bitwise mask comparisons inside codegen — and emit
-    # exactly once. The distinct's full shuffle of the multi-band
-    # candidate mass disappears (the largest exchange of this plan
-    # after the banded self-join itself).
-    first_agree = F.lit(0)
-    for t in range(len(masks) - 1, -1, -1):
-        m = F.lit(masks[t])
-        first_agree = F.when(
-            F.col("h_i").bitwiseAND(m) == F.col("h_j").bitwiseAND(m), F.lit(t)
-        ).otherwise(first_agree)
-    pairs = (
-        left.join(right, ["band", "key"])
-        .filter(F.col("i") < F.col("j"))
-        .filter(F.col("band") == first_agree)
-        .select("i", "j", "h_i", "h_j")
-    )
-    hamming = F.bit_count(F.col("h_i").bitwiseXOR(F.col("h_j")))
-    out = (
-        pairs.withColumn("hamming", hamming)
-        .filter(F.col("hamming") <= max_hamming)
-        .select("i", "j", "hamming")
+    if max_bucket_size is not None:
+        # window-count cap: one exchange on (band, key) computes the
+        # bucket size AND leaves the kept rows partitioned exactly as
+        # the self-join needs them, so both join sides reuse that
+        # exchange (10 → 6 exchanges against a groupBy-count + semi
+        # join, whose under-cap bucket list also grows with the corpus
+        # and stops broadcasting)
+        banded = (
+            banded.withColumn(
+                "_bsz", F.count(F.lit(1)).over(Window.partitionBy("band", "key"))
+            )
+            .filter(F.col("_bsz") <= max_bucket_size)
+            .drop("_bsz")
+        )
+    left = banded.select(F.col("doc_id").alias("i"), F.col("h").alias("h_i"), "band", "key")
+    right = banded.select(F.col("doc_id").alias("j"), F.col("h").alias("h_j"), "band", "key")
+    pairs = left.join(right, ["band", "key"]).filter(F.col("i") < F.col("j"))
+    if max_bucket_size is None:
+        # first-agreeing-band guard (optimization round 11): a pair that
+        # agrees on k masked keys surfaces k times. Both fingerprints
+        # ride every candidate row, so each row decides locally whether
+        # ITS band is the pair's lowest agreeing band — a chain of
+        # bitwise mask comparisons inside codegen — and emits exactly
+        # once, with no corpus-wide ``.distinct()`` exchange. NOT
+        # applicable under the cap: a dropped bucket can silence the
+        # lowest agreeing band, and the pair must then survive via a
+        # colder one this local test cannot see — so the capped path
+        # keeps the distinct.
+        first_agree = F.lit(0)
+        for t in range(len(masks) - 1, -1, -1):
+            m = F.lit(masks[t])
+            first_agree = F.when(
+                F.col("h_i").bitwiseAND(m) == F.col("h_j").bitwiseAND(m), F.lit(t)
+            ).otherwise(first_agree)
+        pairs = pairs.filter(F.col("band") == first_agree).select("i", "j", "h_i", "h_j")
+    else:
+        pairs = pairs.select("i", "j", "h_i", "h_j").distinct()
+    out = pairs.select(
+        "i", "j", F.bit_count(F.col("h_i").bitwiseXOR(F.col("h_j"))).alias("hamming")
     )
     return scope.attach(out) if own else out
-
-
-def simhash_near_dups(
-    docs: DataFrame,
-    max_hamming: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Pairs (i < j) with simhash hamming distance ≤ ``max_hamming``.
-
-    Candidate generation by the pigeonhole principle: split the 32
-    bits into ``max_hamming + 1`` blocks — a pair within distance d
-    must agree exactly on at least one block — so a band join finds
-    every qualifying pair without an n² scan.
-
-    FIXED-BAND REFEREE (VERDICT r10 #1): at d=3 the four 8-bit blocks
-    give only 256 buckets per band, so random collisions grow
-    Θ(N²/256) — measured pair exponent ~1.5 and exactly 10.0× wall on
-    10× data at sf1. The production/registered path is
-    :func:`simhash_near_dups_auto`, whose block count grows with the
-    corpus while producing the IDENTICAL output (lossless banding);
-    this fixed shape stays as the equivalence referee.
-    """
-    from kingsfoil_seed_data_ingestor_spark.functions.text import SIMHASH_BITS
-
-    n_bands = max_hamming + 1
-    width = SIMHASH_BITS // n_bands
-    spans = [
-        (b * width, width if b < n_bands - 1 else SIMHASH_BITS - b * width)
-        for b in range(n_bands)
-    ]
-    hashes = simhash_table(docs, id_col, text_col)
-    banded = hashes.select(
-        "doc_id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.shiftright(F.col("simhash"), start)
-                        .bitwiseAND(F.lit((1 << w) - 1))
-                        .alias("byte"),
-                    )
-                    for b, (start, w) in enumerate(spans)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", "simhash", "bk.band", "bk.byte")
-    left = banded.select(F.col("doc_id").alias("i"), F.col("simhash").alias("h_i"), "band", "byte")
-    right = banded.select(F.col("doc_id").alias("j"), F.col("simhash").alias("h_j"), "band", "byte")
-    pairs = (
-        left.join(right, ["band", "byte"])
-        .filter(F.col("i") < F.col("j"))
-        .select("i", "j", "h_i", "h_j")
-        .distinct()
-    )
-    hamming = F.bit_count(F.col("h_i").bitwiseXOR(F.col("h_j")))
-    return (
-        pairs.withColumn("hamming", hamming)
-        .filter(F.col("hamming") <= max_hamming)
-        .select("i", "j", "hamming")
-    )
 
 
 # ----------------------------------------------------------------------

@@ -46,8 +46,9 @@ from kingsfoil_seed_data_ingestor_spark.plans.llm import (
     SQL_TOKENS,
     sql_closure,
     sql_cosine,
-    sql_dot,
     sql_hits,
+    sql_rhp_auto_bucket,
+    sql_rhp_bucket,
 )
 from kingsfoil_seed_data_ingestor_spark.operators import similarity as SIM
 from kingsfoil_seed_data_ingestor_spark.plans.relational import DEC, exact_double
@@ -932,19 +933,6 @@ SEM_TWIN_A, SEM_TWIN_B = 10_000_000, 20_000_000
 SEM_PLANES = SIM.rhp_sign_planes(SEM_N_PLANES, SEM_DIM)
 
 
-def _sql_sem_plane(plane: "list[float]") -> str:
-    return "[" + ", ".join(f"{v:.1f}" for v in plane) + "]"
-
-
-def _sql_sem_bucket(b: int) -> str:
-    terms = [
-        f"(CASE WHEN {sql_dot('embedding', _sql_sem_plane(SEM_PLANES[b * SEM_ROWS_PER_BAND + r]))}"
-        f" > 0 THEN {1 << r} ELSE 0 END)"
-        for r in range(SEM_ROWS_PER_BAND)
-    ]
-    return " + ".join(terms)
-
-
 _SQL_SEM_BASE = "list_transform(range(len(embedding)), i -> embedding[i+1]::DOUBLE)"
 _SQL_SEM_TWIN_A = (
     "list_transform(range(len(embedding)), i -> CASE WHEN i < 32 "
@@ -1012,7 +1000,7 @@ def _sql_sem_blocked_referee(cap: int) -> str:
     ),
     bits AS MATERIALIZED (
         SELECT vec_id, embedding,
-               {", ".join(f"{_sql_sem_bucket(b)} AS b{b}" for b in range(SEM_BANDS))}
+               {", ".join(f"{sql_rhp_bucket(SEM_PLANES, b, SEM_ROWS_PER_BAND)} AS b{b}" for b in range(SEM_BANDS))}
         FROM aug
     )
     SELECT a.vec_id AS i, b.vec_id AS j
@@ -1122,33 +1110,6 @@ def dedup_semantic_clusters_blocked(spark: SparkSession, sf_dir: str) -> DataFra
 SEM_AUTO_BANDS, SEM_AUTO_MAX_R, SEM_AUTO_TARGET = 8, 24, 16
 SEM_AUTO_PLANES = SIM.rhp_sign_planes(SEM_AUTO_BANDS * SEM_AUTO_MAX_R, SEM_DIM)
 
-_SQL_SEM_AUTO_R = "(SELECT r FROM params)"
-
-
-def _sql_signed_sum(col: str, plane: "list[float]") -> str:
-    """Flat signed sum equal to ``dot(col, plane)`` for a ±1 sign plane
-    — ``(0.0 + col[1] - col[2] + ...)``. Bit-identical to the Arrow
-    kernel's accumulation (``acc = 0; acc += v_i * p_i`` — multiplying
-    by ±1.0 IS identity/negation in IEEE754, and SQL's left-associative
-    ``+``/``-`` chain reproduces the fold order exactly), but ~200×
-    faster in DuckDB than the ``list_reduce`` lambda form: the 192-dot
-    bits CTE of the auto-banded oracle measured 215 s at sf0.001 with
-    lambdas vs ~1 s as flat vectorized arithmetic."""
-    terms = "".join(
-        f" {'+' if v > 0 else '-'} {col}[{i + 1}]" for i, v in enumerate(plane)
-    )
-    return f"(0.0{terms})"
-
-
-def _sql_sem_auto_bucket(b: int) -> str:
-    terms = [
-        f"(CASE WHEN {_sql_signed_sum('embedding', SEM_AUTO_PLANES[b * SEM_AUTO_MAX_R + j])}"
-        f" > 0 THEN {1 << j} ELSE 0 END)"
-        for j in range(SEM_AUTO_MAX_R)
-    ]
-    return f"(({' + '.join(terms)}) & ((CAST(1 AS BIGINT) << {_SQL_SEM_AUTO_R}) - 1))"
-
-
 @register(
     "dedup_semantic_clusters_auto",
     oracle=sql_closure(
@@ -1168,7 +1129,7 @@ def _sql_sem_auto_bucket(b: int) -> str:
     ),
     bits AS MATERIALIZED (
         SELECT vec_id, embedding,
-               {", ".join(f"{_sql_sem_auto_bucket(b)} AS b{b}" for b in range(SEM_AUTO_BANDS))}
+               {", ".join(f"{sql_rhp_auto_bucket(SEM_AUTO_PLANES, b, SEM_AUTO_MAX_R)} AS b{b}" for b in range(SEM_AUTO_BANDS))}
         FROM aug
     )
     SELECT a.vec_id AS i, b.vec_id AS j

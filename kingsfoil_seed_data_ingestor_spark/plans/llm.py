@@ -1384,6 +1384,45 @@ _SQL_SIMHASH64_PAIRS = f"""
     """
 
 
+def _simhash_pairs(
+    spark: SparkSession,
+    sf_dir: str,
+    scope: CacheScope,
+    n_blocks: int | None = None,
+    bits: int = 32,
+    max_bucket_size: int | None = None,
+) -> DataFrame:
+    """The hamming ≤ 3 pairs every SimHash query registers, from the
+    ``bits``-wide fingerprint keyed on :func:`simhash_subset_masks` of
+    ``n_blocks`` blocks — ``None`` sizes the block count from the
+    corpus (one cheap count job first). The query wrapper owns
+    ``scope`` because its result derives from the kernel's (the
+    _embed_dedup precedent; optimization round 11): an attach on the
+    kernel's inner frame dies with that frame once a ``.select`` wraps
+    it, silently unpersisting the banded table — both self-join sides
+    then recompute the per-token md5 fingerprint aggregation."""
+    docs = load(spark, sf_dir, "documents")
+    if n_blocks is None:
+        n_blocks = DD.simhash_blocks_for(docs.count())
+    hashes = DD.simhash64_table(docs) if bits == 64 else DD.simhash_table(docs)
+    masks = DD.simhash_subset_masks(n_blocks, bits=bits)
+    return (
+        DD.simhash_candidates(hashes, masks, max_bucket_size, scope)
+        .filter(F.col("hamming") <= 3)
+        .select("i", "j", F.col("hamming").cast("int").alias("hamming"))
+    )
+
+
+def _simhash_groups(pairs: DataFrame, scope: CacheScope) -> DataFrame:
+    """Close a pair set into (doc_id, group_id = smallest member)."""
+    pairs = scope.persist(pairs.select("i", "j"))
+    return scope.attach(
+        CC.connected_components(pairs, src="i", dst="j", scope=scope).select(
+            "doc_id", F.col("component_id").alias("group_id")
+        )
+    )
+
+
 @register(
     "dedup_simhash_auto",
     oracle=_SQL_SIMHASH_PAIRS,
@@ -1401,19 +1440,8 @@ _SQL_SIMHASH64_PAIRS = f"""
     "candidate exponent.",
 )
 def dedup_simhash_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # wrapper owns the scope because it derives from the operator's
-    # result (the _embed_dedup precedent; optimization round 11): an
-    # attach on the operator's inner frame dies with that frame once
-    # this .select wraps it, silently unpersisting the banded table —
-    # both self-join sides then recompute the per-token md5
-    # fingerprint aggregation (seen in the formatted plan as two full
-    # scan subtrees instead of InMemoryTableScans).
     scope = CacheScope()
-    return scope.attach(
-        DD.simhash_near_dups_auto(
-            load(spark, sf_dir, "documents"), max_hamming=3, scope=scope
-        ).select("i", "j", F.col("hamming").cast("int").alias("hamming"))
-    )
+    return scope.attach(_simhash_pairs(spark, sf_dir, scope))
 
 
 @register(
@@ -1435,19 +1463,8 @@ def dedup_simhash_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     "hamming graph via a recursive CTE.",
 )
 def dedup_simhash_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kingsfoil_seed_data_ingestor_spark.operators import components as CC
-
     scope = CacheScope()
-    pairs = scope.persist(
-        DD.simhash_near_dups_auto(
-            load(spark, sf_dir, "documents"), max_hamming=3, scope=scope
-        ).select("i", "j")
-    )
-    return scope.attach(
-        CC.connected_components(pairs, src="i", dst="j", scope=scope).select(
-            "doc_id", F.col("component_id").alias("group_id")
-        )
-    )
+    return _simhash_groups(_simhash_pairs(spark, sf_dir, scope), scope)
 
 
 @register(
@@ -1463,9 +1480,8 @@ def dedup_simhash_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     "candidate mass, so not the scale path).",
 )
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return DD.simhash_near_dups(load(spark, sf_dir, "documents"), max_hamming=3).select(
-        "i", "j", F.col("hamming").cast("int").alias("hamming")
-    )
+    scope = CacheScope()
+    return scope.attach(_simhash_pairs(spark, sf_dir, scope, n_blocks=4))
 
 
 @register(
@@ -1477,13 +1493,8 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the O(n²) definition over the same two-digest construction.",
 )
 def dedup_simhash64(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # wrapper owns the scope (see dedup_simhash_auto)
     scope = CacheScope()
-    return scope.attach(
-        DD.simhash64_near_dups(
-            load(spark, sf_dir, "documents"), max_hamming=3, scope=scope
-        ).select("i", "j", F.col("hamming").cast("int").alias("hamming"))
-    )
+    return scope.attach(_simhash_pairs(spark, sf_dir, scope, n_blocks=4, bits=64))
 
 
 @register(
@@ -1502,18 +1513,9 @@ def dedup_simhash64(spark: SparkSession, sf_dir: str) -> DataFrame:
     "over the brute-force 64-bit hamming graph.",
 )
 def dedup_simhash64_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kingsfoil_seed_data_ingestor_spark.operators import components as CC
-
     scope = CacheScope()
-    pairs = scope.persist(
-        DD.simhash64_near_dups(
-            load(spark, sf_dir, "documents"), max_hamming=3, scope=scope
-        ).select("i", "j")
-    )
-    return scope.attach(
-        CC.connected_components(pairs, src="i", dst="j", scope=scope).select(
-            "doc_id", F.col("component_id").alias("group_id")
-        )
+    return _simhash_groups(
+        _simhash_pairs(spark, sf_dir, scope, n_blocks=4, bits=64), scope
     )
 
 
@@ -1562,21 +1564,15 @@ _SQL_SIMHASH64_CAPPED_PAIRS = f"""
     "scale; see the measured SimHash tail slope in PERF_NOTES §r8). "
     "The oracle reproduces the banding, the cap, AND the survive-via-"
     "a-cold-band semantics brute-force, so the guard is hash-pinned. "
-    "The 16-bit bucket extraction is shift-type-invariant ((x >> s) & "
-    "0xFFFF reads the same field under arithmetic or logical shift), "
-    "keeping Spark's shiftrightunsigned and DuckDB's signed shift "
-    "bit-identical.",
+    "Spark keys each band on the fingerprint masked in place (x & "
+    "(0xFFFF << s), a signed long) where DuckDB extracts (x >> s) & "
+    "0xFFFF; within a band the two keys are in bijection, so bucket "
+    "sizes and collisions agree bit-for-bit.",
 )
 def dedup_simhash64_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # wrapper owns the scope (see dedup_simhash_auto)
     scope = CacheScope()
     return scope.attach(
-        DD.simhash64_near_dups(
-            load(spark, sf_dir, "documents"),
-            max_hamming=3,
-            max_bucket_size=SIMHASH64_BUCKET_CAP,
-            scope=scope,
-        ).select("i", "j", F.col("hamming").cast("int").alias("hamming"))
+        _simhash_pairs(spark, sf_dir, scope, 4, 64, SIMHASH64_BUCKET_CAP)
     )
 
 
@@ -1604,21 +1600,9 @@ def dedup_simhash64_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     "banding, the cap, and the closure brute-force.",
 )
 def dedup_simhash64_groups_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kingsfoil_seed_data_ingestor_spark.operators import components as CC
-
     scope = CacheScope()
-    pairs = scope.persist(
-        DD.simhash64_near_dups(
-            load(spark, sf_dir, "documents"),
-            max_hamming=3,
-            max_bucket_size=SIMHASH64_BUCKET_CAP,
-            scope=scope,
-        ).select("i", "j")
-    )
-    return scope.attach(
-        CC.connected_components(pairs, src="i", dst="j", scope=scope).select(
-            "doc_id", F.col("component_id").alias("group_id")
-        )
+    return _simhash_groups(
+        _simhash_pairs(spark, sf_dir, scope, 4, 64, SIMHASH64_BUCKET_CAP), scope
     )
 
 
@@ -2205,15 +2189,18 @@ RHP_PLANES = SIM.rhp_sign_planes(RHP_N_PLANES, RHP_DIM)
 _RHP_ROWS = RHP_N_PLANES // RHP_BANDS
 
 
-def _sql_plane(plane: "list[float]") -> str:
+def sql_plane(plane: "list[float]") -> str:
     return "[" + ", ".join(f"{v:.1f}" for v in plane) + "]"
 
 
-def _sql_rhp_bucket(b: int) -> str:
+def sql_rhp_bucket(planes: "list[list[float]]", b: int, rows: int) -> str:
+    """Band ``b``'s bucket of a fixed RHP family: bit r of the sign
+    word over planes ``b·rows + r`` of ``embedding`` (shared by the
+    fixed-band referees here and in plans/corpus.py)."""
     terms = [
-        f"(CASE WHEN {sql_dot('embedding', _sql_plane(RHP_PLANES[b * _RHP_ROWS + r]))}"
+        f"(CASE WHEN {sql_dot('embedding', sql_plane(planes[b * rows + r]))}"
         f" > 0 THEN {1 << r} ELSE 0 END)"
-        for r in range(_RHP_ROWS)
+        for r in range(rows)
     ]
     return " + ".join(terms)
 
@@ -2222,7 +2209,7 @@ def _sql_embed_rhp_referee(cap: int) -> str:
     return f"""
     WITH bits AS (
         SELECT vec_id, embedding,
-               {", ".join(f"{_sql_rhp_bucket(b)} AS b{b}" for b in range(RHP_BANDS))}
+               {", ".join(f"{sql_rhp_bucket(RHP_PLANES, b, _RHP_ROWS)} AS b{b}" for b in range(RHP_BANDS))}
         FROM {_sql_referee_src(cap)}
     ),
     cand AS (
@@ -2286,21 +2273,30 @@ RHP_AUTO_BANDS, RHP_AUTO_MAX_R, RHP_AUTO_TARGET = 8, 24, 16
 RHP_AUTO_PLANES = SIM.rhp_sign_planes(RHP_AUTO_BANDS * RHP_AUTO_MAX_R, RHP_DIM)
 
 
-def _sql_signed_sum(col: str, plane: "list[float]") -> str:
-    """±1-plane dot product as flat vectorized SQL arithmetic (same
-    form as plans/corpus.py — the list_reduce lambda form is ~200×
-    slower in DuckDB at this plane count)."""
+def sql_signed_sum(col: str, plane: "list[float]") -> str:
+    """Flat signed sum equal to ``dot(col, plane)`` for a ±1 sign plane
+    — ``(0.0 + col[1] - col[2] + ...)``. Bit-identical to the Arrow
+    kernel's accumulation (``acc = 0; acc += v_i * p_i`` — multiplying
+    by ±1.0 IS identity/negation in IEEE754, and SQL's left-associative
+    ``+``/``-`` chain reproduces the fold order exactly), but ~200×
+    faster in DuckDB than the ``list_reduce`` lambda form: the 192-dot
+    bits CTE of the auto-banded oracle measured 215 s at sf0.001 with
+    lambdas vs ~1 s as flat vectorized arithmetic."""
     terms = "".join(
         f" {'+' if v > 0 else '-'} {col}[{i + 1}]" for i, v in enumerate(plane)
     )
     return f"(0.0{terms})"
 
 
-def _sql_rhp_auto_bucket(b: int) -> str:
+def sql_rhp_auto_bucket(planes: "list[list[float]]", b: int, max_r: int) -> str:
+    """Band ``b``'s bucket of an N-aware RHP family: the ``max_r``-bit
+    sign word over planes ``b·max_r + j``, masked to the low r bits
+    read from the oracle's ``params`` CTE (shared with
+    plans/corpus.py)."""
     terms = [
-        f"(CASE WHEN {_sql_signed_sum('embedding', RHP_AUTO_PLANES[b * RHP_AUTO_MAX_R + j])}"
+        f"(CASE WHEN {sql_signed_sum('embedding', planes[b * max_r + j])}"
         f" > 0 THEN {1 << j} ELSE 0 END)"
-        for j in range(RHP_AUTO_MAX_R)
+        for j in range(max_r)
     ]
     return (
         f"(({' + '.join(terms)}) & ((CAST(1 AS BIGINT) << (SELECT r FROM params)) - 1))"
@@ -2318,7 +2314,7 @@ def _sql_rhp_auto_bucket(b: int) -> str:
     ),
     bits AS MATERIALIZED (
         SELECT vec_id, embedding,
-               {", ".join(f"{_sql_rhp_auto_bucket(b)} AS b{b}" for b in range(RHP_AUTO_BANDS))}
+               {", ".join(f"{sql_rhp_auto_bucket(RHP_AUTO_PLANES, b, RHP_AUTO_MAX_R)} AS b{b}" for b in range(RHP_AUTO_BANDS))}
         FROM embeddings
     ),
     cand AS (

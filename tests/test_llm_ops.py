@@ -176,29 +176,6 @@ def test_prune_perplexity_band_arithmetic(spark):
         assert got[lang].kept_min_lp <= got[lang].kept_max_lp
 
 
-def test_lsh_hot_bucket_guard(spark):
-    # three identical docs collide in every band (bucket size 3); the
-    # guard drops those buckets from candidate generation while pairs in
-    # small buckets survive
-    docs = spark.createDataFrame(
-        [(i, "the quick brown fox jumps over the lazy dog") for i in range(3)]
-        + [
-            (10, "a wholly different near dup text body here now"),
-            (11, "a wholly different near dup text body here today"),
-        ],
-        "doc_id long, text string",
-    )
-    sigs = DD.minhash_signatures(docs, 32, 3)
-    uncapped = {(r.i, r.j) for r in DD.lsh_candidate_pairs(sigs, 16, 2).collect()}
-    assert (0, 1) in uncapped and (10, 11) in uncapped
-    capped = {
-        (r.i, r.j)
-        for r in DD.lsh_candidate_pairs(sigs, 16, 2, max_bucket_size=2).collect()
-    }
-    assert (10, 11) in capped
-    assert not any(i < 3 and j < 3 for i, j in capped)
-
-
 def test_minhash_matches_bruteforce(corpus):
     # at threshold 0.7 the S-curve (32 bands x 4 rows) gives ~1-6e-5
     # recall for the (0,1) pair at J=0.714; AT the midpoint (J = 0.5,
@@ -221,7 +198,28 @@ def test_minhash_signatures_track_jaccard(corpus):
     assert agree02 < 0.2  # unrelated docs
 
 
-def test_simhash_near_dups(spark):
+def _sh_pairs(hashes, masks, max_hamming=3, max_bucket_size=None):
+    """{(i, j): hamming} of the kernel's pairs within ``max_hamming``."""
+    out = DD.simhash_candidates(hashes, masks, max_bucket_size)
+    return {
+        (r.i, r.j): r.hamming
+        for r in out.filter(F.col("hamming") <= max_hamming).collect()
+    }
+
+
+def _brute_pairs(hashes, max_hamming=3):
+    """The O(n²) definition over a (doc_id, fingerprint) table."""
+    fps = sorted(tuple(r) for r in hashes.collect())
+    out = {}
+    for a, (i, x) in enumerate(fps):
+        for j, y in fps[a + 1 :]:
+            d = bin((x ^ y) & (2**64 - 1)).count("1")
+            if d <= max_hamming:
+                out[(i, j)] = d
+    return out
+
+
+def test_simhash_pigeonhole_pairs(spark):
     # simhash needs real margins: ~60-token docs, one substitution apart
     base = " ".join(f"word{i}" for i in range(60))
     near = base.replace("word30", "changed")
@@ -229,37 +227,52 @@ def test_simhash_near_dups(spark):
     docs = spark.createDataFrame(
         [(0, base), (1, near), (2, base), (3, other)], "doc_id long, text string"
     )
-    hashes = {r.doc_id: r.simhash for r in DD.simhash_table(docs).collect()}
+    table = DD.simhash_table(docs)
+    hashes = {r.doc_id: r.simhash for r in table.collect()}
     ham = lambda a, b: bin(hashes[a] ^ hashes[b]).count("1")
     assert ham(0, 2) == 0  # identical token multisets
     assert ham(0, 3) > 8  # unrelated corpus far away
-    d = ham(0, 1)
-    pairs = {(r.i, r.j) for r in DD.simhash_near_dups(docs, max_hamming=max(d, 1)).collect()}
-    # banded candidate generation finds exactly what brute force would
-    brute = {
-        (i, j) for i in hashes for j in hashes if i < j and ham(i, j) <= max(d, 1)
-    }
-    assert (0, 2) in pairs and pairs == brute
+    d = max(ham(0, 1), 1)
+    # single-block pigeonhole banding finds exactly what brute force would
+    pairs = _sh_pairs(table, DD.simhash_subset_masks(d + 1, d), d)
+    assert (0, 2) in pairs and pairs == _brute_pairs(table, d)
 
 
 def test_simhash_auto_equals_fixed_at_every_block_count(spark):
     """VERDICT r10 #1: the N-aware multi-block banding is LOSSLESS —
-    for every block count B in the ladder, ``simhash_near_dups_auto``
-    must return exactly the fixed 4×8 family's pairs (both equal the
-    brute-force hamming ≤ 3 definition). This is the property that
-    lets the block count scale with the corpus while the registered
-    oracle stays the plain O(n²) SQL."""
+    for every block count B in the ladder (B = 4 is the fixed 4×8
+    family), the kernel's hamming ≤ 3 pairs equal the Python brute
+    force. This is the property that lets the block count scale with
+    the corpus while the registered oracle stays the plain O(n²) SQL."""
     base = " ".join(f"word{i}" for i in range(60))
     rows = [(0, base), (1, base.replace("word30", "changed")), (2, base)]
     rows += [(10 + k, " ".join(f"t{k}w{i}" for i in range(40))) for k in range(6)]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    fixed = {(r.i, r.j, r.hamming) for r in DD.simhash_near_dups(docs, 3).collect()}
+    table = DD.simhash_table(spark.createDataFrame(rows, "doc_id long, text string"))
+    brute = _brute_pairs(table)
+    assert (0, 2) in brute
     for n_blocks in (4, 5, 6, 7, 8):
-        auto = {
-            (r.i, r.j, r.hamming)
-            for r in DD.simhash_near_dups_auto(docs, 3, n_blocks=n_blocks).collect()
-        }
-        assert auto == fixed, (n_blocks, auto ^ fixed)
+        got = _sh_pairs(table, DD.simhash_subset_masks(n_blocks))
+        assert got == brute, (n_blocks, set(got.items()) ^ set(brute.items()))
+
+
+def test_simhash_candidates_64bit_top_block(spark):
+    """The 64-bit top-block mask covers the sign bit, so it must be a
+    valid signed-long literal: a pair of NEGATIVE fingerprints whose
+    only agreeing 16-bit block is the top one is still found, at
+    hamming 3 (one flipped bit in each of the three lower blocks)."""
+    masks = DD.simhash_subset_masks(4, bits=64)
+    assert masks[-1] == (0xFFFF << 48) - (1 << 64)
+    assert all(-(1 << 63) <= m < (1 << 63) for m in masks)
+    h = -0x123456789ABCDEF1
+    near = h ^ (1 << 3) ^ (1 << 20) ^ (1 << 40)
+    far = h ^ -(1 << 48)  # top 16 bits flipped: agrees on the low blocks only
+    table = spark.createDataFrame(
+        [(0, h), (1, near), (2, far), (3, 0x0F0F0F0F0F0F0F0F)],
+        "doc_id long, simhash64 long",
+    )
+    cands = {(r.i, r.j): r.hamming for r in DD.simhash_candidates(table, masks).collect()}
+    assert cands == {(0, 1): 3, (0, 2): 16}
+    assert _sh_pairs(table, masks) == _brute_pairs(table) == {(0, 1): 3}
 
 
 def test_simhash_blocks_for_ladder():
@@ -317,14 +330,14 @@ def test_simhash64_matches_independent_python_construction(spark):
     assert got == {i: _py_simhash64(t) for i, t in enumerate(texts)}
 
 
-def test_simhash64_near_dups_finds_identical_and_close(spark):
+def test_simhash64_candidates_find_identical_and_close(spark):
     base = "alpha beta gamma delta epsilon zeta eta theta " * 5
     docs = spark.createDataFrame(
         [(0, base), (1, base), (2, "totally different words entirely here now")],
         "doc_id long, text string",
     )
-    pairs = {(r.i, r.j): r.hamming for r in DD.simhash64_near_dups(docs, 3).collect()}
-    assert pairs == {(0, 1): 0}
+    table = DD.simhash64_table(docs)
+    assert _sh_pairs(table, DD.simhash_subset_masks(4, bits=64)) == {(0, 1): 0}
 
 
 def test_simhash64_hot_bucket_cap(spark):
@@ -336,14 +349,11 @@ def test_simhash64_hot_bucket_cap(spark):
     boiler = "lorem ipsum dolor sit amet " * 8
     pair = "alpha beta gamma delta epsilon zeta eta theta " * 5
     rows = [(i, boiler) for i in range(20)] + [(100, pair), (101, pair)]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    table = DD.simhash64_table(spark.createDataFrame(rows, "doc_id long, text string"))
+    masks = DD.simhash_subset_masks(4, bits=64)
 
-    uncapped = DD.simhash64_near_dups(docs, 3)
-    assert uncapped.count() == 20 * 19 // 2 + 1  # clique + the small pair
-
-    capped = DD.simhash64_near_dups(docs, 3, max_bucket_size=10)
-    got = {(r.i, r.j) for r in capped.collect()}
-    assert got == {(100, 101)}, got
+    assert len(_sh_pairs(table, masks)) == 20 * 19 // 2 + 1  # clique + the pair
+    assert _sh_pairs(table, masks, max_bucket_size=10) == {(100, 101): 0}
 
 
 # ----------------------------------------------------------------------

@@ -94,6 +94,12 @@ def test_simhash_band_join_shape(spark):
     f = facts(spark, "dedup_simhash64")
     assert f["smj"] == 0, "band self-join must stay hash/broadcast at this scale"
     assert f["python"] == 0
+    # the fixed-band referee runs the same kernel as the registered
+    # N-aware query: only the masks differ, so the plans shuffle alike
+    assert (
+        facts(spark, "dedup_simhash")["exchanges"]
+        == facts(spark, "dedup_simhash_auto")["exchanges"]
+    )
 
 
 # ----------------------------------------------------------------------

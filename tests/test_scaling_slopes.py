@@ -23,8 +23,10 @@ from pyspark.sql import functions as F
 from kingsfoil_seed_data_ingestor_spark.operators import components as CC
 from kingsfoil_seed_data_ingestor_spark.operators import similarity as SIM
 from kingsfoil_seed_data_ingestor_spark.operators import text_dedup as DD
+from kingsfoil_seed_data_ingestor_spark.operators.caching import CacheScope
 from kingsfoil_seed_data_ingestor_spark.operators.codebook import FROZEN_IVF_SF0_01
 from kingsfoil_seed_data_ingestor_spark.plans.tables import load
+from tools.scaling_curves import simhash_counts
 
 SF_A, SF_B = 0.03, 0.12  # 4× apart; docs 1500 → 6000, emb 600 → 2400
 RATIO = SF_B / SF_A
@@ -32,46 +34,6 @@ RATIO = SF_B / SF_A
 
 def _slope(a: float, b: float) -> float:
     return math.log(b / a) / math.log(RATIO)
-
-
-def _sh32_cand_pairs(sh, masks):
-    """(distinct band-collision candidates, true hamming ≤ 3 pairs) of
-    a 32-bit simhash table under the given subset masks."""
-    banded = sh.select(
-        "doc_id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(t).alias("band"),
-                        F.col("simhash").bitwiseAND(F.lit(m)).alias("key"),
-                    )
-                    for t, m in enumerate(masks)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", "simhash", "bk.band", "bk.key").persist()
-    cand = (
-        banded.alias("a")
-        .join(banded.alias("b"), ["band", "key"])
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("i"),
-            F.col("b.doc_id").alias("j"),
-            F.col("a.simhash").alias("h_i"),
-            F.col("b.simhash").alias("h_j"),
-        )
-        .distinct()
-        .persist()
-    )
-    n_cand = cand.count()
-    n_pairs = cand.filter(
-        F.bit_count(F.col("h_i").bitwiseXOR(F.col("h_j"))) <= 3
-    ).count()
-    cand.unpersist()
-    banded.unpersist()
-    return n_cand, n_pairs
 
 
 @pytest.fixture(scope="module")
@@ -99,14 +61,22 @@ def counts(spark, dirs):
         row["mh_cand"] = DD.lsh_candidate_pairs(
             sigs, bands=32, rows_per_band=4
         ).count()
-        row["sh64_pairs"] = DD.simhash64_near_dups(docs, max_hamming=3).count()
         from kingsfoil_seed_data_ingestor_spark.plans.llm import (
             SIMHASH64_BUCKET_CAP,
         )
 
-        row["sh64_capped_pairs"] = DD.simhash64_near_dups(
-            docs, max_hamming=3, max_bucket_size=SIMHASH64_BUCKET_CAP
-        ).count()
+        sh64 = DD.simhash64_table(docs)
+        masks64 = DD.simhash_subset_masks(4, bits=64)
+        for key, cap in (
+            ("sh64_pairs", None),
+            ("sh64_capped_pairs", SIMHASH64_BUCKET_CAP),
+        ):
+            with CacheScope() as scope:
+                row[key] = (
+                    DD.simhash_candidates(sh64, masks64, cap, scope)
+                    .filter(F.col("hamming") <= 3)
+                    .count()
+                )
 
         # the REGISTERED 32-bit family (dedup_simhash_auto, VERDICT r10
         # #1): candidate + true-pair + waste counts on the structured
@@ -123,7 +93,7 @@ def counts(spark, dirs):
             ("auto", DD.simhash_subset_masks(blocks)),
             ("fixed", DD.simhash_subset_masks(4)),
         ):
-            cand, pairs = _sh32_cand_pairs(sh, masks)
+            cand, pairs = simhash_counts(sh, masks)
             row[f"sh32_{label}_cand"] = cand
             row[f"sh32_{label}_pairs"] = pairs
             row[f"sh32_{label}_waste"] = cand - pairs
@@ -279,7 +249,7 @@ def test_simhash32_auto_random_mass_bounded_uniform(spark):
         blocks = DD.simhash_blocks_for(n)
         assert blocks == want_blocks, (n, blocks)
         sh = DD.simhash_table(docs).persist()
-        cand, pairs = _sh32_cand_pairs(sh, DD.simhash_subset_masks(blocks))
+        cand, pairs = simhash_counts(sh, DD.simhash_subset_masks(blocks))
         sh.unpersist()
         per_doc = (cand - pairs) / n
         assert per_doc <= 32.0, (
@@ -310,28 +280,16 @@ def test_simhash32_auto_exponent_artifact():
     answer — sh64_pairs exponent 1.51 in SCALING_r10) and the
     near-miss cluster collisions are data properties every lossless
     hamming ≤ 3 enumerator shares; the artifact records those too
-    (sh32_auto_cand/pairs/waste) for context. Reads the newest
-    SCALING_r*.json that carries the metric; skips (loudly) when none
-    does, so fresh checkouts stay green while any round that
-    regenerates curves re-arms the gate."""
-    import glob
+    (sh32_auto_cand/pairs/waste) for context. Reads SCALING_r11.json
+    by name and fails when the file or the metric is missing: a gate
+    never skips."""
     import json
-    import re
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    arts = sorted(
-        glob.glob(os.path.join(repo, "SCALING_r*.json")),
-        key=lambda p: int(re.search(r"r(\d+)", os.path.basename(p)).group(1)),
-    )
-    slope = None
-    for p in reversed(arts):
-        with open(p) as fh:
-            data = json.load(fh)
-        slope = data.get("slopes", {}).get("sh32_uniform_waste")
-        if slope is not None:
-            break
-    if slope is None:
-        pytest.skip("no SCALING artifact carries sh32_uniform_waste yet")
+    with open(os.path.join(repo, "SCALING_r11.json")) as fh:
+        slopes = json.load(fh)["slopes"]
+    assert "sh32_uniform_waste" in slopes, "SCALING_r11.json lacks sh32_uniform_waste"
+    slope = slopes["sh32_uniform_waste"]
     assert slope <= 1.3, (
         f"sh32 auto uniform-corpus random-mass exponent {slope} (want ≤ 1.3)"
     )

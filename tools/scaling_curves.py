@@ -65,6 +65,7 @@ from kingsfoil_seed_data_ingestor_spark import plans  # noqa: F401
 from kingsfoil_seed_data_ingestor_spark.operators import components as CC
 from kingsfoil_seed_data_ingestor_spark.operators import similarity as SIM
 from kingsfoil_seed_data_ingestor_spark.operators import text_dedup as DD
+from kingsfoil_seed_data_ingestor_spark.operators.caching import CacheScope
 from kingsfoil_seed_data_ingestor_spark.operators.codebook import FROZEN_IVF_SF0_01
 from kingsfoil_seed_data_ingestor_spark.plans.core import QUERIES
 from kingsfoil_seed_data_ingestor_spark.plans.tables import load
@@ -101,6 +102,14 @@ def timed(fn, reps: int = 2) -> float:
     return round(best, 4)
 
 
+def simhash_counts(sh, masks) -> tuple[int, int]:
+    """(distinct band-collision candidates, true hamming ≤ 3 pairs) of
+    a simhash table under the given subset masks."""
+    with CacheScope() as scope:
+        cand = scope.persist(DD.simhash_candidates(sh, masks, scope=scope))
+        return cand.count(), cand.filter(F.col("hamming") <= 3).count()
+
+
 def candidate_counts(spark, sf_dir: str) -> dict:
     out: dict = {}
     docs = load(spark, sf_dir, "documents")
@@ -115,7 +124,9 @@ def candidate_counts(spark, sf_dir: str) -> dict:
     mh_pairs = mh_pairs.persist()
     out["mh_verified"] = mh_pairs.count()
 
-    out["sh64_pairs"] = DD.simhash64_near_dups(docs, max_hamming=3).count()
+    out["sh64_pairs"] = simhash_counts(
+        DD.simhash64_table(docs), DD.simhash_subset_masks(4, bits=64)
+    )[1]
 
     # the REGISTERED N-aware 32-bit family (dedup_simhash_auto, r11):
     # candidate mass of the multi-block pigeonhole banding — the
@@ -123,49 +134,13 @@ def candidate_counts(spark, sf_dir: str) -> dict:
     blocks = DD.simhash_blocks_for(out["n_docs"])
     out["sh32_auto_blocks"] = blocks
     masks = DD.simhash_subset_masks(blocks)
-    sh_banded = (
-        DD.simhash_table(docs)
-        .select(
-            "doc_id",
-            "simhash",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(t).alias("band"),
-                            F.col("simhash").bitwiseAND(F.lit(m)).alias("key"),
-                        )
-                        for t, m in enumerate(masks)
-                    ]
-                )
-            ).alias("bk"),
-        )
-        .select("doc_id", "simhash", "bk.band", "bk.key")
-        .persist()
-    )
-    sh_cand = (
-        sh_banded.alias("a")
-        .join(sh_banded.alias("b"), ["band", "key"])
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("i"),
-            F.col("b.doc_id").alias("j"),
-            F.col("a.simhash").alias("h_i"),
-            F.col("b.simhash").alias("h_j"),
-        )
-        .distinct()
-        .persist()
-    )
-    out["sh32_auto_cand"] = sh_cand.count()
     # true hamming<=3 pairs are the ANSWER (a data property — this
     # corpus plants near-dup clusters, answer exponent ~1.5); the
     # algorithmic claim is about the WASTE term the ladder bounds
-    out["sh32_auto_pairs"] = sh_cand.filter(
-        F.bit_count(F.col("h_i").bitwiseXOR(F.col("h_j"))) <= 3
-    ).count()
-    out["sh32_auto_waste"] = out["sh32_auto_cand"] - out["sh32_auto_pairs"]
-    sh_cand.unpersist()
-    sh_banded.unpersist()
+    cand, pairs = simhash_counts(DD.simhash_table(docs), masks)
+    out["sh32_auto_cand"] = cand
+    out["sh32_auto_pairs"] = pairs
+    out["sh32_auto_waste"] = cand - pairs
 
     # the ladder's own claim — random collision mass ≤ ~target/doc — is
     # only measurable where randomness is the only term: a structure-
@@ -175,47 +150,8 @@ def candidate_counts(spark, sf_dir: str) -> dict:
     from tools.gen_scaling_data import uniform_docs
 
     udocs = uniform_docs(spark, out["n_docs"])
-    ush = DD.simhash_table(udocs).persist()
-    u_banded = (
-        ush.select(
-            "doc_id",
-            "simhash",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(t).alias("band"),
-                            F.col("simhash").bitwiseAND(F.lit(m)).alias("key"),
-                        )
-                        for t, m in enumerate(masks)
-                    ]
-                )
-            ).alias("bk"),
-        )
-        .select("doc_id", "simhash", "bk.band", "bk.key")
-        .persist()
-    )
-    u_cand = (
-        u_banded.alias("a")
-        .join(u_banded.alias("b"), ["band", "key"])
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("i"),
-            F.col("b.doc_id").alias("j"),
-            F.col("a.simhash").alias("h_i"),
-            F.col("b.simhash").alias("h_j"),
-        )
-        .distinct()
-        .persist()
-    )
-    uc = u_cand.count()
-    up = u_cand.filter(
-        F.bit_count(F.col("h_i").bitwiseXOR(F.col("h_j"))) <= 3
-    ).count()
-    out["sh32_uniform_waste"] = uc - up
-    u_cand.unpersist()
-    u_banded.unpersist()
-    ush.unpersist()
+    cand, pairs = simhash_counts(DD.simhash_table(udocs), masks)
+    out["sh32_uniform_waste"] = cand - pairs
 
     # star components over the MinHash edge set: rounds must stay flat
     stats: dict = {}

@@ -31,6 +31,19 @@ from pyspark.sql import functions as F
 _RANK = "__kf_rank"
 
 
+def split_first(
+    keyed: DataFrame, keys: list[str] | tuple[str, ...], order_col: str
+) -> tuple[DataFrame, DataFrame]:
+    """Split rows whose key columns are all non-null into (first
+    occurrence per key, later occurrences): one ranking window, one
+    shuffle on the key columns. Both keep the input schema."""
+    w = Window.partitionBy(*[F.col(k) for k in keys]).orderBy(F.col(order_col))
+    ranked = keyed.withColumn(_RANK, F.row_number().over(w))
+    first = ranked.filter(F.col(_RANK) == 1).drop(_RANK)
+    later = ranked.filter(F.col(_RANK) > 1).drop(_RANK)
+    return first, later
+
+
 def keep_first(
     df: DataFrame, keys: list[str] | tuple[str, ...], order_col: str
 ) -> tuple[DataFrame, DataFrame]:
@@ -41,11 +54,5 @@ def keep_first(
     counts). Both preserve the input schema.
     """
     any_key_null = reduce(or_, [F.col(k).isNull() for k in keys])
-    exempt = df.filter(any_key_null)
-    keyed = df.filter(~any_key_null)
-
-    w = Window.partitionBy(*[F.col(k) for k in keys]).orderBy(F.col(order_col))
-    ranked = keyed.withColumn(_RANK, F.row_number().over(w))
-    first = ranked.filter(F.col(_RANK) == 1).drop(_RANK)
-    dups = ranked.filter(F.col(_RANK) > 1).drop(_RANK)
-    return first.unionByName(exempt), dups
+    first, dups = split_first(df.filter(~any_key_null), keys, order_col)
+    return first.unionByName(df.filter(any_key_null)), dups

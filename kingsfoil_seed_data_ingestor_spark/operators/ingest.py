@@ -5,9 +5,13 @@ The reference processes uploads row-at-a-time in Python
 try/except + dict accumulation). Here the same semantics compile into a
 single columnar plan that Catalyst whole-stage-codegens:
 
-    raw grid (row_idx) → slice rows after header → drop ≥80 %-empty rows
-    → one SELECT of typed column expressions → validity split
-    (quarantine) → keep-first dedup → stats aggregates
+    raw grid (row_idx) → slice rows after header → one SELECT of typed
+    column expressions + the ≥80 %-empty flag → validity split
+    (quarantine) → keep-first dedup
+
+The counters ride on that plan as two Observations, so the one action
+that writes ``records`` also computes every count and null stat, and
+the keep-first shuffle runs once per upload.
 
 Every transform expression is total (unparsable → NULL, never throws),
 so the reference's per-row try/except has nothing left to catch — the
@@ -16,15 +20,17 @@ row-level error channel is the quarantine split (SURVEY.md §7.4 risk 1).
 
 from __future__ import annotations
 
+import uuid
 from dataclasses import dataclass, field
 from functools import reduce
 from operator import and_
 
-from pyspark.sql import Column, DataFrame
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from kingsfoil_seed_data_ingestor_spark.functions import transforms as X
-from kingsfoil_seed_data_ingestor_spark.operators.dedup import keep_first
+from kingsfoil_seed_data_ingestor_spark.operators.dedup import split_first
 from kingsfoil_seed_data_ingestor_spark.registry import Source
 from kingsfoil_seed_data_ingestor_spark.sources.headers import HeaderDetection
 
@@ -36,6 +42,7 @@ EMPTY_ROW_THRESHOLD = 0.8
 EMPTYISH = ("", "nan", "NaN", "None")
 
 ROW_NUMBER = "row_number"  # 1-indexed original file position
+_EMPTY = "__empty"
 
 
 def empty_row_predicate(raw_cols: list[str], threshold: float = EMPTY_ROW_THRESHOLD) -> Column:
@@ -114,62 +121,71 @@ def typed_projection(source: Source, column_index: dict[str, int]) -> list[Colum
 
 @dataclass
 class IngestPlan:
-    """The split outputs of one ingest, all lazy DataFrames."""
+    """The split outputs of one ingest, all lazy DataFrames.
 
-    #: valid, deduplicated, typed records (what gets written)
+    ``records`` is observed: the first action that reads it whole (in
+    ``ingest_file``, the staging write) also counts every row's
+    disposition and the per-column nulls. ``quarantine``, ``duplicates``
+    and the sample head derive from an unobserved copy of the same plan,
+    so actions on them never fill the counters with partial counts.
+    """
+
+    #: valid, deduplicated, typed records (what gets written); its first
+    #: action fills the counters, so it must read every row (a write or
+    #: a collect, never a ``first``/``take``)
     records: DataFrame
     #: rows failing key validation, with row_number + error message
     quarantine: DataFrame
     #: duplicate rows dropped by keep-first dedup
     duplicates: DataFrame
-    #: counts + per-column null stats, computed on demand
-    _source: Source = field(repr=False, default=None)
-    #: every data-region row tagged with its disposition
-    #: (empty | quarantined | first | dup) — the single-pass stats input
-    _annotated: DataFrame = field(repr=False, default=None)
+    _source: Source = field(repr=False)
+    #: every valid row, first and later occurrences (the sample-head input)
+    _valid: DataFrame = field(repr=False)
+    #: processed / quarantined / skipped counts + per-column valid-row nulls
+    _region_counts: Observation = field(repr=False)
+    #: the inserted count, observed on the kept rows
+    _kept_count: Observation = field(repr=False)
+
+    def _counted(self) -> bool:
+        """Whether an action on ``records`` has filled the counters.
+
+        Observations are filled by a query-execution listener, so an
+        action that has already returned may not show yet: drain the
+        listener bus before answering.
+        """
+        done = self._kept_count._jo.future()
+        if not done.isCompleted():
+            try:
+                self.records.sparkSession.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+            except Py4JJavaError:  # bus still busy: a second pass is merely redundant
+                pass
+        return done.isCompleted()
 
     def stats(self, sample_rows: int = 100) -> dict:
         """Materialize the reference's result dict
         (``ingestor.py:617-648``): counts, null stats, samples.
 
-        ONE aggregation job over the disposition-tagged region computes
-        every counter and per-column null stat (previously 5 separate
-        actions); the bounded head collect for sample values — a UI
-        nicety in the reference, first 3 values per column — is the
-        only second action.
+        Every counter and null stat comes from the Observations the
+        first action on ``records`` filled; when none has run yet, one
+        pass of ``records`` through Spark's ``noop`` sink fills them.
+        ``duplicates_skipped`` is ``processed - inserted``. The bounded
+        head for sample values — a UI nicety in the reference, first 3
+        values per column — is the only job of its own: the first
+        ``sample_rows`` valid rows by file position, with no window and
+        no shuffle.
         """
+        if not self._counted():
+            self.records.write.format("noop").mode("overwrite").save()
+        counts = self._region_counts.get
+        inserted = self._kept_count.get["__inserted"]
+        records_processed = counts["__processed"]
+
         cols = [c.internal_name for c in self._source.columns]
-        is_valid = F.col("__status").isin("first", "dup")
-
-        def n(status: str) -> Column:
-            return F.coalesce(
-                F.sum(F.when(F.col("__status") == status, 1)), F.lit(0)
-            )
-
-        agg = self._annotated.agg(
-            F.coalesce(F.sum(F.when(is_valid, 1)), F.lit(0)).alias("__processed"),
-            n("first").alias("__inserted"),
-            n("dup").alias("__dups"),
-            n("quarantined").alias("__quar"),
-            n("empty").alias("__skipped"),
-            *[
-                F.count(F.when(is_valid & F.col(c).isNull(), 1)).alias(c)
-                for c in cols
-            ],
-        ).first()
-        records_processed = int(agg["__processed"])
-        inserted = int(agg["__inserted"])
-
-        head = (
-            self._annotated.filter(is_valid)
-            .orderBy(ROW_NUMBER)
-            .limit(sample_rows)
-            .collect()
-        )
+        head = self._valid.orderBy(ROW_NUMBER).limit(sample_rows).collect()
         column_stats = {}
         for c in cols:
             samples = [str(r[c])[:50] for r in head if r[c] is not None][:3]
-            nulls = agg[c]
+            nulls = counts[c]
             column_stats[c] = {
                 "null_count": nulls,
                 "sample_values": samples,
@@ -181,9 +197,9 @@ class IngestPlan:
             "success": inserted > 0,
             "records_processed": records_processed,
             "records_inserted": inserted,
-            "duplicates_skipped": int(agg["__dups"]),
-            "records_quarantined": int(agg["__quar"]),
-            "rows_skipped": int(agg["__skipped"]),
+            "duplicates_skipped": records_processed - inserted,
+            "records_quarantined": counts["__quarantined"],
+            "rows_skipped": counts["__skipped"],
             "column_stats": column_stats,
         }
 
@@ -196,64 +212,62 @@ def build_ingest_plan(
     ``raw`` is the all-string grid with ``row_idx`` (sources layer);
     ``detection`` the resolved header. Mirrors the driver flow of
     reference ``ingest_data`` (``ingestor.py:504-615``) as one plan.
+
+    The typed projection and the empty-row flag are built once, as
+    ``typed_region``. The keep-first window runs over valid rows only:
+    every key is non-null there, so ``keep_first``'s null-key branch
+    would be empty and is left out. No union sits above the observed
+    node, so each action executes it exactly once.
     """
     raw_cols = [c for c in raw.columns if c.startswith("_c")]
-    region = raw.filter(F.col("row_idx") > detection.header_row_index)
-    data = region.filter(~empty_row_predicate(raw_cols))
-
-    typed = data.select(
+    typed_region = raw.filter(F.col("row_idx") > detection.header_row_index).select(
         (F.col("row_idx") + 1).alias(ROW_NUMBER),  # 1-indexed file position
+        empty_row_predicate(raw_cols).alias(_EMPTY),
         *typed_projection(source, detection.column_index),
     )
 
     keys = list(source.unique_keys)
     key_ok = reduce(and_, [F.col(k).isNotNull() for k in keys])
-    valid = typed.filter(key_ok)
-    quarantine = typed.filter(~key_ok).withColumn(
-        "error",
-        F.concat(
-            F.lit("Row "),
-            F.col(ROW_NUMBER).cast("string"),
-            F.lit(": Missing required key column"),
-        ),
-    )
+    is_valid = ~F.col(_EMPTY) & key_ok
+    is_quarantined = ~F.col(_EMPTY) & ~key_ok
 
-    kept, dups = keep_first(valid, keys, order_col=ROW_NUMBER)
+    def count_if(cond: Column, name: str) -> Column:
+        return F.count(F.when(cond, 1)).alias(name)
 
-    # ------- disposition-tagged region for single-pass stats -------
-    # Every region row lands in exactly one bucket; one aggregate over
-    # the union yields all counters + null stats. The dedup-rank window
-    # runs over valid rows only (all keys non-null there — the null-key
-    # hot-partition hazard keep_first guards against cannot arise).
-    typed_region = region.select(
-        (F.col("row_idx") + 1).alias(ROW_NUMBER),
-        empty_row_predicate(raw_cols).alias("__empty"),
-        *typed_projection(source, detection.column_index),
+    tag = uuid.uuid4().hex  # one session may run concurrent ingests
+    region_counts = Observation(f"ingest-region-{tag}")
+    kept_count = Observation(f"ingest-kept-{tag}")
+    observed = typed_region.observe(
+        region_counts,
+        count_if(is_valid, "__processed"),
+        count_if(is_quarantined, "__quarantined"),
+        count_if(F.col(_EMPTY), "__skipped"),
+        *[count_if(is_valid & F.col(c.internal_name).isNull(), c.internal_name)
+          for c in source.columns],
     )
-    data_t = typed_region.filter(~F.col("__empty")).drop("__empty")
-    empty_t = (
-        typed_region.filter(F.col("__empty"))
-        .drop("__empty")
-        .withColumn("__status", F.lit("empty"))
-    )
-    quar_t = data_t.filter(~key_ok).withColumn("__status", F.lit("quarantined"))
-    from pyspark.sql import Window
+    kept, _ = split_first(observed.filter(is_valid).drop(_EMPTY), keys, ROW_NUMBER)
+    records = kept.observe(kept_count, F.count(F.lit(1)).alias("__inserted"))
 
-    w = Window.partitionBy(*keys).orderBy(F.col(ROW_NUMBER))
-    valid_t = (
-        data_t.filter(key_ok)
-        .withColumn("__rank", F.row_number().over(w))
+    valid = typed_region.filter(is_valid).drop(_EMPTY)
+    _, dups = split_first(valid, keys, ROW_NUMBER)
+    quarantine = (
+        typed_region.filter(is_quarantined)
+        .drop(_EMPTY)
         .withColumn(
-            "__status", F.when(F.col("__rank") == 1, "first").otherwise("dup")
+            "error",
+            F.concat(
+                F.lit("Row "),
+                F.col(ROW_NUMBER).cast("string"),
+                F.lit(": Missing required key column"),
+            ),
         )
-        .drop("__rank")
     )
-    annotated = empty_t.unionByName(quar_t).unionByName(valid_t)
-
     return IngestPlan(
-        records=kept,
+        records=records,
         quarantine=quarantine,
         duplicates=dups,
         _source=source,
-        _annotated=annotated,
+        _valid=valid,
+        _region_counts=region_counts,
+        _kept_count=kept_count,
     )

@@ -150,7 +150,7 @@ def _prepare(
     ]
     if existing_current:
         prev = int(max(existing_current, key=lambda v: v["imported_at"] or 0)["record_count"])
-    report = validate_grid(grid.df, source, detection, previous_record_count=prev)
+    report = validate_grid(grid, source, detection, previous_record_count=prev)
     if not report.passed:
         return {
             "success": False,

@@ -10,10 +10,13 @@ Driver-cheap checks run between header detection and the ingest job:
   per NUMERIC/INTEGER/DATE column (reference ``validator.py:90-175``).
 
 The type scan is the one piece that touches data; instead of the
-reference's nested Python loops it is **one aggregate** over a
-``limit(sample)`` slice: per column, ``min_by(row, unparsable)`` finds
-the first bad value, so the job stays a single cheap pass regardless of
-column count.
+reference's nested Python loops it is **one aggregate** over the rows
+with ``row_idx`` in ``(header, header + sample]`` (``row_idx`` is
+contiguous, so a filter picks the first data rows with no sort): per
+column, the minimum ``(row, value)`` among unparsable cells is the first
+bad value, so the job stays a single cheap pass regardless of column
+count. The data-row count comes from the grid's ``n_rows``, which the
+read already counted, so it costs no job.
 """
 
 from __future__ import annotations
@@ -26,6 +29,7 @@ from pyspark.sql import functions as F
 from kingsfoil_seed_data_ingestor_spark.functions import transforms as X
 from kingsfoil_seed_data_ingestor_spark.registry import Source
 from kingsfoil_seed_data_ingestor_spark.sources.headers import HeaderDetection
+from kingsfoil_seed_data_ingestor_spark.sources.readers import Grid
 
 #: reference ``app/config.py:25-26``
 ALLOWED_EXTENSIONS = ("csv", "xlsx", "xls", "txt")
@@ -57,7 +61,7 @@ class ValidationReport:
 
 
 def validate_grid(
-    raw: DataFrame,
+    grid: Grid,
     source: Source,
     detection: HeaderDetection,
     previous_record_count: int | None = None,
@@ -66,8 +70,7 @@ def validate_grid(
     """Run the post-header-detection validation pass."""
     report = ValidationReport(passed=True)
 
-    region = raw.filter(F.col("row_idx") > detection.header_row_index)
-    data_rows = region.count()
+    data_rows = max(grid.n_rows - detection.header_row_index - 1, 0)
     report.record_count = data_rows
     if data_rows <= 0:
         report.errors.append("No data rows found after header row")
@@ -86,21 +89,21 @@ def validate_grid(
                 f"({previous_record_count:,}). This may be expected for a new version."
             )
 
-    report.warnings.extend(_sample_type_warnings(region, source, detection, sample_rows))
+    report.warnings.extend(_sample_type_warnings(grid.df, source, detection, sample_rows))
     return report
 
 
 def _sample_type_warnings(
-    region: DataFrame, source: Source, detection: HeaderDetection, sample_rows: int
+    df: DataFrame, source: Source, detection: HeaderDetection, sample_rows: int
 ) -> list[str]:
     """First offending raw value per numeric/date column in the sample.
 
-    One aggregate over the head slice: for each checked column an
-    ``unparsable`` flag expression, then ``min_by((row, value), row
-    when unparsable)`` — the earliest failure, matching the reference's
-    first-hit-then-stop loop.
+    One aggregate over the first ``sample_rows`` data rows: for each
+    checked column an ``unparsable`` flag expression, then the minimum
+    ``(row, value)`` struct among flagged cells — the earliest failure,
+    matching the reference's first-hit-then-stop loop.
     """
-    checks: list[tuple[str, str]] = []  # (internal_name, kind)
+    checks: list[tuple[str, str, int]] = []  # (internal_name, kind, column)
     for name, idx in detection.column_index.items():
         dtype = source.column(name).data_type
         if dtype in ("NUMERIC", "INTEGER"):
@@ -110,7 +113,8 @@ def _sample_type_warnings(
     if not checks:
         return []
 
-    sample = region.orderBy("row_idx").limit(sample_rows)
+    h = detection.header_row_index
+    sample = df.filter(F.col("row_idx").between(h + 1, h + sample_rows))
     aggs = []
     for name, kind, idx in checks:
         raw = F.col(f"_c{idx}")

@@ -62,6 +62,7 @@ class Grid:
     encoding: str
     delimiter: str
     n_cols: int
+    n_rows: int  # rows in df, counted by the row-index job
     head_rows: list[list[str]]  # first rows, stripped, for header scan
 
     def row_as_list(self, row_index: int) -> list[str]:
@@ -128,12 +129,14 @@ def _string_schema(n_cols: int) -> T.StructType:
 
 def _spark_csv(
     spark: SparkSession, path: str, encoding: str, delimiter: str, n_cols: int
-) -> DataFrame:
+) -> tuple[DataFrame, int]:
+    """The row-indexed all-string frame and its row count."""
     # One SENTINEL column beyond the inferred width: a row with more
     # than n_cols fields populates it (the "" empty-cell value included,
     # since nullValue points at an unused control char), while short or
     # exact rows leave it NULL — a distributed, quote-aware wider-row
-    # detector with no second parse.
+    # detector. The row-index job counts the rows that populate it, so
+    # the check needs no job of its own.
     df = (
         spark.read.schema(_string_schema(n_cols + 1))
         .options(
@@ -149,8 +152,8 @@ def _spark_csv(
         .csv(path)
     )
     sentinel = f"_c{n_cols}"
-    wide = df.filter(F.col(sentinel).isNotNull()).select(sentinel).limit(1).collect()
-    if wide:
+    indexed, n_rows, n_wide = with_row_idx(df, flag=F.col(sentinel).isNotNull())
+    if n_wide:
         raise ValueError(
             f"Malformed file: found a row wider than the inferred "
             f"{n_cols}-column schema (head-sample inference saw at most "
@@ -159,7 +162,7 @@ def _spark_csv(
         )
     # Ragged short rows arrive as nulls under PERMISSIVE; restore the
     # "empty cell is ''" invariant columnar-side (no Python involved).
-    return df.drop(sentinel).na.fill("")
+    return indexed.drop(sentinel).na.fill(""), n_rows
 
 
 _XLSX_NS = "{http://schemas.openxmlformats.org/spreadsheetml/2006/main}"
@@ -258,9 +261,9 @@ def read_grid(
 ) -> Grid:
     """Read any supported file as a distributed all-string grid.
 
-    Returns the frame with a contiguous ``row_idx`` plus the driver-side
-    head sample used for header detection (reference parse_file,
-    ``file_parser.py:11-70``).
+    Returns the frame with a contiguous ``row_idx``, its row count
+    (``n_rows``) and the driver-side head sample used for header
+    detection (reference parse_file, ``file_parser.py:11-70``).
     """
     path = Path(file_path)
     if not path.exists():
@@ -278,12 +281,14 @@ def read_grid(
             [str(v).strip() for v in row]
             for row in df.limit(head_rows).collect()
         ]
+        indexed, n_rows, _ = with_row_idx(df)
         return Grid(
-            df=with_row_idx(df),
+            df=indexed,
             extension=ext,
             encoding="utf-8",
             delimiter=",",
             n_cols=len(df.columns),
+            n_rows=n_rows,
             head_rows=head,
         )
 
@@ -291,12 +296,13 @@ def read_grid(
     delimiter = _sniff_delimiter(str(path), encoding) if ext == ".txt" else ","
     head = _read_head(str(path), encoding, delimiter, head_rows)
     n_cols = max((len(r) for r in head), default=1)
-    df = _spark_csv(spark, str(path), encoding, delimiter, n_cols)
+    df, n_rows = _spark_csv(spark, str(path), encoding, delimiter, n_cols)
     return Grid(
-        df=with_row_idx(df),
+        df=df,
         extension=ext,
         encoding=encoding,
         delimiter=delimiter,
         n_cols=n_cols,
+        n_rows=n_rows,
         head_rows=head,
     )

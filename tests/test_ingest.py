@@ -8,6 +8,7 @@ from reference ``tests/test_ingestor.py``.
 from __future__ import annotations
 
 import datetime
+import threading
 
 import pytest
 from pyspark.sql import functions as F
@@ -226,6 +227,136 @@ def test_ptp_golden_ingest(spark, tmp_path):
 
 
 # ----------------------------------------------------------------------
+# the full ingest_file result dict, pinned for the golden fixtures
+# ----------------------------------------------------------------------
+
+
+def _column_stats(**cols) -> dict:
+    """``name=(null_count, null_percentage, sample_values)`` → the
+    result dict's ``column_stats`` layout."""
+    return {
+        name: {"null_count": n, "sample_values": samples, "null_percentage": pct}
+        for name, (n, pct, samples) in cols.items()
+    }
+
+
+#: PFS_RVU_CSV: counts over the 4 valid rows (the duplicate included, so
+#: it shows in the sample values); the null-key and empty rows are not
+#: part of the column stats
+PFS_RVU_STATS = {
+    "success": True,
+    "records_processed": 4,
+    "records_inserted": 3,
+    "duplicates_skipped": 1,
+    "records_quarantined": 1,
+    "rows_skipped": 1,
+    "column_stats": _column_stats(
+        hcpcs_code=(0, 0.0, ["00100", "00100", "0012A"]),
+        modifier=(0, 0.0, ["TC", "TC", "26"]),
+        description=(0, 0.0, ["Anesth, salivary gland", "Duplicate of first row", "Weird code"]),
+        status_code=(0, 0.0, ["A", "A", "A"]),
+        work_rvu=(1, 25.0, ["1234.56", "1.16", "2.5"]),
+        non_fac_pe_rvu=(1, 25.0, ["0.31", "0.31", "0.5"]),
+        facility_pe_rvu=(0, 0.0, ["0.31", "0.31", "0.5"]),
+        mp_rvu=(0, 0.0, ["0.08", "0.08", "0.1"]),
+        non_fac_total=(0, 0.0, ["1.55", "1.55", "3.1"]),
+        facility_total=(0, 0.0, ["1.55", "1.55", "3.1"]),
+        pctc_indicator=(0, 0.0, ["0", "0", "1"]),
+        global_days=(0, 0.0, ["XXX", "XXX", "010"]),
+        conversion_factor=(0, 0.0, ["32.7442", "32.7442", "32.7442"]),
+    ),
+}
+
+PTP_STATS = {
+    "success": True,
+    "records_processed": 3,
+    "records_inserted": 3,
+    "duplicates_skipped": 0,
+    "records_quarantined": 0,
+    "rows_skipped": 0,
+    "column_stats": _column_stats(
+        comprehensive_code=(0, 0.0, ["00100", "00100", "0213T"]),
+        component_code=(0, 0.0, ["00102", "00103", "0216T"]),
+        modifier_indicator=(0, 0.0, ["1", "0", "9"]),
+        effective_date=(0, 0.0, ["2024-01-01", "2023-04-01", "2024-01-01"]),
+        deletion_date=(2, 66.67, ["2024-03-31"]),
+        rationale=(0, 0.0, ["Standard preparation", "Mutually exclusive", "CCI editing"]),
+        prior_1996_flag=(0, 0.0, ["True", "False", "False"]),
+    ),
+}
+
+
+@pytest.mark.parametrize(
+    "source_code,name,text,expected",
+    [
+        ("PFS_RVU", "pfs_rvu.csv", PFS_RVU_CSV, PFS_RVU_STATS),
+        ("NCCI_PTP", "ptp.txt", PTP_TXT, PTP_STATS),
+    ],
+)
+def test_ingest_file_result_dict_pinned(spark, store, tmp_path, source_code, name, text, expected):
+    p = tmp_path / name
+    p.write_text(text)
+    result = ingest_file(spark, store, source_code, str(p), "2024-Q1")
+    assert isinstance(result.pop("version_id"), int)
+    assert result == {**expected, "warnings": [], "appended_part": False}
+
+
+@pytest.mark.parametrize(
+    "first_action",
+    ["none", "records_collect", "quarantine_first_duplicates_count", "stage_records"],
+)
+def test_plan_stats_independent_of_earlier_actions(spark, store, tmp_path, first_action):
+    """``stats()`` returns the same dict whatever ran on the plan before
+    it, and never waits on an action that is not coming."""
+    p = tmp_path / "pfs_rvu.csv"
+    p.write_text(PFS_RVU_CSV)
+    grid = read_grid(spark, str(p))
+    source = get_source("PFS_RVU")
+    plan = build_ingest_plan(grid.df, source, detect_header(grid.head_rows, source.header_mappings))
+    if first_action == "records_collect":
+        assert len(plan.records.collect()) == 3
+    elif first_action == "quarantine_first_duplicates_count":
+        assert plan.quarantine.first().row_number == 8
+        assert plan.duplicates.count() == 1
+    elif first_action == "stage_records":
+        store.stage_records(source, 1, plan.records)
+
+    out = {}
+    worker = threading.Thread(target=lambda: out.update(stats=plan.stats()), daemon=True)
+    worker.start()
+    worker.join(timeout=300)
+    assert not worker.is_alive(), "plan.stats() blocked"
+    assert out["stats"] == PFS_RVU_STATS
+
+
+#: Spark jobs one CSV ``ingest_file`` runs: the row-index job (which
+#: also checks for over-wide rows), the type-sample aggregate, the
+#: staging write (which also fills every counter) and the sample head,
+#: each with its stage and broadcast jobs. Before the counters moved onto
+#: the staging write an upload ran 18: it re-parsed and re-typed the
+#: grid for a separate wide-row probe, the data-row count and two stats
+#: actions.
+INGEST_JOBS_MAX = 10
+
+
+def test_ingest_file_job_count_gate(spark, store, tmp_path):
+    p = tmp_path / "pfs_rvu.csv"
+    p.write_text(PFS_RVU_CSV)
+    sc = spark.sparkContext
+    group = f"ingest-jobs-{tmp_path.name}"
+    sc.setJobGroup(group, "ingest_file job count")
+    try:
+        result = ingest_file(spark, store, "PFS_RVU", str(p), "2024-Q1")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert result["records_inserted"] == 3
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job ids arrive via the listener bus
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < n_jobs <= INGEST_JOBS_MAX, n_jobs
+
+
+# ----------------------------------------------------------------------
 # validation gates
 # ----------------------------------------------------------------------
 
@@ -245,7 +376,7 @@ def test_validate_no_data_rows(spark, tmp_path):
     grid = read_grid(spark, str(p))
     source = get_source("PFS_RVU")
     det = detect_header(grid.head_rows, source.header_mappings)
-    report = validate_grid(grid.df, source, det)
+    report = validate_grid(grid, source, det)
     assert not report.passed
     assert "No data rows" in report.errors[0]
 
@@ -256,10 +387,52 @@ def test_validate_row_count_sanity_and_type_warnings(spark, tmp_path):
     grid = read_grid(spark, str(p))
     source = get_source("PFS_RVU")
     det = detect_header(grid.head_rows, source.header_mappings)
-    report = validate_grid(grid.df, source, det, previous_record_count=100)
+    report = validate_grid(grid, source, det, previous_record_count=100)
     assert report.passed  # warnings only
     assert any("much lower than previous" in w for w in report.warnings)
     assert any("non-numeric value 'not-a-number'" in w for w in report.warnings)
+
+
+@pytest.fixture
+def small_splits(spark):
+    """Split every scanned file into ~2 KiB partitions."""
+    key = "spark.sql.files.maxPartitionBytes"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "2048")
+    yield
+    spark.conf.set(key, before)
+
+
+def test_validate_multi_partition_grid(spark, tmp_path, small_splits):
+    # two preamble rows, the header, then 250 data rows; data row k sits
+    # at row_idx 2 + k. The type sample is data rows 1..100: the bad
+    # WORK RVU at data row 100 is reported, the bad MP RVU at 101 is not
+    rows = ["Preamble,,", ",,", "HCPCS,WORK RVU,MP RVU"]
+    for k in range(1, 251):
+        work = "bad100" if k == 100 else "1.5"
+        mp = "bad101" if k == 101 else "0.5"
+        rows.append(f"C{k:04d},{work},{mp}")
+    p = tmp_path / "multi.csv"
+    p.write_text("\n".join(rows) + "\n")
+    grid = read_grid(spark, str(p))
+    assert grid.df.rdd.getNumPartitions() > 1
+    assert grid.n_rows == 253
+    source = get_source("PFS_RVU")
+    det = detect_header(grid.head_rows, source.header_mappings)
+    assert det.header_row_index == 2
+
+    report = validate_grid(grid, source, det)
+    assert report.passed and report.record_count == 250
+    assert report.warnings == [
+        "Column 'work_rvu' contains non-numeric value 'bad100' at row 103"
+    ]
+
+
+def test_wider_row_in_a_later_partition_fails_loudly(spark, tmp_path, small_splits):
+    p = tmp_path / "wide.csv"
+    p.write_text("\n".join(["A,B"] + ["x,y"] * 1000 + ["too,many,fields"]) + "\n")
+    with pytest.raises(ValueError, match="wider than the inferred"):
+        read_grid(spark, str(p))
 
 
 # ----------------------------------------------------------------------

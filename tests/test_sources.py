@@ -449,7 +449,8 @@ def test_row_idx_contiguous_and_file_ordered(spark, tmp_path):
 
 def test_with_row_idx_on_repartitioned_frame(spark):
     df = spark.range(1000).selectExpr("CAST(id AS STRING) AS _c0").repartition(7)
-    out = with_row_idx(df)
+    out, n_rows, n_flagged = with_row_idx(df)
+    assert (n_rows, n_flagged) == (1000, 0)
     got = sorted(r.row_idx for r in out.select("row_idx").collect())
     assert got == list(range(1000))
 

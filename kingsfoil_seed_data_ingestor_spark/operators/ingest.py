@@ -170,9 +170,12 @@ class IngestPlan:
         pass of ``records`` through Spark's ``noop`` sink fills them.
         ``duplicates_skipped`` is ``processed - inserted``. The bounded
         head for sample values — a UI nicety in the reference, first 3
-        values per column — is the only job of its own: the first
-        ``sample_rows`` valid rows by file position, with no window and
-        no shuffle.
+        values per column — is the only job of its own: a ``limit`` of
+        ``sample_rows`` valid rows, sorted by file position on the
+        driver. The valid rows have no exchange above the scan, so the
+        collect reads partitions in file order (the invariant
+        ``row_idx`` rests on) and stops as soon as it holds the head,
+        instead of typing every row for a global top-N.
         """
         if not self._counted():
             self.records.write.format("noop").mode("overwrite").save()
@@ -181,7 +184,9 @@ class IngestPlan:
         records_processed = counts["__processed"]
 
         cols = [c.internal_name for c in self._source.columns]
-        head = self._valid.orderBy(ROW_NUMBER).limit(sample_rows).collect()
+        head = sorted(
+            self._valid.limit(sample_rows).collect(), key=lambda r: r[ROW_NUMBER]
+        )
         column_stats = {}
         for c in cols:
             samples = [str(r[c])[:50] for r in head if r[c] is not None][:3]

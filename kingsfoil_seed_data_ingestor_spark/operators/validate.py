@@ -9,14 +9,19 @@ Driver-cheap checks run between header detection and the ingest job:
 * sampled type validation — first 100 data rows, first offending value
   per NUMERIC/INTEGER/DATE column (reference ``validator.py:90-175``).
 
-The type scan is the one piece that touches data; instead of the
-reference's nested Python loops it is **one aggregate** over the rows
+The type scan is the one piece that touches data. Instead of the
+reference's nested Python loops it is **one bounded collect**: the rows
 with ``row_idx`` in ``(header, header + sample]`` (``row_idx`` is
-contiguous, so a filter picks the first data rows with no sort): per
-column, the minimum ``(row, value)`` among unparsable cells is the first
-bad value, so the job stays a single cheap pass regardless of column
-count. The data-row count comes from the grid's ``n_rows``, which the
-read already counted, so it costs no job.
+contiguous, so a filter picks the first data rows with no sort), each
+projected to one ``(row, value)`` probe per checked column that is set
+only on an unparsable cell, under a ``limit`` of the sample size. The
+grid has no exchange, so the collect reads partitions in file order and
+stops once it holds the whole sample; the driver then takes, per
+column, the probe with the smallest row — the first bad value. The
+filter alone fixes which rows are in the sample, so the result is exact
+whatever order the scan returns them in. The data-row count comes from
+the grid's ``n_rows``, which the read already counted, so it costs no
+job.
 """
 
 from __future__ import annotations
@@ -98,9 +103,10 @@ def _sample_type_warnings(
 ) -> list[str]:
     """First offending raw value per numeric/date column in the sample.
 
-    One aggregate over the first ``sample_rows`` data rows: for each
-    checked column an ``unparsable`` flag expression, then the minimum
-    ``(row, value)`` struct among flagged cells — the earliest failure,
+    One bounded collect of the first ``sample_rows`` data rows, each
+    reduced to one probe per checked column — a ``(row, value)`` struct
+    on an unparsable cell, null otherwise — then the probe with the
+    smallest row per column on the driver: the earliest failure,
     matching the reference's first-hit-then-stop loop.
     """
     checks: list[tuple[str, str, int]] = []  # (internal_name, kind, column)
@@ -114,21 +120,25 @@ def _sample_type_warnings(
         return []
 
     h = detection.header_row_index
-    sample = df.filter(F.col("row_idx").between(h + 1, h + sample_rows))
-    aggs = []
+    probes = []
     for name, kind, idx in checks:
         raw = F.col(f"_c{idx}")
         trimmed = X.strip_ws(raw)
         parsed = X.parse_numeric(raw) if kind == "numeric" else X.parse_date(raw)
         bad = trimmed.isNotNull() & ~trimmed.isin(*_SKIP) & parsed.isNull()
-        probe = F.when(bad, F.struct(F.col("row_idx"), trimmed.alias("val")))
-        aggs.append(F.min(probe).alias(name))
-    firsts = sample.agg(*aggs).first()
+        probes.append(F.when(bad, F.struct(F.col("row_idx"), trimmed.alias("val"))).alias(name))
+    sample = (
+        df.filter(F.col("row_idx").between(h + 1, h + sample_rows))
+        .select(*probes)
+        .limit(sample_rows)
+        .collect()
+    )
 
     warnings = []
     for name, kind, _ in checks:
-        hit = firsts[name]
-        if hit is not None:
+        hits = [r[name] for r in sample if r[name] is not None]
+        if hits:
+            hit = min(hits, key=lambda p: p["row_idx"])
             noun = "non-numeric value" if kind == "numeric" else "unparseable date"
             warnings.append(
                 f"Column '{name}' contains {noun} '{hit['val']}' at row {hit['row_idx'] + 1}"

@@ -824,7 +824,12 @@ class VersionStore:
         (legacy) partitions fall back to their directory listing (and
         are never cached — the directory is their only truth); an empty
         table keeps the plain directory read so schema/partition-column
-        inference behaves exactly as before. Plan-build cost under the
+        inference behaves exactly as before. A populated table is read
+        with the source's declared ``spark_schema`` (every fact file is
+        written from ``typed_projection``, which has exactly that
+        schema), so a read runs no footer-inference job; the
+        ``data_version_id`` partition column is still discovered from
+        the paths. Plan-build cost under the
         lock is one scandir + one stat per partition via the root
         manifest cache (see above) — flat in version count in manifest
         PARSES, never held across job execution. A transactional table
@@ -865,7 +870,9 @@ class VersionStore:
             if not files:
                 return self.spark.read.parquet(str(root))
             return (
-                self.spark.read.option("basePath", str(root)).parquet(*files)
+                self.spark.read.schema(source.spark_schema)
+                .option("basePath", str(root))
+                .parquet(*files)
             )
 
     def view_as_of(

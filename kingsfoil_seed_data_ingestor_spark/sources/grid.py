@@ -35,11 +35,14 @@ def with_row_idx(
     2. One tiny aggregate job computes each partition's row count,
        minimum mid and flagged-row count; the driver turns counts into
        cumulative offsets and sums them into ``n_rows``/``n_flagged``.
-    3. ``row_idx = offset[pid] + (mid - min_mid[pid])`` via a broadcast
-       join on the (―tiny) per-partition stats table.
+    3. ``row_idx = shift[pid] + mid`` with ``shift[pid] = offset[pid] -
+       min_mid[pid]``, read from a literal array in the plan: no join,
+       so later actions on the frame run no extra job and a ``limit``
+       over it stops after the first partitions it needs.
 
-    Cost at 100 TB: one extra pass that reduces to ~#partitions rows,
-    then a broadcast hash join — no shuffle of the data itself.
+    The array holds one long per input partition. An upload is capped
+    at ``MAX_UPLOAD_MB`` (100 MB), so that is tens of entries; a frame
+    with many thousands of partitions would want a join instead.
     """
     if flag is None:
         flag = F.lit(False)
@@ -55,16 +58,14 @@ def with_row_idx(
         )
         .collect()
     )
+    # empty partitions are absent from stats; their slots are never read
+    shift = [0] * (max((r["_pid"] for r in stats), default=0) + 1)
     offset = 0
-    rows = []
     for r in sorted(stats, key=lambda r: r["_pid"]):
-        rows.append((r["_pid"], offset, r["_min_mid"]))
+        shift[r["_pid"]] = offset - r["_min_mid"]
         offset += r["_cnt"]
-    spark = df.sparkSession
-    offsets = spark.createDataFrame(rows, "_pid int, _offset long, _min_mid long")
-    indexed = (
-        tagged.join(F.broadcast(offsets), "_pid")
-        .withColumn(col_name, F.col("_offset") + (F.col("_mid") - F.col("_min_mid")))
-        .drop("_pid", "_mid", "_offset", "_min_mid")
-    )
+    shifts = F.array(*[F.lit(s).cast("long") for s in shift])
+    indexed = tagged.withColumn(
+        col_name, F.element_at(shifts, F.col("_pid") + 1) + F.col("_mid")
+    ).drop("_pid", "_mid")
     return indexed, offset, sum(r["_flagged"] for r in stats)

@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from kingsfoil_seed_data_ingestor_spark.sources.grid import with_row_idx
+from kingsfoil_seed_data_ingestor_spark.sources.grid import ROW_IDX, with_row_idx
 
 #: encodings tried in order for .csv (reference file_parser.py:79)
 CSV_ENCODINGS = ("utf-8", "latin-1", "cp1252")
@@ -62,7 +62,7 @@ class Grid:
     encoding: str
     delimiter: str
     n_cols: int
-    n_rows: int  # rows in df, counted by the row-index job
+    n_rows: int  # rows in df: the row-index job's count, or the parsed Excel rows
     head_rows: list[list[str]]  # first rows, stripped, for header scan
 
     def row_as_list(self, row_index: int) -> list[str]:
@@ -228,32 +228,34 @@ def _parse_xlsx_rows(path: str) -> list[list[str]]:
         return rows
 
 
-def _read_xlsx_grid(spark: SparkSession, path: str) -> DataFrame:
-    """Driver-side xlsx read (uploads are capped at 100 MB in the
-    reference, ``app/config.py:22``) → parallelized all-string frame.
-    Uses the built-in SpreadsheetML parser — no external Excel engine
-    needed; a DataSourceV2 is the cluster-scale alternative."""
-    rows = _parse_xlsx_rows(path)
-    n_cols = max((len(r) for r in rows), default=1) or 1
-    norm = [tuple(r + [""] * (n_cols - len(r))) for r in rows]
-    return spark.createDataFrame(norm or [tuple([""] * n_cols)], schema=_string_schema(n_cols))
-
-
-def _read_xls_grid(spark: SparkSession, path: str) -> DataFrame:
+def _read_xls_rows(path: str) -> list[list[str]]:
     """Driver-side legacy ``.xls`` read via the vendored BIFF8 parser
     (``sources/biff.py`` — OLE2 container + BIFF8 records, both public
-    formats) → parallelized all-string frame. Mirrors the reference's
-    xlrd path (``app/services/file_parser.py:53-61``) under the same
-    grid contract; no external Excel engine needed. Unsupported
-    variants (pre-BIFF8, encrypted) raise a loud ValueError rather
-    than misparse."""
+    formats). Mirrors the reference's xlrd path
+    (``app/services/file_parser.py:53-61``) under the same grid
+    contract; no external Excel engine needed. Unsupported variants
+    (pre-BIFF8, encrypted) raise a loud ValueError rather than
+    misparse."""
     from kingsfoil_seed_data_ingestor_spark.sources.biff import parse_xls_grid
 
     with open(path, "rb") as fh:
-        rows = parse_xls_grid(fh.read())
+        return parse_xls_grid(fh.read())
+
+
+def _local_grid(
+    spark: SparkSession, rows: list[list[str]]
+) -> tuple[DataFrame, list[list[str]]]:
+    """Driver-parsed rows (uploads are capped at 100 MB in the
+    reference, ``app/config.py:22``) → the parallelized all-string frame
+    with ``row_idx`` attached on the driver, plus the padded rows themselves
+    (an empty sheet becomes one empty row). The driver already holds
+    every row in file order, so neither the index nor the head needs a
+    Spark job."""
     n_cols = max((len(r) for r in rows), default=1) or 1
-    norm = [tuple(r + [""] * (n_cols - len(r))) for r in rows]
-    return spark.createDataFrame(norm or [tuple([""] * n_cols)], schema=_string_schema(n_cols))
+    norm = [r + [""] * (n_cols - len(r)) for r in rows] or [[""] * n_cols]
+    schema = _string_schema(n_cols).add(ROW_IDX, T.LongType(), False)
+    df = spark.createDataFrame([(*r, i) for i, r in enumerate(norm)], schema=schema)
+    return df, norm
 
 
 def read_grid(
@@ -273,23 +275,16 @@ def read_grid(
         raise ValueError(f"Unsupported file type: {ext}")
 
     if ext in (".xlsx", ".xls"):
-        if ext == ".xlsx":
-            df = _read_xlsx_grid(spark, str(path))
-        else:  # legacy binary .xls via the vendored BIFF8 parser
-            df = _read_xls_grid(spark, str(path))
-        head = [
-            [str(v).strip() for v in row]
-            for row in df.limit(head_rows).collect()
-        ]
-        indexed, n_rows, _ = with_row_idx(df)
+        read_rows = _parse_xlsx_rows if ext == ".xlsx" else _read_xls_rows
+        df, rows = _local_grid(spark, read_rows(str(path)))
         return Grid(
-            df=indexed,
+            df=df,
             extension=ext,
             encoding="utf-8",
             delimiter=",",
-            n_cols=len(df.columns),
-            n_rows=n_rows,
-            head_rows=head,
+            n_cols=len(rows[0]),
+            n_rows=len(rows),
+            head_rows=[[v.strip() for v in r] for r in rows[:head_rows]],
         )
 
     encoding = _probe_encoding(str(path))

@@ -329,31 +329,115 @@ def test_plan_stats_independent_of_earlier_actions(spark, store, tmp_path, first
     assert out["stats"] == PFS_RVU_STATS
 
 
+def _group_jobs(spark, group: str, action) -> tuple[object, list[int]]:
+    """Run ``action()`` under job group ``group``; its result and the
+    ids of the Spark jobs it ran."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job ids arrive via the listener bus
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
 #: Spark jobs one CSV ``ingest_file`` runs: the row-index job (which
-#: also checks for over-wide rows), the type-sample aggregate, the
-#: staging write (which also fills every counter) and the sample head,
-#: each with its stage and broadcast jobs. Before the counters moved onto
-#: the staging write an upload ran 18: it re-parsed and re-typed the
-#: grid for a separate wide-row probe, the data-row count and two stats
-#: actions.
-INGEST_JOBS_MAX = 10
+#: also checks for over-wide rows), the type sample (a ``limit`` that
+#: stops after the first partitions), the staging write (which also
+#: fills every counter; its keep-first shuffle adds a map-stage job)
+#: and the sample head. An upload ran 18 before the counters moved onto
+#: the staging write, and 10 while the row index was a broadcast join
+#: that added a job to every later action on the grid.
+INGEST_JOBS_MAX = 6
+#: an Excel upload is parsed and row-indexed on the driver, so it has no
+#: row-index job, but its rows are parallelized over the default number
+#: of slices: for the 5-row fixture the first slice holds only the
+#: header, and the type sample and the sample head each take a second
+#: job to reach the data rows. It ran 12 before the driver kept the
+#: parsed head and the row index.
+XLSX_INGEST_JOBS_MAX = 6
+#: a ``current_view(...).count()``: the scan-and-count job and its AQE
+#: map stage; the view reads with the declared schema, so there is no
+#: ``parquet at`` footer-inference job
+VIEW_COUNT_JOBS_MAX = 2
 
 
 def test_ingest_file_job_count_gate(spark, store, tmp_path):
     p = tmp_path / "pfs_rvu.csv"
     p.write_text(PFS_RVU_CSV)
-    sc = spark.sparkContext
-    group = f"ingest-jobs-{tmp_path.name}"
-    sc.setJobGroup(group, "ingest_file job count")
-    try:
-        result = ingest_file(spark, store, "PFS_RVU", str(p), "2024-Q1")
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
+    result, jobs = _group_jobs(
+        spark,
+        f"ingest-jobs-{tmp_path.name}",
+        lambda: ingest_file(spark, store, "PFS_RVU", str(p), "2024-Q1"),
+    )
     assert result["records_inserted"] == 3
-    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job ids arrive via the listener bus
-    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-    assert 0 < n_jobs <= INGEST_JOBS_MAX, n_jobs
+    assert 0 < len(jobs) <= INGEST_JOBS_MAX, len(jobs)
+
+
+def test_xlsx_ingest_file_job_count_gate(spark, store, tmp_path):
+    from tests.test_sources import write_xlsx
+
+    p = tmp_path / "mue.xlsx"
+    write_xlsx(p, [line.split(",") for line in MUE_CSV.strip().splitlines()])
+    result, jobs = _group_jobs(
+        spark,
+        f"xlsx-jobs-{tmp_path.name}",
+        lambda: ingest_file(spark, store, "NCCI_MUE_PRAC", str(p), "2024-Q1"),
+    )
+    assert result["records_inserted"] == 4
+    assert 0 < len(jobs) <= XLSX_INGEST_JOBS_MAX, len(jobs)
+
+
+def test_current_view_count_job_gate(spark, store, tmp_path):
+    p = tmp_path / "pfs_rvu.csv"
+    p.write_text(PFS_RVU_CSV)
+    ingest_file(spark, store, "PFS_RVU", str(p), "2024-Q1")
+    n, jobs = _group_jobs(
+        spark,
+        f"view-jobs-{tmp_path.name}",
+        lambda: store.current_view(get_source("PFS_RVU")).count(),
+    )
+    assert n == 3
+    assert 0 < len(jobs) <= VIEW_COUNT_JOBS_MAX, len(jobs)
+    tracker = spark.sparkContext.statusTracker()
+    stages = [
+        tracker.getStageInfo(sid).name
+        for jid in jobs
+        for sid in tracker.getJobInfo(jid).stageIds
+    ]
+    assert not [s for s in stages if s.startswith("parquet at")], stages
+
+
+def test_fact_schema_pinned_to_registry(spark, store):
+    """Every source's typed projection has exactly the declared
+    ``spark_schema`` — views read fact files with that schema instead of
+    inferring it — and a current view adds only ``data_version_id``."""
+    from pyspark.sql import types as T
+
+    from kingsfoil_seed_data_ingestor_spark.operators.ingest import typed_projection
+    from kingsfoil_seed_data_ingestor_spark.registry import SOURCES
+
+    for code, source in SOURCES.items():
+        names = [c.internal_name for c in source.columns]
+        raw = spark.createDataFrame(
+            [tuple("1" for _ in names)], ", ".join(f"_c{i} string" for i in range(len(names)))
+        )
+        full = raw.select(*typed_projection(source, {n: i for i, n in enumerate(names)}))
+        assert full.schema == source.spark_schema, code
+        assert raw.select(*typed_projection(source, {})).schema == source.spark_schema, code
+
+        vid = store.create_version(code, "2024-Q1")
+        store.write_records(source, vid, full)
+        store.complete_version(vid, 1)
+        store.mark_current(vid)
+        view = store.current_view(source)
+        assert view.schema == T.StructType(
+            list(source.spark_schema.fields)
+            + [T.StructField("data_version_id", T.IntegerType(), True)]
+        ), code
+        assert view.count() == 1, code
 
 
 # ----------------------------------------------------------------------
@@ -426,6 +510,69 @@ def test_validate_multi_partition_grid(spark, tmp_path, small_splits):
     assert report.warnings == [
         "Column 'work_rvu' contains non-numeric value 'bad100' at row 103"
     ]
+
+
+def test_bounded_samples_exact_across_partitions(spark, tmp_path, small_splits):
+    """The stats head and the type sample stop after the first
+    partitions they need; what they return equals a full ``orderBy`` /
+    ``agg`` over every row. Partition 0 holds fewer than 100 valid rows
+    and the first bad WORK RVU sits in partition 1."""
+    from kingsfoil_seed_data_ingestor_spark.functions import transforms as X
+    from kingsfoil_seed_data_ingestor_spark.operators.ingest import ROW_NUMBER
+    from kingsfoil_seed_data_ingestor_spark.operators.validate import _SKIP
+
+    pad = "x" * 40  # ~60-byte rows: a 2 KiB split holds ~35 of them
+    rows = ["Fee schedule,,,,", "HCPCS,MOD,DESCRIPTION,WORK RVU,MP RVU"]
+    for k in range(1, 301):
+        code = "" if k % 7 == 0 else f"C{k:04d}"  # a quarantined row every 7th
+        work = "bad" + str(k) if k in (50, 51, 140) else f"{k}.5"
+        mp = "0.25" if k > 60 else ""  # MP RVU samples only after partition 0
+        rows.append(f"{code},26,{pad}{k},{work},{mp}")
+    rows[20] = ",,,,"  # a skipped empty row
+    p = tmp_path / "spread.csv"
+    p.write_text("\n".join(rows) + "\n")
+
+    grid = read_grid(spark, str(p))
+    source = get_source("PFS_RVU")
+    det = detect_header(grid.head_rows, source.header_mappings)
+    assert det.header_row_index == 1
+    layout = {
+        r.row_idx: r.pid
+        for r in grid.df.select("row_idx", F.spark_partition_id().alias("pid")).collect()
+    }
+    assert max(layout.values()) >= 2
+    bad_idx = 1 + 50  # data row k sits at row_idx 1 + k
+    assert layout[bad_idx] == 1
+    valid_in_p0 = sum(
+        1 for k in range(1, 301) if layout[1 + k] == 0 and k % 7 and 1 + k != 20
+    )
+    assert 0 < valid_in_p0 < 100
+
+    # type sample: the first bad value, against a min() over the sample
+    report = validate_grid(grid, source, det)
+    h = det.header_row_index
+    raw = F.col(f"_c{det.column_index['work_rvu']}")
+    trimmed = X.strip_ws(raw)
+    bad = trimmed.isNotNull() & ~trimmed.isin(*_SKIP) & X.parse_numeric(raw).isNull()
+    first_bad = (
+        grid.df.filter(F.col("row_idx").between(h + 1, h + 100))
+        .agg(F.min(F.when(bad, F.struct("row_idx", trimmed.alias("val")))))
+        .first()[0]
+    )
+    assert (first_bad.row_idx, first_bad.val) == (bad_idx, "bad50")
+    assert report.warnings == [
+        f"Column 'work_rvu' contains non-numeric value 'bad50' at row {bad_idx + 1}"
+    ]
+
+    # stats head: sample values from the first 100 valid rows in file order
+    plan = build_ingest_plan(grid.df, source, det)
+    stats = plan.stats()
+    head = plan._valid.orderBy(ROW_NUMBER).limit(100).collect()
+    for c in source.columns:
+        name = c.internal_name
+        expected = [str(r[name])[:50] for r in head if r[name] is not None][:3]
+        assert stats["column_stats"][name]["sample_values"] == expected, name
+    assert stats["column_stats"]["mp_rvu"]["sample_values"] == ["0.25"] * 3
 
 
 def test_wider_row_in_a_later_partition_fails_loudly(spark, tmp_path, small_splits):

@@ -10,6 +10,7 @@ from __future__ import annotations
 from pathlib import Path
 
 import pytest
+from pyspark.sql import functions as F
 
 from kingsfoil_seed_data_ingestor_spark.sources import (
     detect_header,
@@ -453,6 +454,24 @@ def test_with_row_idx_on_repartitioned_frame(spark):
     assert (n_rows, n_flagged) == (1000, 0)
     got = sorted(r.row_idx for r in out.select("row_idx").collect())
     assert got == list(range(1000))
+
+
+def test_with_row_idx_on_zero_rows(spark):
+    df = spark.createDataFrame([], "_c0 string")
+    out, n_rows, n_flagged = with_row_idx(df, flag=F.col("_c0").isNotNull())
+    assert (n_rows, n_flagged) == (0, 0)
+    assert out.columns == ["_c0", "row_idx"]
+    assert out.collect() == []
+
+
+def test_with_row_idx_skips_empty_partitions(spark):
+    # five range partitions of four ids; only partitions 0 and 3 keep
+    # rows, so 1, 2 (between them) and 4 (after the last) are empty
+    df = spark.range(0, 20, numPartitions=5).filter("id < 4 OR id BETWEEN 12 AND 15")
+    out, n_rows, n_flagged = with_row_idx(df, flag=F.col("id") % 2 == 0)
+    assert (n_rows, n_flagged) == (8, 4)
+    got = [(r.id, r.row_idx) for r in out.orderBy("row_idx").collect()]
+    assert got == list(zip([0, 1, 2, 3, 12, 13, 14, 15], range(8)))
 
 
 # ----------------------------------------------------------------------

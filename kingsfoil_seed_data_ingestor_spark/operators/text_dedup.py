@@ -7,7 +7,10 @@ table (``doc_id long, text string``):
 * **exact** — hash-groupBy on a normalized-content fingerprint; one
   shuffle on the 128-bit key, no row ever compared to another.
 * **n-gram Jaccard** — inverted index: explode distinct shingles, self
-  join on shingle, count shared per pair. Never materializes the n²
+  join on shingle, count shared per pair. Shingles are built inside
+  each document's row after one ``(doc_id, text)`` repartition, so the
+  text is shuffled once and the exploded postings never are
+  (``shingle_hash_table``). Never materializes the n²
   pair space — only pairs sharing ≥1 shingle exist, and a document
   frequency cap drops degenerate stop-shingles that would otherwise
   create quadratic hot keys at 100 TB.
@@ -64,36 +67,51 @@ def exact_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text")
 # ----------------------------------------------------------------------
 
 
+def _ngram_starts(
+    docs: DataFrame, n: int, id_col: str, text_col: str
+) -> tuple[DataFrame, list]:
+    """``(doc_id, toks, pos, tok)`` rows, one per n-gram start, plus the
+    n token columns of the gram starting there.
+
+    The narrow ``(doc_id, text)`` rows are repartitioned by ``doc_id``
+    ONCE — text compresses well and is far smaller than its exploded
+    postings — and every n-gram is then built inside its own row:
+    ``posexplode`` keeps the token array beside each position, and the
+    following tokens are ``element_at(toks, pos + k + 1)``, filtered to
+    ``pos + n <= size(toks)`` first, so no index is ever out of range
+    (ANSI). No ``Window``, no sort, no posting exchange, all codegen'd
+    (no lambda), and the output stays hash-partitioned by ``doc_id`` for
+    the ``distinct`` or per-document aggregate that follows.
+    """
+    text = docs.select(
+        F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
+    ).repartition("doc_id")
+    starts = (
+        text.select("doc_id", TX.tokens(F.col("text")).alias("toks"))
+        .select("doc_id", "toks", F.posexplode("toks").alias("pos", "tok"))
+        .filter(F.col("pos") + n <= F.size("toks"))
+    )
+    parts = [F.col("tok")] + [
+        F.element_at("toks", F.col("pos") + (k + 1)) for k in range(1, n)
+    ]
+    return starts, parts
+
+
 def shingle_table(
     docs: DataFrame, n: int = 3, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
-    """Distinct ``(doc_id, shingle)`` posting list + per-doc set sizes.
+    """Distinct ``(doc_id, shingle)`` posting list, shingles
+    space-joined (``"a b c"``).
 
-    Built with posexplode + window ``lead`` instead of array
-    higher-order functions: ``transform``/``slice`` lambdas run on
-    Spark's *interpreted* expression path (no whole-stage codegen) and
-    measured ~6 s just to build shingle arrays at sf0.1 — the
-    explode/lead formulation keeps everything inside codegen and
-    shuffles only narrow (doc_id, token) rows.
-
-    No ``fan_out`` here (unlike the simhash builders): the window
-    exchange hash-partitions by doc_id immediately after the explode,
-    so the CPU-heavy lead/concat/distinct work is already spread across
-    the cluster — a pre-repartition would only add a full-text shuffle
-    (measured +0.3 s at sf0.1 with zero parallelism gained).
+    Each gram is ``concat_ws`` over ``element_at`` of its row's own
+    token array (see ``_ngram_starts``): ``transform``/``slice`` lambdas
+    would run on Spark's *interpreted* expression path (measured ~6 s
+    just to build shingle arrays at sf0.1), and a ``lead`` window would
+    shuffle every exploded ``(doc_id, pos, token)`` row. The
+    ``distinct`` reuses the text repartition's ``doc_id`` partitioning.
     """
-    toks = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.posexplode(TX.tokens(F.col(text_col))).alias("pos", "tok"),
-    )
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    parts = [F.col("tok")] + [F.lead("tok", k).over(w) for k in range(1, n)]
-    grams = toks.select(
-        "doc_id",
-        F.when(
-            parts[-1].isNotNull(), F.concat_ws(" ", *parts)
-        ).alias("shingle"),
-    ).filter(F.col("shingle").isNotNull())
+    starts, parts = _ngram_starts(docs, n, id_col, text_col)
+    grams = starts.select("doc_id", F.concat_ws(" ", *parts).alias("shingle"))
     return grams.distinct()
 
 
@@ -111,32 +129,26 @@ def shingle_hash_table(
 ) -> DataFrame:
     """``(doc_id, sh)`` posting list with 64-bit *hashed* shingles.
 
-    Tokens are hashed to longs BEFORE the windowed n-gram assembly, so
-    the window exchange shuffles ``(doc_id, pos, long)`` — a fixed
-    ~20 bytes per posting instead of the full shingle string — and the
-    n-gram itself is ``xxhash64(h₀, h₁, h₂)`` over longs, never a
-    string concat. Set semantics under hashing are exact up to 64-bit
-    collisions (≈ m²/2⁶⁵ for m shingles — 3e-9 even at a billion
-    distinct shingles per join key), and every downstream consumer
-    (Jaccard counts, min-hash minima) is hash-invariant, so results
-    match the string formulation; the DuckDB oracles pin that.
+    ``sh = xxhash64(xxhash64(t₀), xxhash64(t₁), xxhash64(t₂))`` over the
+    gram's tokens, built row-locally from the token array (see
+    ``_ngram_starts``) — never a string concat, and the only shuffle is
+    the ``(doc_id, text)`` repartition, not the exploded postings. Set
+    semantics under hashing are exact up to 64-bit collisions (≈ m²/2⁶⁵
+    for m shingles — 3e-9 even at a billion distinct shingles per join
+    key), and every downstream consumer (Jaccard counts, min-hash
+    minima) is hash-invariant, so results match the string formulation;
+    the DuckDB oracles pin that.
 
-    ``distinct=False`` skips the set-dedup shuffle entirely — correct
-    whenever the consumer is multiset-invariant (min-hash minima) or
-    dedups itself (``collect_set``). The rows leave the window stage
-    hash-partitioned by ``doc_id``, so a following ``groupBy(doc_id)``
-    needs no further exchange.
+    ``distinct=False`` skips the set dedup — correct whenever the
+    consumer is multiset-invariant (min-hash minima) or dedups itself
+    (``collect_set``). Either way the rows come out hash-partitioned by
+    ``doc_id``, so the ``distinct`` and a following ``groupBy(doc_id)``
+    need no further exchange.
     """
-    toks = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.posexplode(TX.tokens(F.col(text_col))).alias("pos", "tok"),
-    ).select("doc_id", "pos", F.xxhash64("tok").alias("h"))
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    parts = [F.col("h")] + [F.lead("h", k).over(w) for k in range(1, n)]
-    grams = toks.select(
-        "doc_id",
-        F.when(parts[-1].isNotNull(), F.xxhash64(*parts)).alias("sh"),
-    ).filter(F.col("sh").isNotNull())
+    starts, parts = _ngram_starts(docs, n, id_col, text_col)
+    grams = starts.select(
+        "doc_id", F.xxhash64(*[F.xxhash64(p) for p in parts]).alias("sh")
+    )
     return grams.distinct() if distinct else grams
 
 
@@ -216,8 +228,8 @@ def minhash_signatures(
 
     Shape: NON-distinct hashed posting list → ``groupBy(doc).agg(min(
     xxhash64(k, sh)) × k)``. Minima are multiset-invariant, so the
-    posting-list ``distinct`` shuffle is skipped, and the rows leave
-    the shingle window already partitioned by ``doc_id``. All k hashes
+    posting-list ``distinct`` is skipped, and the postings come out of
+    the text repartition already partitioned by ``doc_id``. All k hashes
     evaluate in one tight codegen'd aggregate pass with map-side
     partial aggregation — only k partial minima per document cross the
     shuffle. (The earlier array formulation — k separate
@@ -371,10 +383,10 @@ def minhash_near_dups(
     ``rows_per_band`` to 4–6 and scale ``num_hashes`` with it.
 
     Plan shape: ONE corpus pass builds the hashed posting list (the
-    shingle window's exchange is the only corpus-wide shuffle); the
-    96 min-hash lanes aggregate from its cache on the codegen
-    HashAggregate path (no exchange — the window already partitioned
-    by doc_id); banding self-joins the banded rows on the band key;
+    ``(doc_id, text)`` repartition is the only corpus-wide shuffle —
+    n-grams are built row-locally after it); the 96 min-hash lanes and
+    the ``collect_set`` aggregate from its cache on ``doc_id`` with no
+    exchange; banding self-joins the banded rows on the band key;
     verification broadcast-joins the tiny set/candidate tables (if a
     pathological threshold ever made them huge, Catalyst falls back to
     shuffle joins; the plan stays correct).

@@ -97,6 +97,16 @@ def get_spark(
         # path is safe at far higher group counts; the sort fallback
         # just adds a per-partition sort of every posting row
         .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "131072")
+        # with ≤ 200 reduce partitions Spark's bypass-merge shuffle
+        # writer opens one temp file per reduce partition and then
+        # copies them all into the map output file, so every shuffle
+        # byte is written twice: a 4-partition groupBy over
+        # incompressible longs (local[4]) measured 2.00× its .data
+        # bytes in the JVM's write counter (/proc/<pid>/io wchar),
+        # 1.0× with this setting. Threshold 0 sends every SQL shuffle
+        # to the serialized writer that wider shuffles already use,
+        # which writes each map output once
+        .config("spark.shuffle.sort.bypassMergeThreshold", "0")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

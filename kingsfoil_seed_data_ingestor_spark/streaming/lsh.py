@@ -19,7 +19,10 @@ Design — ``foreachBatch`` + an accumulating on-disk index, NOT
   in ``streaming/dedup.py``, wrong for a corpus-sized posting index).
 * Each micro-batch computes signatures ONCE for its unseen documents
   (one shingle pass + 96 codegen min-hash lanes — literally the batch
-  operator's code: banding uses ``text_dedup.lsh_band_expr`` and
+  operator's code: ``text_dedup.shingle_hash_table`` shuffles the
+  batch's ``(doc_id, text)`` rows once and builds every n-gram inside
+  its row, so no posting list crosses an exchange; banding uses
+  ``text_dedup.lsh_band_expr`` and
   verification ``text_dedup.verify_candidates_from_sets``, so the two
   paths cannot drift), probes the index for collisions, verifies
   candidates by exact Jaccard over hashed shingle sets, and appends its

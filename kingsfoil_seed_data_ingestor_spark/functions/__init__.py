@@ -1,4 +1,5 @@
-"""Typed transform Column expressions (CMS sentinel semantics)."""
+"""Typed transform expressions (CMS sentinel semantics): each takes a
+column name and returns a Column parsed from SQL text."""
 
 from kingsfoil_seed_data_ingestor_spark.functions.transforms import (  # noqa: F401
     clean_code,

@@ -23,7 +23,6 @@ from __future__ import annotations
 import uuid
 from dataclasses import dataclass, field
 from functools import reduce
-from operator import and_
 
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import Column, DataFrame, Observation
@@ -45,39 +44,42 @@ ROW_NUMBER = "row_number"  # 1-indexed original file position
 _EMPTY = "__empty"
 
 
-def empty_row_predicate(raw_cols: list[str], threshold: float = EMPTY_ROW_THRESHOLD) -> Column:
-    """TRUE when ≥ ``threshold`` of the row's cells are empty-ish.
+def empty_row_predicate(raw_cols: list[str], threshold: float = EMPTY_ROW_THRESHOLD) -> str:
+    """SQL text, TRUE when ≥ ``threshold`` of the row's cells are empty-ish.
 
     Columnar restatement of reference ``is_empty_row`` — a sum of
-    boolean flags over the positional columns, no Python per row.
+    boolean flags over the positional columns, no Python per row. One
+    parsed string: as a Column chain it cost about 100 py4j round trips
+    per column.
     """
-    flags = [
-        F.when(F.trim(F.col(c)).isin(*EMPTYISH) | F.col(c).isNull(), 1).otherwise(0)
-        for c in raw_cols
-    ]
-    empty_count = reduce(lambda a, b: a + b, flags)
-    return empty_count >= F.lit(threshold) * F.lit(len(raw_cols))
+    flags = " + ".join(
+        f"CASE WHEN {X.sql_in(f'trim({q})', EMPTYISH)} OR {q} IS NULL THEN 1 ELSE 0 END"
+        for q in map(X.sql_ident, raw_cols)
+    )
+    return f"{flags} >= {threshold!r}D * {len(raw_cols)}"
 
 
-def _column_expr(source: Source, internal_name: str, raw: Column) -> Column:
-    """Typed expression for one canonical column — the dispatch mirror
-    of reference ``transform_record`` (``ingestor.py:306-355``)."""
+def _column_expr(source: Source, internal_name: str, raw: str) -> str:
+    """Typed SQL text for one canonical column read from the raw column
+    ``raw`` — the dispatch mirror of reference ``transform_record``
+    (``ingestor.py:306-355``)."""
     if source.source_code.startswith("NCCI_MUE") and internal_name == "mue_value":
-        return X.parse_mue_value(raw)
+        return X.parse_mue_value.sql(raw)
     if source.source_code == "NCCI_PTP":
         if internal_name == "deletion_date":
-            return X.parse_deletion_date(raw)
+            return X.parse_deletion_date.sql(raw)
         if internal_name == "modifier_indicator":
-            return X.parse_modifier_indicator(raw)
+            return X.parse_modifier_indicator.sql(raw)
         if internal_name == "prior_1996_flag":
-            return X.parse_prior_1996_flag(raw)
+            return X.parse_prior_1996_flag.sql(raw)
     if internal_name.endswith("_code"):
-        return X.clean_code(raw)
-    return X.transform_value(raw, source.column(internal_name).data_type)
+        return X.clean_code.sql(raw)
+    return X.transform_value.sql(raw, source.column(internal_name).data_type)
 
 
-def typed_projection(source: Source, column_index: dict[str, int]) -> list[Column]:
-    """The SELECT list: one typed, aliased expression per canonical column.
+def typed_projection(source: Source, column_index: dict[str, int]) -> list[str]:
+    """The SELECT list, as ``selectExpr`` text: one typed, aliased
+    expression per canonical column.
 
     Derived columns handled the way the reference does cross-column
     derivation (``ingestor.py:326-333``) plus the documented
@@ -86,20 +88,21 @@ def typed_projection(source: Source, column_index: dict[str, int]) -> list[Colum
     * NCCI_MUE ``mai_id`` ⇐ leading digits of the mapped
       ``mai_description`` cell;
     * PFS_LOCALITY ``mac_locality`` ⇐ ``carrier_number‖locality_code``
-      when the file didn't carry it directly.
+      (``transforms.mac_locality``) when the file didn't carry it
+      directly.
 
     Unmapped optional columns materialize as typed NULLs so every
     ingest of a source lands the full target schema.
     """
-    exprs: list[Column] = []
+    exprs: list[str] = []
     for c in source.columns:
         name = c.internal_name
         if source.source_code.startswith("NCCI_MUE") and name == "mai_id":
             desc_idx = column_index.get("mai_description")
             expr = (
-                X.parse_mai_id(F.col(f"_c{desc_idx}"))
+                X.parse_mai_id.sql(f"_c{desc_idx}")
                 if desc_idx is not None
-                else F.lit(None).cast("int")
+                else "CAST(NULL AS INT)"
             )
         elif (
             source.source_code == "PFS_LOCALITY"
@@ -107,15 +110,16 @@ def typed_projection(source: Source, column_index: dict[str, int]) -> list[Colum
             and name not in column_index
             and {"carrier_number", "locality_code"} <= set(column_index)
         ):
-            expr = X.mac_locality(
-                X.clean_code(F.col(f"_c{column_index['carrier_number']}")),
-                X.clean_code(F.col(f"_c{column_index['locality_code']}")),
+            carrier, locality = (
+                X.clean_code.sql(f"_c{column_index[k]}")
+                for k in ("carrier_number", "locality_code")
             )
+            expr = f"concat({carrier}, {locality})"
         elif name in column_index:
-            expr = _column_expr(source, name, F.col(f"_c{column_index[name]}"))
+            expr = _column_expr(source, name, f"_c{column_index[name]}")
         else:
-            expr = F.lit(None).cast(c.spark_type)
-        exprs.append(expr.alias(name))
+            expr = f"CAST(NULL AS {c.spark_type.simpleString()})"
+        exprs.append(f"{expr} AS {X.sql_ident(name)}")
     return exprs
 
 
@@ -225,19 +229,23 @@ def build_ingest_plan(
     node, so each action executes it exactly once.
     """
     raw_cols = [c for c in raw.columns if c.startswith("_c")]
-    typed_region = raw.filter(F.col("row_idx") > detection.header_row_index).select(
-        (F.col("row_idx") + 1).alias(ROW_NUMBER),  # 1-indexed file position
-        empty_row_predicate(raw_cols).alias(_EMPTY),
+    typed_region = raw.filter(f"row_idx > {detection.header_row_index}").selectExpr(
+        f"row_idx + 1 AS {ROW_NUMBER}",  # 1-indexed file position
+        f"{empty_row_predicate(raw_cols)} AS {_EMPTY}",
         *typed_projection(source, detection.column_index),
     )
 
     keys = list(source.unique_keys)
-    key_ok = reduce(and_, [F.col(k).isNotNull() for k in keys])
-    is_valid = ~F.col(_EMPTY) & key_ok
-    is_quarantined = ~F.col(_EMPTY) & ~key_ok
+    # parenthesized left-deep, as a Column ``&`` chain builds it: the
+    # parser would balance a bare AND chain of four or more keys
+    key_ok = reduce(
+        lambda a, b: f"({a} AND {b})", [f"{X.sql_ident(k)} IS NOT NULL" for k in keys]
+    )
+    is_valid = f"NOT {_EMPTY} AND ({key_ok})"
+    is_quarantined = f"NOT {_EMPTY} AND NOT ({key_ok})"
 
-    def count_if(cond: Column, name: str) -> Column:
-        return F.count(F.when(cond, 1)).alias(name)
+    def count_if(cond: str, name: str) -> Column:
+        return F.expr(f"count(CASE WHEN {cond} THEN 1 END) AS {X.sql_ident(name)}")
 
     tag = uuid.uuid4().hex  # one session may run concurrent ingests
     region_counts = Observation(f"ingest-region-{tag}")
@@ -246,12 +254,12 @@ def build_ingest_plan(
         region_counts,
         count_if(is_valid, "__processed"),
         count_if(is_quarantined, "__quarantined"),
-        count_if(F.col(_EMPTY), "__skipped"),
-        *[count_if(is_valid & F.col(c.internal_name).isNull(), c.internal_name)
+        count_if(_EMPTY, "__skipped"),
+        *[count_if(f"{is_valid} AND {X.sql_ident(c.internal_name)} IS NULL", c.internal_name)
           for c in source.columns],
     )
     kept, _ = split_first(observed.filter(is_valid).drop(_EMPTY), keys, ROW_NUMBER)
-    records = kept.observe(kept_count, F.count(F.lit(1)).alias("__inserted"))
+    records = kept.observe(kept_count, F.expr("count(1) AS __inserted"))
 
     valid = typed_region.filter(is_valid).drop(_EMPTY)
     _, dups = split_first(valid, keys, ROW_NUMBER)
@@ -260,10 +268,8 @@ def build_ingest_plan(
         .drop(_EMPTY)
         .withColumn(
             "error",
-            F.concat(
-                F.lit("Row "),
-                F.col(ROW_NUMBER).cast("string"),
-                F.lit(": Missing required key column"),
+            F.expr(
+                f"concat('Row ', CAST({ROW_NUMBER} AS STRING), ': Missing required key column')"
             ),
         )
     )

@@ -82,13 +82,19 @@ def _ngram_starts(
     (ANSI). No ``Window``, no sort, no posting exchange, all codegen'd
     (no lambda), and the output stays hash-partitioned by ``doc_id`` for
     the ``distinct`` or per-document aggregate that follows.
+
+    The explode is ``posexplode_outer``: a null or empty token array
+    gives one row with a null ``pos``, which the ``pos + n`` filter
+    drops. A plain ``posexplode`` lets Spark infer ``size(toks) > 0``
+    and push it below the repartition with the tokenizer substituted,
+    so every text would be split on both sides of the exchange.
     """
     text = docs.select(
         F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
     ).repartition("doc_id")
     starts = (
         text.select("doc_id", TX.tokens(F.col("text")).alias("toks"))
-        .select("doc_id", "toks", F.posexplode("toks").alias("pos", "tok"))
+        .select("doc_id", "toks", F.posexplode_outer("toks").alias("pos", "tok"))
         .filter(F.col("pos") + n <= F.size("toks"))
     )
     parts = [F.col("tok")] + [

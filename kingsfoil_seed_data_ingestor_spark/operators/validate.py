@@ -29,7 +29,6 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from kingsfoil_seed_data_ingestor_spark.functions import transforms as X
 from kingsfoil_seed_data_ingestor_spark.registry import Source
@@ -107,7 +106,9 @@ def _sample_type_warnings(
     reduced to one probe per checked column — a ``(row, value)`` struct
     on an unparsable cell, null otherwise — then the probe with the
     smallest row per column on the driver: the earliest failure,
-    matching the reference's first-hit-then-stop loop.
+    matching the reference's first-hit-then-stop loop. Each probe is
+    one SQL string, so the whole sample costs a handful of py4j round
+    trips to build instead of a Column chain of hundreds per column.
     """
     checks: list[tuple[str, str, int]] = []  # (internal_name, kind, column)
     for name, idx in detection.column_index.items():
@@ -122,14 +123,17 @@ def _sample_type_warnings(
     h = detection.header_row_index
     probes = []
     for name, kind, idx in checks:
-        raw = F.col(f"_c{idx}")
-        trimmed = X.strip_ws(raw)
-        parsed = X.parse_numeric(raw) if kind == "numeric" else X.parse_date(raw)
-        bad = trimmed.isNotNull() & ~trimmed.isin(*_SKIP) & parsed.isNull()
-        probes.append(F.when(bad, F.struct(F.col("row_idx"), trimmed.alias("val"))).alias(name))
+        raw = f"_c{idx}"
+        trimmed = X.strip_ws.sql(raw)
+        parsed = X.parse_numeric.sql(raw) if kind == "numeric" else X.parse_date.sql(raw)
+        bad = f"{trimmed} IS NOT NULL AND NOT ({X.sql_in(trimmed, _SKIP)}) AND ({parsed}) IS NULL"
+        probes.append(
+            f"CASE WHEN {bad} THEN named_struct('row_idx', row_idx, 'val', {trimmed}) END"
+            f" AS {X.sql_ident(name)}"
+        )
     sample = (
-        df.filter(F.col("row_idx").between(h + 1, h + sample_rows))
-        .select(*probes)
+        df.filter(f"row_idx >= {h + 1} AND row_idx <= {h + sample_rows}")
+        .selectExpr(*probes)
         .limit(sample_rows)
         .collect()
     )

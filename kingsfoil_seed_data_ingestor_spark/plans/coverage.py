@@ -165,10 +165,10 @@ def transforms_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     return raw.select(
         "o_orderkey",
         # timestamp (not date) so both engines land on one pandas dtype
-        X.parse_date(F.col("date_str")).cast("timestamp").alias("parsed_date"),
-        X.parse_numeric(F.col("num_str")).alias("parsed_num"),
-        X.parse_boolean(F.col("bool_str")).alias("parsed_bool"),
-        X.clean_code(F.col("code_str")).alias("cleaned_code"),
+        X.parse_date("date_str").cast("timestamp").alias("parsed_date"),
+        X.parse_numeric("num_str").alias("parsed_num"),
+        X.parse_boolean("bool_str").alias("parsed_bool"),
+        X.clean_code("code_str").alias("cleaned_code"),
     )
 
 

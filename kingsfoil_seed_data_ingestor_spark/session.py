@@ -11,6 +11,9 @@ engines (DuckDB oracle included).
 from __future__ import annotations
 
 import os
+import threading
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -128,3 +131,36 @@ def pin_comparable_conf(spark: SparkSession) -> None:
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+
+
+@contextmanager
+def py4j_round_trips(spark: SparkSession) -> Iterator[Callable[[], int]]:
+    """Count the driver's py4j round trips to the JVM inside the block.
+
+    Every ``Column`` method, ``DataFrame`` call and JVM attribute lookup
+    PySpark makes goes through one ``send_command`` of the session's
+    gateway connection, and the JVM answers each with a reply on the
+    gateway socket. The block gets a callable returning the count so
+    far. Commands other Python threads send in the meantime are counted
+    too, so the count is an upper bound.
+    """
+    client = spark.sparkContext._gateway._gateway_client
+    before = vars(client).get("send_command")
+    send = client.send_command
+    lock = threading.Lock()
+    calls = 0
+
+    def counted(*args, **kwargs):
+        nonlocal calls
+        with lock:
+            calls += 1
+        return send(*args, **kwargs)
+
+    client.send_command = counted
+    try:
+        yield lambda: calls
+    finally:
+        if before is None:
+            del client.send_command
+        else:
+            client.send_command = before

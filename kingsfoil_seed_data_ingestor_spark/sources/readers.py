@@ -38,6 +38,10 @@ from kingsfoil_seed_data_ingestor_spark.sources.grid import ROW_IDX, with_row_id
 CSV_ENCODINGS = ("utf-8", "latin-1", "cp1252")
 #: bytes sampled for delimiter sniffing (reference file_parser.py:110)
 SNIFF_BYTES = 4096
+#: rows the first slice of a driver-parsed sheet holds at least: the
+#: 50-row header search, then the 100-row type sample and stats head,
+#: with room for the blank and quarantined rows the head skips
+LOCAL_SLICE_MIN_ROWS = 256
 #: bytes sampled for the encoding probe — enough to catch non-UTF-8
 #: uploads in practice while staying O(1) regardless of file size.
 ENCODING_PROBE_BYTES = 1 << 20
@@ -250,12 +254,20 @@ def _local_grid(
     with ``row_idx`` attached on the driver, plus the padded rows themselves
     (an empty sheet becomes one empty row). The driver already holds
     every row in file order, so neither the index nor the head needs a
-    Spark job."""
+    Spark job.
+
+    The rows are sliced evenly, into as many slices as hold at least
+    ``LOCAL_SLICE_MIN_ROWS`` rows each, capped at ``defaultParallelism``:
+    the type sample and the stats head are ``limit`` collects that stop
+    at the first slice holding their rows, so a small sheet is one slice
+    and each of them one job."""
     n_cols = max((len(r) for r in rows), default=1) or 1
     norm = [r + [""] * (n_cols - len(r)) for r in rows] or [[""] * n_cols]
     schema = _string_schema(n_cols).add(ROW_IDX, T.LongType(), False)
-    df = spark.createDataFrame([(*r, i) for i, r in enumerate(norm)], schema=schema)
-    return df, norm
+    sc = spark.sparkContext
+    slices = max(1, min(sc.defaultParallelism, len(norm) // LOCAL_SLICE_MIN_ROWS))
+    rdd = sc.parallelize([(*r, i) for i, r in enumerate(norm)], slices)
+    return spark.createDataFrame(rdd, schema=schema), norm
 
 
 def read_grid(

@@ -27,6 +27,7 @@ from kingsfoil_seed_data_ingestor_spark.operators.validate import (
     validate_grid,
 )
 from kingsfoil_seed_data_ingestor_spark.registry import get_source
+from kingsfoil_seed_data_ingestor_spark.session import py4j_round_trips
 from kingsfoil_seed_data_ingestor_spark.sources import detect_header, read_grid
 
 PFS_RVU_CSV = """CMS Physician Fee Schedule,,,,,,,,,,,,
@@ -352,12 +353,13 @@ def _group_jobs(spark, group: str, action) -> tuple[object, list[int]]:
 #: that added a job to every later action on the grid.
 INGEST_JOBS_MAX = 6
 #: an Excel upload is parsed and row-indexed on the driver, so it has no
-#: row-index job, but its rows are parallelized over the default number
-#: of slices: for the 5-row fixture the first slice holds only the
-#: header, and the type sample and the sample head each take a second
-#: job to reach the data rows. It ran 12 before the driver kept the
-#: parsed head and the row index.
-XLSX_INGEST_JOBS_MAX = 6
+#: row-index job, and its rows are sliced by row count, so the 5-row
+#: fixture is one slice: the type sample, the staging write (two jobs)
+#: and the sample head. It ran 12 before the driver kept the parsed
+#: head and the row index, and 6 while the rows were spread over the
+#: default number of slices, where the first held only the header and
+#: the type sample and the sample head each took a second job.
+XLSX_INGEST_JOBS_MAX = 4
 #: a ``current_view(...).count()``: the scan-and-count job and its AQE
 #: map stage; the view reads with the declared schema, so there is no
 #: ``parquet at`` footer-inference job
@@ -410,6 +412,29 @@ def test_current_view_count_job_gate(spark, store, tmp_path):
     assert not [s for s in stages if s.startswith("parquet at")], stages
 
 
+#: py4j round trips to build the PFS_RVU fixture's ingest plan and its
+#: type sample. Built call by call from PySpark Column methods they took
+#: about 5.1k–5.7k and 2.0k–2.6k; as parsed SQL text about 400–500 and
+#: 20–110 (the first call resolves JVM classes the later ones reuse)
+BUILD_PLAN_ROUND_TRIPS_MAX = 1000
+VALIDATE_ROUND_TRIPS_MAX = 200
+
+
+def test_plan_build_round_trip_gate(spark, tmp_path):
+    p = tmp_path / "pfs_rvu.csv"
+    p.write_text(PFS_RVU_CSV)
+    grid = read_grid(spark, str(p))
+    source = get_source("PFS_RVU")
+    det = detect_header(grid.head_rows, source.header_mappings)
+    with py4j_round_trips(spark) as calls:
+        build_ingest_plan(grid.df, source, det)
+    assert 0 < calls() <= BUILD_PLAN_ROUND_TRIPS_MAX, calls()
+    with py4j_round_trips(spark) as calls:
+        report = validate_grid(grid, source, det)
+    assert 0 < calls() <= VALIDATE_ROUND_TRIPS_MAX, calls()
+    assert report.passed and report.record_count == 6
+
+
 def test_fact_schema_pinned_to_registry(spark, store):
     """Every source's typed projection has exactly the declared
     ``spark_schema`` — views read fact files with that schema instead of
@@ -424,9 +449,9 @@ def test_fact_schema_pinned_to_registry(spark, store):
         raw = spark.createDataFrame(
             [tuple("1" for _ in names)], ", ".join(f"_c{i} string" for i in range(len(names)))
         )
-        full = raw.select(*typed_projection(source, {n: i for i, n in enumerate(names)}))
+        full = raw.selectExpr(*typed_projection(source, {n: i for i, n in enumerate(names)}))
         assert full.schema == source.spark_schema, code
-        assert raw.select(*typed_projection(source, {})).schema == source.spark_schema, code
+        assert raw.selectExpr(*typed_projection(source, {})).schema == source.spark_schema, code
 
         vid = store.create_version(code, "2024-Q1")
         store.write_records(source, vid, full)
@@ -551,7 +576,7 @@ def test_bounded_samples_exact_across_partitions(spark, tmp_path, small_splits):
     # type sample: the first bad value, against a min() over the sample
     report = validate_grid(grid, source, det)
     h = det.header_row_index
-    raw = F.col(f"_c{det.column_index['work_rvu']}")
+    raw = f"_c{det.column_index['work_rvu']}"
     trimmed = X.strip_ws(raw)
     bad = trimmed.isNotNull() & ~trimmed.isin(*_SKIP) & X.parse_numeric(raw).isNull()
     first_bad = (

@@ -22,8 +22,6 @@ try:
 except ImportError:  # pragma: no cover - baked into the image per env spec
     pytest.skip("hypothesis not available", allow_module_level=True)
 
-from pyspark.sql import functions as F
-
 from kingsfoil_seed_data_ingestor_spark.functions import transforms as X
 from kingsfoil_seed_data_ingestor_spark.operators.dedup import keep_first
 
@@ -120,7 +118,7 @@ _any_cell = st.one_of(st.none(), _sentinel, _date_component, _numericish, _codei
 
 def _run_expr(spark, values, expr_builder):
     df = spark.createDataFrame([(v,) for v in values], "raw string")
-    return [r[0] for r in df.select(expr_builder(F.col("raw"))).collect()]
+    return [r[0] for r in df.select(expr_builder("raw")).collect()]
 
 
 _SLOW = settings(
@@ -186,14 +184,14 @@ def test_transforms_are_total(spark, values):
     (ANSI mode is ON in the session) — they null out instead."""
     df = spark.createDataFrame([(v,) for v in values], "raw string")
     out = df.select(
-        X.parse_date(F.col("raw")).alias("d"),
-        X.parse_numeric(F.col("raw")).alias("n"),
-        X.parse_integer(F.col("raw")).alias("i"),
-        X.parse_boolean(F.col("raw")).alias("b"),
-        X.clean_code(F.col("raw")).alias("c"),
-        X.parse_mue_value(F.col("raw")).alias("m"),
-        X.parse_deletion_date(F.col("raw")).alias("dd"),
-        X.parse_modifier_indicator(F.col("raw")).alias("mi"),
+        X.parse_date("raw").alias("d"),
+        X.parse_numeric("raw").alias("n"),
+        X.parse_integer("raw").alias("i"),
+        X.parse_boolean("raw").alias("b"),
+        X.clean_code("raw").alias("c"),
+        X.parse_mue_value("raw").alias("m"),
+        X.parse_deletion_date("raw").alias("dd"),
+        X.parse_modifier_indicator("raw").alias("mi"),
     ).collect()
     assert len(out) == len(values)
 

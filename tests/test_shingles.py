@@ -121,17 +121,17 @@ def _plan_nodes(node):
         yield from _plan_nodes(k)
 
 
-def _doc_id_exchange_origins(df):
-    """(origins of the ``doc_id``-keyed shuffles, operator names) of the
-    final plan of ``df``'s last execution."""
-    origins, names = [], set()
+def _doc_id_exchanges(df):
+    """(the ``doc_id``-keyed shuffles, operator names) of the final plan
+    of ``df``'s last execution."""
+    exchanges, names = [], set()
     for node in _plan_nodes(df._jdf.queryExecution().executedPlan()):
         names.add(node.nodeName())
         if node.getClass().getSimpleName() == "ShuffleExchangeExec":
             keys = re.search(r"hashpartitioning\(([^)]*)\)", node.simpleString(25))
             if keys and re.search(r"\bdoc_id#", keys.group(1)):
-                origins.append(node.shuffleOrigin().toString())
-    return origins, names
+                exchanges.append(node)
+    return exchanges, names
 
 
 @pytest.mark.parametrize("op", ["minhash_near_dups", "jaccard_pairs"])
@@ -141,9 +141,16 @@ def test_near_dup_plans_shuffle_text_not_postings(spark, op):
     with CacheScope() as scope:
         out = getattr(DD, op)(docs, scope=scope)
         assert out.collect()
-        origins, names = _doc_id_exchange_origins(out)
+        exchanges, names = _doc_id_exchanges(out)
+        origins = [e.shuffleOrigin().toString() for e in exchanges]
+        # the text is tokenized once, above the exchange: no filter
+        # inferred from the explode splits it on the map side
+        below = [
+            n.simpleString(1000) for e in exchanges for n in _plan_nodes(e.child())
+        ]
     assert not {n for n in names if "Window" in n}, names
     assert origins and set(origins) == {"REPARTITION_BY_COL"}, origins
+    assert not [s for s in below if "split(" in s], below
 
 
 # ----------------------------------------------------------------------

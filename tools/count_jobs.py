@@ -1,4 +1,4 @@
-"""Count Spark jobs per registered query.
+"""Count Spark jobs and plan-build py4j round trips per registered query.
 
 Usage: python tools/count_jobs.py [--sf DIR] query1 query2 ...
 
@@ -9,6 +9,11 @@ before. Diffing id sets (not list lengths) stays exact once
 ``spark.ui.retainedJobs`` starts evicting old jobs. Job count is the
 durable signal for per-round fixed cost in iterative operators: at
 100 TB every job is a full scheduling barrier.
+
+It also reports the py4j round trips of building the second drain's
+plan (the call that returns the query's DataFrame, jobs it runs eagerly
+included), counted by ``session.py4j_round_trips``: a driver-side cost
+that no job metric shows.
 """
 
 from __future__ import annotations
@@ -22,7 +27,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from kingsfoil_seed_data_ingestor_spark import plans  # noqa: F401
 from kingsfoil_seed_data_ingestor_spark.plans.core import QUERIES
-from kingsfoil_seed_data_ingestor_spark.session import get_spark, pin_comparable_conf
+from kingsfoil_seed_data_ingestor_spark.session import (
+    get_spark,
+    pin_comparable_conf,
+    py4j_round_trips,
+)
 
 
 def drain(df) -> None:
@@ -45,11 +54,13 @@ def main() -> int:
         spark.catalog.clearCache()
         before = set(tracker.getJobIdsForGroup())
         t0 = time.perf_counter()
-        drain(QUERIES[n].spark(spark, args.sf))
+        with py4j_round_trips(spark) as calls:
+            df = QUERIES[n].spark(spark, args.sf)
+        drain(df)
         dt = time.perf_counter() - t0
         new_jobs = set(tracker.getJobIdsForGroup()) - before
         spark.catalog.clearCache()
-        print(f"{n:36s} jobs={len(new_jobs):4d}  {dt:7.3f}s")
+        print(f"{n:36s} jobs={len(new_jobs):4d}  build_rt={calls():6d}  {dt:7.3f}s")
     return 0
 
 

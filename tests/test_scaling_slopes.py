@@ -391,8 +391,8 @@ def test_stream_lsh_per_batch_cost_flat_in_index_size(spark, dirs, tmp_path):
     equal batches (fixed batch size, so the index grows 12× under a
     constant workload) and pins the two per-batch cost curves:
 
-    * probe files touched — FLAT under the LSM layout (compacted run
-      bounded by the chunk grid + ≤ compact_every L0 dirs), vs the
+    * probe files touched — FLAT under the LSM layout (bounded by the
+      live runs' size-bounded files + ≤ compact_every L0 dirs), vs the
       uncompacted control growing linearly in batches;
     * per-batch wall — the late-index batches must not cost more than
       a lenient multiple of the early ones (the flat-files property is
@@ -414,11 +414,11 @@ def test_stream_lsh_per_batch_cost_flat_in_index_size(spark, dirs, tmp_path):
     # merge — the run count at the b11 checkpoint is back to 1-2, which
     # is what keeps probe fan-out logarithmic at any batch count
     lsm = StreamingLSHIndex(
-        str(tmp_path / "lsm"), threshold=0.8, chunks=8, compact_every=3,
+        str(tmp_path / "lsm"), threshold=0.8, compact_every=3,
         tier_fanout=3,
     )
     flat = StreamingLSHIndex(
-        str(tmp_path / "flat"), threshold=0.8, chunks=8, compact_every=0
+        str(tmp_path / "flat"), threshold=0.8, compact_every=0
     )
     walls, files_lsm, files_flat = [], {}, {}
     for b, df in enumerate(batches):
@@ -431,9 +431,10 @@ def test_stream_lsh_per_batch_cost_flat_in_index_size(spark, dirs, tmp_path):
             files_flat[b] = flat.probe_files_touched(spark, probe)
 
     # control grows ~linearly (3x the batches); LSM stays near-flat
-    # (bounded by chunk grid × the O(log batches) tiered-run count)
+    # (bounded by the O(log batches) tiered-run count, one banded file
+    # per run at this size, + the L0 tail)
     assert files_flat[11] >= 2 * files_flat[3], (files_flat, files_lsm)
-    assert files_lsm[11] <= files_lsm[3] + 2 * lsm.chunks, (files_lsm, files_flat)
+    assert files_lsm[11] <= files_lsm[3] + 16, (files_lsm, files_flat)
     assert files_lsm[11] < files_flat[11]
 
     # per-batch wall: late window (index ~2-4x the early window's) vs

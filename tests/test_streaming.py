@@ -3,6 +3,8 @@ sink, checked against batch execution of the SAME transforms."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
@@ -1348,12 +1350,21 @@ def _split_batches(docs, k):
     return [docs.filter(F.col("doc_id") % k == i) for i in range(k)]
 
 
+def _snap_lsh(spark, ix):
+    """(pairs, novel ids, seen ids) of an LSH index, each sorted."""
+    return (
+        sorted((r.i, r.j, r.jaccard) for r in ix.near_dup_pairs(spark).collect()),
+        sorted(r.doc_id for r in ix.novel_ids(spark).collect()),
+        sorted(r.doc_id for r in ix.seen_ids(spark).collect()),
+    )
+
+
 def test_streaming_lsh_compaction_preserves_results(spark, tmp_path):
-    """VERDICT r9 #3: folding L0 batch dirs into the chunk-partitioned
-    compacted run must be invisible to every reader — pairs, novelty
-    verdicts, and the arrival registry all match an uncompacted control
-    index fed the identical batches, across auto-fired and explicit
-    compactions, with further batches arriving after the fold."""
+    """VERDICT r9 #3: folding L0 batch dirs into a compacted run must
+    be invisible to every reader — pairs, novelty verdicts, and the
+    arrival registry all match an uncompacted control index fed the
+    identical batches, across auto-fired and explicit compactions, with
+    further batches arriving after the fold."""
     from kingsfoil_seed_data_ingestor_spark.streaming.lsh import StreamingLSHIndex
 
     docs = load(spark, SF_DIR, "documents").select("doc_id", "text").filter(
@@ -1365,10 +1376,10 @@ def test_streaming_lsh_compaction_preserves_results(spark, tmp_path):
     batches = _split_batches(docs, 5) + [clones]
 
     lsm = StreamingLSHIndex(
-        str(tmp_path / "lsm"), threshold=0.8, chunks=4, compact_every=2
+        str(tmp_path / "lsm"), threshold=0.8, compact_every=2
     )
     flat = StreamingLSHIndex(
-        str(tmp_path / "flat"), threshold=0.8, chunks=4, compact_every=0
+        str(tmp_path / "flat"), threshold=0.8, compact_every=0
     )
     for b, df in enumerate(batches):
         lsm.process_batch(df, b)
@@ -1377,21 +1388,14 @@ def test_streaming_lsh_compaction_preserves_results(spark, tmp_path):
     assert lsm._compaction() is not None
     assert flat._compaction() is None
 
-    def snap(ix):
-        return (
-            sorted((r.i, r.j, r.jaccard) for r in ix.near_dup_pairs(spark).collect()),
-            sorted(r.doc_id for r in ix.novel_ids(spark).collect()),
-            sorted(r.doc_id for r in ix.seen_ids(spark).collect()),
-        )
-
-    assert snap(lsm) == snap(flat)
-    pairs, novel, seen = snap(lsm)
+    assert _snap_lsh(spark, lsm) == _snap_lsh(spark, flat)
+    pairs, novel, seen = _snap_lsh(spark, lsm)
     assert len(pairs) >= clones.count()  # non-vacuous: planted clones pair
     assert len(seen) == docs.count() + clones.count()
 
     # explicit compaction after the stream is drained: readers unchanged
     assert lsm.compact(spark) is True
-    assert snap(lsm) == (pairs, novel, seen)
+    assert _snap_lsh(spark, lsm) == (pairs, novel, seen)
     # idempotent: nothing new to fold
     assert lsm.compact(spark) is False
 
@@ -1399,16 +1403,16 @@ def test_streaming_lsh_compaction_preserves_results(spark, tmp_path):
     # (the highest is deliberately never folded, so its L0 dir remains
     # overwritable)
     lsm.process_batch(batches[-1], len(batches) - 1)
-    assert snap(lsm) == (pairs, novel, seen)
+    assert _snap_lsh(spark, lsm) == (pairs, novel, seen)
 
 
 def test_streaming_lsh_probe_files_flat(spark, tmp_path):
     """The probe-cost gate (VERDICT r9 #3 'done' criterion): with
     compaction on, the number of parquet files a batch's banded probe
-    touches stays FLAT as batches accumulate — bounded by the chunk
-    grid plus the ≤ compact_every L0 dirs — while the uncompacted
-    control's probe keeps touching every file ever written (linear in
-    batch count)."""
+    touches stays FLAT as batches accumulate — bounded by the live
+    runs' size-bounded files plus the ≤ compact_every L0 dirs — while
+    the uncompacted control's probe keeps touching every file ever
+    written (linear in batch count)."""
     from kingsfoil_seed_data_ingestor_spark.streaming.lsh import StreamingLSHIndex
 
     docs = load(spark, SF_DIR, "documents").select("doc_id", "text").filter(
@@ -1418,10 +1422,10 @@ def test_streaming_lsh_probe_files_flat(spark, tmp_path):
     probe = docs.filter(F.col("doc_id") % 12 == 0).limit(4)
 
     lsm = StreamingLSHIndex(
-        str(tmp_path / "lsm"), threshold=0.8, chunks=4, compact_every=2
+        str(tmp_path / "lsm"), threshold=0.8, compact_every=2
     )
     flat = StreamingLSHIndex(
-        str(tmp_path / "flat"), threshold=0.8, chunks=4, compact_every=0
+        str(tmp_path / "flat"), threshold=0.8, compact_every=0
     )
     lsm_curve, flat_curve = [], []
     for b, df in enumerate(batches):
@@ -1434,14 +1438,169 @@ def test_streaming_lsh_probe_files_flat(spark, tmp_path):
     # control: the flat layout's probe grows with the index (3x the
     # batches => ~3x the files; demand at least 2x to stay noise-proof)
     assert flat_curve[1] >= 2 * flat_curve[0], (flat_curve, lsm_curve)
-    # gate: the LSM layout's probe is near-flat — bounded by the chunk
-    # grid × the O(log batches) tiered-run count + the L0 tail,
-    # REGARDLESS of how many batches were indexed (r11: size-tiered
-    # compaction keeps several runs live instead of one, trading a
-    # logarithmic probe fan-out for bounded write amplification)
-    assert lsm_curve[1] <= lsm_curve[0] + 2 * lsm.chunks, (lsm_curve, flat_curve)
+    # gate: the LSM layout's probe is near-flat — bounded by the
+    # O(log batches) tiered-run count (one banded file per run at this
+    # size) + the L0 tail, REGARDLESS of how many batches were indexed
+    # (r11: size-tiered compaction keeps several runs live instead of
+    # one, trading a logarithmic probe fan-out for bounded write
+    # amplification)
+    assert lsm_curve[1] <= lsm_curve[0] + 8, (lsm_curve, flat_curve)
     # and strictly better than the control at the same index size
     assert lsm_curve[1] < flat_curve[1], (lsm_curve, flat_curve)
+
+
+def _store_entries(root) -> int:
+    """Directories plus parquet data files under ``root``."""
+    n = 0
+    for _dir, dirs, files in os.walk(root):
+        n += len(dirs) + sum(f.startswith("part-") for f in files)
+    return n
+
+
+#: Spark jobs of a 20-document micro-batch that probes one compacted
+#: run (no compaction of its own); it runs 16 on a 4-core host. The
+#: chunk-grid layout ran 24: it collected the batch's bucket chunks and
+#: the candidates' doc-hash chunks to prune runs by, and broadcast the
+#: candidates twice from two separate computations.
+LSH_PROBE_BATCH_JOBS = 18
+
+
+def test_streaming_lsh_run_layout_and_probe_jobs(spark, tmp_path):
+    """A compacted run is plain parquet sized by its bytes: after a
+    compacting ``process_batch`` on a small fixture no ``pb=``/``pd=``
+    chunk directory exists, each run table is one data file, and the
+    batch creates at most 36 directories plus data files under the
+    store (the chunk-grid layout created 91 here, this one 31: the
+    batch's own L0 sinks plus 3 run files in 5 directories). The write
+    log counts the data files of every write. A later batch that
+    probes the run, without compacting, runs at most
+    ``LSH_PROBE_BATCH_JOBS`` Spark jobs."""
+    from kingsfoil_seed_data_ingestor_spark.streaming.lsh import StreamingLSHIndex
+
+    docs = load(spark, SF_DIR, "documents").select("doc_id", "text").filter(
+        F.col("doc_id") < 80
+    )
+    batches = _split_batches(docs, 4)
+    store = tmp_path / "store"
+    ix = StreamingLSHIndex(str(store), threshold=0.8, compact_every=2)
+    ix.process_batch(batches[0], 0)
+    ix.process_batch(batches[1], 1)
+    before = _store_entries(store)
+    ix.process_batch(batches[2], 2)  # 2 - (-1) > compact_every: folds 0..1
+    created = _store_entries(store) - before
+    comp = ix._compaction()
+    assert comp is not None and comp["upto"] == 1 and len(comp["runs"]) == 1
+    assert created <= 36, created
+
+    chunk_dirs = [
+        d for d, _, _ in os.walk(store)
+        if os.path.basename(d).startswith(("pb=", "pd="))
+    ]
+    assert not chunk_dirs, chunk_dirs
+    run_dir = ix._run_dir(comp["runs"][0]["name"])
+    for table in ("banded", "posts", "ids"):
+        files = [
+            f for f in os.listdir(os.path.join(run_dir, table))
+            if f.startswith("part-")
+        ]
+        assert len(files) == 1, (table, files)
+
+    log = ix.write_log()
+    assert [e["files"] for e in log if e["event"] == "compact"] == [3]
+    assert all(e["files"] >= 5 for e in log if e["event"] == "batch"), log
+
+    sc = spark.sparkContext
+    sc.setJobGroup("lsh-probe-batch", "lsh-probe-batch")
+    try:
+        ix.process_batch(batches[3], 3)  # 3 - 1 == compact_every: no fold
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup("lsh-probe-batch")
+    assert ix._compaction()["upto"] == 1
+    assert 0 < len(jobs) <= LSH_PROBE_BATCH_JOBS, sorted(jobs)
+    assert ix.seen_ids(spark).count() == docs.count()
+
+
+def test_streaming_lsh_reads_and_merges_chunk_grid_runs(spark, tmp_path):
+    """An index compacted by the earlier layout — ``chunks`` pinned in
+    ``_params.json``, a marked run whose ``banded``/``posts`` tables are
+    hive-partitioned into ``pb=``/``pd=`` chunk directories — still
+    opens, probes, folds and tier-merges: the legacy run is merged away
+    and the pairs, novelty verdicts and registry equal a fresh index's
+    over the same batches."""
+    import json
+
+    from kingsfoil_seed_data_ingestor_spark.streaming.lsh import StreamingLSHIndex
+
+    docs = load(spark, SF_DIR, "documents").select("doc_id", "text").filter(
+        F.col("doc_id") < 120
+    )
+    clones = docs.filter(F.col("doc_id") % 3 == 0).withColumn(
+        "doc_id", F.col("doc_id") + 5000
+    )
+    batches = _split_batches(docs, 5) + [clones]
+
+    # the old layout, by hand: batches 0..2 in L0, 0..1 folded into a
+    # chunk-partitioned run (4 chunks) named by the marker
+    store = tmp_path / "legacy"
+    old = StreamingLSHIndex(str(store), threshold=0.8, compact_every=0)
+    for b in range(3):
+        old.process_batch(batches[b], b)
+    legacy = "run-chunkgrid"
+    run_dir = store / "runs" / legacy
+
+    def folded(table):
+        return spark.read.parquet(str(store / table)).filter(F.col("batch_id") <= 1)
+
+    banded = folded("banded")
+    rows = banded.count()
+    (
+        banded.withColumn("pb", F.pmod(F.col("bucket"), F.lit(4)))
+        .repartition(4, "pb")
+        .sortWithinPartitions("bucket")
+        .write.partitionBy("pb")
+        .parquet(str(run_dir / "banded"))
+    )
+    (
+        folded("posts")
+        .withColumn("pd", F.pmod(F.xxhash64(F.col("doc_id")), F.lit(4)))
+        .repartition(4, "pd")
+        .sortWithinPartitions("doc_id")
+        .write.partitionBy("pd")
+        .parquet(str(run_dir / "posts"))
+    )
+    folded("ids").coalesce(1).write.parquet(str(run_dir / "ids"))
+    (store / "_compacted.json").write_text(
+        json.dumps({"upto": 1, "runs": [{"name": legacy, "rows": rows}]})
+    )
+    params = json.loads((store / "_params.json").read_text())
+    (store / "_params.json").write_text(json.dumps({**params, "chunks": 4}))
+    assert any(p.name.startswith("pb=") for p in (run_dir / "banded").iterdir())
+
+    # reopened under the plain layout; tier_fanout=2 so the one-batch
+    # folds of batches 2 and 3 merge, and their merge (two batches'
+    # rows, the legacy run's tier) merges with the legacy run
+    ix = StreamingLSHIndex(
+        str(store), threshold=0.8, compact_every=1, tier_fanout=2
+    )
+    for b in range(3, len(batches)):
+        ix.process_batch(batches[b], b)
+    fresh = StreamingLSHIndex(str(tmp_path / "fresh"), threshold=0.8, compact_every=0)
+    for b, df in enumerate(batches):
+        fresh.process_batch(df, b)
+
+    names = [r["name"] for r in ix._compaction()["runs"]]
+    assert legacy not in names, names
+    assert any(e.get("merge_rows", 0) >= rows for e in ix.write_log()), ix.write_log()
+    for name in names:
+        for _dir, dirs, _files in os.walk(ix._run_dir(name)):
+            assert not [d for d in dirs if d.startswith(("pb=", "pd="))], name
+    got = _snap_lsh(spark, ix)
+    assert got == _snap_lsh(spark, fresh)
+    assert len(got[0]) >= clones.count()  # non-vacuous: planted clones pair
+    assert len(got[2]) == docs.count() + clones.count()
 
 
 def test_streaming_lsh_fingerprint_guard(spark, tmp_path):
@@ -1504,7 +1663,6 @@ def test_streaming_lsh_write_amplification_bounded(spark, tmp_path):
         ix = StreamingLSHIndex(
             str(tmp_path / f"wa-{label}"),
             threshold=0.8,
-            chunks=4,
             compact_every=3,
             tier_fanout=4,
         )
@@ -1548,7 +1706,7 @@ def test_streaming_lsh_vacuum_grace_retains_then_removes(spark, tmp_path):
     )
     batches = _split_batches(docs, 4)
     ix = StreamingLSHIndex(
-        str(tmp_path / "store"), threshold=0.8, chunks=4, compact_every=0,
+        str(tmp_path / "store"), threshold=0.8, compact_every=0,
         retain_grace_s=3600.0,
     )
     for b, df in enumerate(batches[:3]):
@@ -1673,7 +1831,7 @@ def test_streaming_lsh_corpus_restart_with_compaction_interleave(spark, tmp_path
             .parquet(str(src))
         )
         index = StreamingLSHIndex(
-            str(store), threshold=0.8, chunks=4, compact_every=compact_every
+            str(store), threshold=0.8, compact_every=compact_every
         )
         q = stream_lsh_corpus(stream, index, str(ckpt), str(corpus))
         assert q.awaitTermination(300)

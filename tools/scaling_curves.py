@@ -292,8 +292,8 @@ def stream_lsh_curve(spark, sf_dir: str, n_batches: int = 24) -> dict:
     #2): feed ``n_batches`` equal fixed-size batches — so the index is
     24× larger under the last batch than the first — and record
     per-batch wall, the probe's files-touched at four checkpoints
-    (near-flat under the tiered-LSM layout: chunk grid × O(log)
-    runs + ≤ compact_every L0 dirs), the final index row count, and
+    (near-flat under the tiered-LSM layout: O(log) runs of size-bounded
+    files + ≤ compact_every L0 dirs), the final index row count, and
     the WRITE-AMPLIFICATION witness (rows/bytes rewritten by folds +
     tier merges vs L0 rows ingested — bounded under size-tiering,
     O(batches/compact_every)× under r10's fold-everything). Run at two
@@ -312,7 +312,6 @@ def stream_lsh_curve(spark, sf_dir: str, n_batches: int = 24) -> dict:
         index = StreamingLSHIndex(
             os.path.join(tmp, "store"),
             threshold=0.8,
-            chunks=16,
             compact_every=4,
         )
         probe = docs.limit(8)

@@ -12,7 +12,11 @@ Storage model here:
 * **Fact tables**: parquet under ``{root}/facts/{table}/
   data_version_id={id}/`` — Spark partition pruning makes the
   current-version join read only live partitions; deleting a failed
-  version is a partition drop (the cascade).
+  version is a partition drop (the cascade). The files are zstd
+  parquet (the session's ``spark.sql.parquet.compression.codec``).
+  Partitions written as snappy by earlier stores still read, since
+  readers take the codec from each file's footer, and
+  ``compact_version`` rewrites them as zstd.
 * **Meta tables** (versions, logs): tiny, driver-written, single
   parquet file each, updated read-modify-replace with an atomic
   ``os.replace``. They are metadata about uploads — the reference

@@ -19,3 +19,17 @@ def spark():
 
 
 SF_DIR = "/root/testdata/sf0.001"
+
+
+def parquet_codecs(*paths) -> set:
+    """The compression codecs (``"ZSTD"``, ``"SNAPPY"``, ...) that the
+    footers of the given parquet files report for their column chunks."""
+    import pyarrow.parquet as pq
+
+    codecs = set()
+    for path in paths:
+        meta = pq.ParquetFile(str(path)).metadata
+        for g in range(meta.num_row_groups):
+            rg = meta.row_group(g)
+            codecs.update(rg.column(c).compression for c in range(rg.num_columns))
+    return codecs

@@ -1186,6 +1186,68 @@ def test_compact_version_preserves_content(spark, store, tmp_path):
     assert v["record_count"] == 6 and v["part_count"] == 2  # meta untouched
 
 
+def test_mixed_codec_store_reads_and_compacts(spark, tmp_path):
+    """Fact files are zstd parquet; a store whose first version was
+    written as snappy (before the session default changed) reads like
+    an all-snappy store, and compaction rewrites the snappy partition as
+    zstd with the same rows, after which vacuum retires the snappy
+    files."""
+    from pathlib import Path
+
+    from tests.conftest import parquet_codecs
+
+    key = "spark.sql.parquet.compression.codec"
+    default = spark.conf.get(key)
+    assert default == "zstd"
+    src = get_source("PFS_RVU")
+    q1, q2 = tmp_path / "q1.csv", tmp_path / "q2.csv"
+    q1.write_text(PFS_RVU_CSV)
+    q2.write_text(PFS_RVU_CSV.replace("1,234.56", "2.00"))
+
+    def build(name, codecs):
+        store = VersionStore(spark, str(tmp_path / name))
+        for path, label, codec in zip((q1, q2), ("2024-Q1", "2024-Q2"), codecs):
+            spark.conf.set(key, codec)
+            try:
+                assert ingest_file(spark, store, "PFS_RVU", str(path), label)["success"]
+            finally:
+                spark.conf.set(key, default)
+        return store
+
+    mixed = build("mixed", ("snappy", default))
+    snappy = build("snappy", ("snappy", "snappy"))
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.select(sorted(df.columns)).collect())
+
+    def views(store):
+        return [
+            rows(store.current_view(src)),
+            rows(store.view_as_of(src, "2024-Q1")),
+            rows(store.view_as_of(src, "2024-Q2")),
+        ]
+
+    def part_files(store, label):
+        vid = store.find_version("PFS_RVU", label)["version_id"]
+        part = Path(store.fact_path(src)) / f"data_version_id={vid}"
+        return vid, part, [part / n for n in store._partition_files(part)]
+
+    expected = views(snappy)
+    assert expected[0] and expected[1] and expected[0] != expected[1]
+    assert views(mixed) == expected
+    v1, part, old = part_files(mixed, "2024-Q1")
+    assert parquet_codecs(*old) == {"SNAPPY"}
+    assert parquet_codecs(*part_files(mixed, "2024-Q2")[2]) == {"ZSTD"}
+
+    assert mixed.compact_version(src, v1, target_files=1) == 1
+    new = part_files(mixed, "2024-Q1")[2]
+    assert parquet_codecs(*new) == {"ZSTD"}
+    assert views(mixed) == expected
+    assert mixed.vacuum(src, grace_seconds=0) == len(old)
+    assert sorted(part.glob("*.parquet")) == sorted(new)
+    assert views(mixed) == expected
+
+
 def test_fact_cache_zero_manifest_parses_when_warm(spark, store, tmp_path):
     """VERDICT r10 #5: `_list_facts` used to JSON-parse every
     partition manifest under the meta lock on every plan build. With

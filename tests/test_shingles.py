@@ -1,10 +1,11 @@
-"""Shingle builders: row-local n-grams and write-once shuffles.
+"""Shingle builders: row-local n-grams and write-once, zstd shuffles.
 
 The posting lists are built inside each document's row after one
 ``(doc_id, text)`` repartition. These tests pin that they equal the
 ``lead()``-window formulation they replaced, that the near-dup plans
-keep no ``Window`` and no posting exchange, and that the session's
-shuffle writer passes each shuffle byte to ``write`` once.
+keep no ``Window`` and no posting exchange, that the session's
+shuffle writer passes each shuffle byte to ``write`` once, and that it
+compresses the text repartition with zstd.
 """
 
 from __future__ import annotations
@@ -154,7 +155,7 @@ def test_near_dup_plans_shuffle_text_not_postings(spark, op):
 
 
 # ----------------------------------------------------------------------
-# write-once shuffle files
+# write-once, zstd-compressed shuffle files
 # ----------------------------------------------------------------------
 
 
@@ -200,3 +201,20 @@ def test_shuffle_bytes_written_once(spark):
     data_bytes = sum(s for p, s in after_files.items() if p not in before_files)
     assert data_bytes > 4_000_000, data_bytes
     assert written < 1.5 * data_bytes, (written, data_bytes, written / data_bytes)
+
+
+def test_text_repartition_shuffle_bytes_zstd(corpus_docs):
+    """The session compresses shuffle blocks with zstd. The
+    ``(doc_id, text)`` repartition of ``jaccard_pairs`` over
+    ``gen_documents(3000, 1)`` (31 words, 4 shuffle partitions) writes
+    252,933 shuffle bytes with it; the lz4 default wrote 511,543."""
+    with CacheScope() as scope:
+        out = DD.jaccard_pairs(corpus_docs, scope=scope)
+        assert out.collect()
+        exchanges, _ = _doc_id_exchanges(out)
+        # the persisted postings' plan is reached once per join branch
+        written = {
+            e.id(): e.metrics().apply("shuffleBytesWritten").value() for e in exchanges
+        }
+    assert len(written) == 1, written
+    assert 0 < sum(written.values()) <= 300_000, written

@@ -1603,6 +1603,59 @@ def test_streaming_lsh_reads_and_merges_chunk_grid_runs(spark, tmp_path):
     assert len(got[2]) == docs.count() + clones.count()
 
 
+def test_streaming_lsh_reads_and_merges_snappy_runs(spark, tmp_path):
+    """An index whose first batches and first run were written as
+    snappy parquet (before the session default changed to zstd) keeps
+    probing, folding and tier-merging: the snappy run is merged into a
+    zstd one, and the pairs, novelty verdicts and registry equal a fresh
+    index's over the same batches."""
+    from pathlib import Path
+
+    from kingsfoil_seed_data_ingestor_spark.streaming.lsh import StreamingLSHIndex
+    from tests.conftest import parquet_codecs
+
+    docs = load(spark, SF_DIR, "documents").select("doc_id", "text").filter(
+        F.col("doc_id") < 120
+    )
+    clones = docs.filter(F.col("doc_id") % 3 == 0).withColumn(
+        "doc_id", F.col("doc_id") + 5000
+    )
+    batches = _split_batches(docs, 5) + [clones]
+
+    def run_files(ix, name):
+        return list(Path(ix._run_dir(name)).rglob("*.parquet"))
+
+    key = "spark.sql.parquet.compression.codec"
+    default = spark.conf.get(key)
+    ix = StreamingLSHIndex(
+        str(tmp_path / "mixed"), threshold=0.8, compact_every=1, tier_fanout=2
+    )
+    spark.conf.set(key, "snappy")
+    try:
+        for b in range(3):
+            ix.process_batch(batches[b], b)
+    finally:
+        spark.conf.set(key, default)
+    first = [r["name"] for r in ix._compaction()["runs"]]
+    assert first
+    for name in first:
+        assert parquet_codecs(*run_files(ix, name)) == {"SNAPPY"}, name
+    for b in range(3, len(batches)):
+        ix.process_batch(batches[b], b)
+    fresh = StreamingLSHIndex(str(tmp_path / "fresh"), threshold=0.8, compact_every=0)
+    for b, df in enumerate(batches):
+        fresh.process_batch(df, b)
+
+    names = [r["name"] for r in ix._compaction()["runs"]]
+    assert not set(first) & set(names), (first, names)
+    for name in names:
+        assert parquet_codecs(*run_files(ix, name)) == {"ZSTD"}, name
+    got = _snap_lsh(spark, ix)
+    assert got == _snap_lsh(spark, fresh)
+    assert len(got[0]) >= clones.count()  # non-vacuous: planted clones pair
+    assert len(got[2]) == docs.count() + clones.count()
+
+
 def test_streaming_lsh_fingerprint_guard(spark, tmp_path):
     """Round-10 review fix: a stream restarted against a FRESH
     checkpoint whose first batch id equals the stored high-water mark

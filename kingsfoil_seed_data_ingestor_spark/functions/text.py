@@ -109,12 +109,6 @@ def digit_ratio(col: Column) -> Column:
     return F.when(n > 0, digits / n).otherwise(F.lit(0.0))
 
 
-def mean_token_length(col: Column) -> Column:
-    t = tokens(col)
-    total = F.aggregate(t, F.lit(0), lambda acc, x: acc + F.length(x))
-    return F.when(F.size(t) > 0, total / F.size(t)).otherwise(F.lit(0.0))
-
-
 def quality_score(col: Column) -> Column:
     """Composite [0,1] quality score: length sweet spot + stopword
     presence − punctuation/digit noise. Deterministic double math; the

@@ -10,61 +10,67 @@ LSH per drop is the difference between minutes and days.
 Design — ``foreachBatch`` + an accumulating on-disk index, NOT
 ``applyInPandasWithState``:
 
-* The state here is an INDEX (banded signature rows + hashed shingle
-  posting lists + an arrival registry), which grows linearly with the
-  corpus. That belongs in append-only tables the cluster can
-  shuffle-join and prune — not in the streaming state store, whose
-  per-key payloads are rewritten on update and checkpointed via
-  changelog (right for per-key accumulators like the exact-dedup fold
-  in ``streaming/dedup.py``, wrong for a corpus-sized posting index).
+* The state here is an INDEX (banded signature rows + the documents'
+  text and arrival verdicts), which grows linearly with the corpus.
+  That belongs in append-only tables the cluster can shuffle-join —
+  not in the streaming state store, whose per-key payloads are
+  rewritten on update and checkpointed via changelog (right for
+  per-key accumulators like the exact-dedup fold in
+  ``streaming/dedup.py``, wrong for a corpus-sized index).
 * Each micro-batch computes signatures ONCE for its unseen documents
   (one shingle pass + 96 codegen min-hash lanes — literally the batch
-  operator's code: ``text_dedup.shingle_hash_table`` shuffles the
-  batch's ``(doc_id, text)`` rows once and builds every n-gram inside
-  its row, so no posting list crosses an exchange; banding uses
-  ``text_dedup.lsh_band_expr`` and
-  verification ``text_dedup.verify_candidates_from_sets``, so the two
-  paths cannot drift), probes the index for collisions, verifies
-  candidates by exact Jaccard over hashed shingle sets, and appends its
-  rows to the index — O(batch) new signature work per batch, never
-  O(corpus) recomputation.
+  operator's code: ``text_dedup.shingle_hash_table``, banding by
+  ``text_dedup.lsh_band_expr`` and verification by
+  ``text_dedup.verify_candidates_from_sets``, so the two paths cannot
+  drift), probes the index for collisions, verifies candidates by
+  exact Jaccard over hashed shingle sets, and appends its rows to the
+  index — O(batch) new signature work per batch, never O(corpus)
+  recomputation.
 
-Store layout — a two-level LSM over parquet (round 10, VERDICT r9 #3;
-pre-r10 the probe full-scanned one flat unpartitioned dir per table, so
-per-batch I/O on the two probed tables was O(batches × corpus)):
+Store layout — two indexed tables plus the pair output:
+
+* ``banded(doc_id, band, bucket, batch_id)``: one row per document and
+  band, what the probe joins on.
+* ``docs(doc_id, text, novel, batch_id)``: the arrival registry — every
+  id a batch delivered (shingle-less documents too), its text, and
+  whether it was novel at arrival. Verification re-shingles candidate
+  texts instead of storing hashed postings: a zstd text column is
+  about a quarter of the bytes of its postings.
+* ``pairs(i, j, jaccard)``: the verified pairs, per batch, never
+  compacted.
+
+``_params.json`` pins the banding parameters and the layout; an index
+written under another layout is refused on open instead of misread.
 
 * **L0**: per-batch writes land under ``batch_id=N`` subdirectories
   with overwrite, so ``foreachBatch``'s at-least-once redelivery is
   idempotent — a replayed batch rewrites byte-identical rows instead of
   double-appending. A ``_progress.json`` high-water mark refuses batch
   ids BELOW the highest processed, and a batch id EQUAL to the highest
-  must fingerprint-match the recorded delivery (count + xor of id
-  hashes) — together they kill the failure mode of a stream restarted
-  against a fresh checkpoint (batch ids restart at 0) silently
-  overwriting historical batches of a store that outlived its
+  must fingerprint-match the recorded delivery (count + xor of
+  ``(doc_id, text)`` hashes) — together they kill the failure mode of a
+  stream restarted against a fresh checkpoint (batch ids restart at 0)
+  silently overwriting historical batches of a store that outlived its
   checkpoint, including the first-batch case where the fresh
   checkpoint's batch 0 collides with the stored highest 0.
-* **Size-tiered compacted runs** (round 11, VERDICT r10 #2; round 10's
-  single-run fold rewrote the ENTIRE corpus every ``compact_every``
-  batches — O(corpus/compact_every) amortized write amplification per
-  batch, growing without bound): every ``compact_every`` batches (and
+* **Size-tiered compacted runs**: every ``compact_every`` batches (and
   on demand via ``compact()``), the checkpoint-committed L0 batches
   (ids < highest — the highest itself may still be replayed) fold into
-  ONE NEW small run; then runs of similar size merge size-tiered
-  (``tier_fanout`` runs in the same log_fanout(rows) tier collapse
-  into one). Per-fold I/O is O(new batches + merged-tier size), each
-  row is rewritten at most log_fanout(batches/compact_every) times
-  over the index's life, and the committed run count stays
-  O(fanout · log(corpus)) — bounding probe fan-out. Every run holds
-  the three probed tables as plain, unpartitioned parquet, each
-  written with ``coalesce(k)``, k = ⌈input bytes /
+  ONE NEW small run; then runs merge size-tiered. A run's tier is
+  floor(log₄ of its banded rows) whatever ``tier_fanout`` is;
+  ``tier_fanout`` only sets how many runs one tier holds before they
+  merge into one. A merge of tier-t runs writes at least
+  ``tier_fanout``·4ᵗ rows, so a merged row climbs a tier with every
+  merge when ``tier_fanout`` ≥ 4 (within three merges when it is 2):
+  each row is rewritten O(log₄ rows) times over the index's life, and
+  the committed run count stays below ``tier_fanout`` per tier,
+  O(tier_fanout · log₄ rows) — bounding probe fan-out. Each run holds
+  both indexed tables as plain, unpartitioned parquet, each written
+  with ``coalesce(k)``, k = ⌈input bytes /
   ``spark.sql.files.maxPartitionBytes``⌉ (at least 1): the file count
   of a run follows its bytes, so a tier merge never multiplies files
   and a small run is one file per table. ``batch_id`` stays a data
-  column (it is the arrival key). Runs of the earlier layout
-  (``banded``/``posts`` hive-partitioned into ``pb=``/``pd=`` chunk
-  directories) still read and tier-merge: readers select the table
-  columns and drop the partition column. The run SET is committed by an
+  column (it is the arrival key). The run SET is committed by an
   atomic ``_compacted.json`` marker (os.replace) naming the run dirs
   and the ``upto`` batch; readers filter L0 to ``batch_id > upto`` so
   a crash that leaves stragglers cannot double-count. Superseded runs
@@ -76,22 +82,25 @@ per-batch I/O on the two probed tables was O(batches × corpus)):
   measured to ``_write_log.jsonl`` (bytes, data files and banded rows
   per batch for L0, fold, and tier merges) and gated bounded by
   ``test_streaming_lsh_write_amplification_bounded``.
-* **Probe cost**: a probe reads ``runs ∪ L0(batch_id > upto)``, and
-  it reads every live run in full — the banded probe is a hash join
-  against the batch's buckets, the posting fetch a broadcast semi-join
-  on the candidate ids. Nothing is pruned by partition. (The earlier
-  layout hash-partitioned each run into a fixed grid of chunk
-  directories to prune by; it never pruned a batch of one document or
-  more, because one document's 32 band buckets land in almost every
-  chunk — 14 of 16 on average — so every probe read every chunk, and
-  the grid cost ~32 extra files and directories plus a shuffle per
-  fold.) The L0 side is at most ``compact_every`` batch dirs. Files
-  touched per probe is therefore O(run files + compact_every ×
-  files_per_batch), with run files bounded by run bytes and runs ≤
-  O(fanout · log batches) — near-flat in the number of batches
-  indexed (gated by ``test_streaming_lsh_probe_files_flat``), where
-  the pre-r10 layout touched every file ever written. Bytes under the
-  touched files still grow with the corpus (they hold it).
+* **Probe cost**: batch ``b`` reads only the committed index — the
+  live runs ∪ L0 ``upto < batch_id < b`` — plus its own in-memory
+  frames, never its own L0 dirs (a replay is overwriting them). The
+  probe joins the batch's banded rows against the committed ones ∪
+  themselves (a hash join; every live run is read in full, nothing is
+  pruned). One registry read serves both the re-delivery anti-join and
+  the candidates' texts; verification re-shingles only the candidate
+  documents, with the batch operator's hashing, so pairs and Jaccard
+  values are the batch operator's. Files touched per probe are
+  O(run files + compact_every × 2), with run files bounded by run
+  bytes and runs ≤ O(tier_fanout · log₄ rows) — near-flat in the
+  number of batches indexed (gated by
+  ``test_streaming_lsh_probe_files_flat``). Bytes read still grow with
+  the corpus: every banded row, and the text column of every indexed
+  document (the semi-join to the candidates runs after the scan).
+* **One write phase**: ``banded``, ``docs`` (carrying the fingerprint
+  Observation and the novelty verdict) and ``pairs`` are independent
+  sinks over persisted batch frames, written concurrently from one
+  driver thread pool.
 * Documents re-delivered with an already-seen ``doc_id`` in a LATER
   batch are dropped before processing (anti-join against the arrival
   registry): at-least-once upstreams re-drop files, and re-indexing
@@ -116,10 +125,10 @@ import json
 import os
 import shutil
 import uuid
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from kingsfoil_seed_data_ingestor_spark.operators.text_dedup import (
     lsh_band_expr,
@@ -128,26 +137,15 @@ from kingsfoil_seed_data_ingestor_spark.operators.text_dedup import (
     verify_candidates_from_sets,
 )
 
-_PAIRS_SCHEMA = T.StructType(
-    [
-        T.StructField("i", T.LongType()),
-        T.StructField("j", T.LongType()),
-        T.StructField("jaccard", T.DoubleType()),
-    ]
-)
-_IDS_SCHEMA = T.StructType([T.StructField("doc_id", T.LongType())])
-#: the three tables a probe reads — the ones compaction folds into runs
-_PROBED = ("banded", "posts", "ids")
+_PAIRS_DDL = "i long, j long, jaccard double"
+#: the tables a probe reads — the ones compaction folds into runs
 _EMPTY_DDL = {
     "banded": "doc_id long, band int, bucket int, batch_id long",
-    "posts": "doc_id long, sh long, batch_id long",
-    "ids": "doc_id long, batch_id long",
+    "docs": "doc_id long, text string, novel boolean, batch_id long",
 }
-_TABLE_COLS = {
-    "banded": ["doc_id", "band", "bucket", "batch_id"],
-    "posts": ["doc_id", "sh", "batch_id"],
-    "ids": ["doc_id", "batch_id"],
-}
+#: the store layout, pinned in ``_params.json`` with the banding
+#: parameters; an index of another layout fails the params check
+_LAYOUT = "banded+docs"
 
 
 class StreamingLSHIndex:
@@ -160,11 +158,10 @@ class StreamingLSHIndex:
     folds committed L0 batches into a size-bounded run (also fires
     automatically every ``compact_every`` batches).
 
-    Banding/verification parameters must stay fixed for the life of an
-    index; they are pinned to ``_params.json`` on first use and
-    validated on every subsequent construction over the same directory
-    (a ``chunks`` key pinned by the earlier chunk-grid layout is
-    ignored, so such an index still opens). ``compact_every``,
+    Banding/verification parameters and the store layout must stay
+    fixed for the life of an index; they are pinned to
+    ``_params.json`` on first use and validated on every subsequent
+    construction over the same directory. ``compact_every``,
     ``tier_fanout``, and ``retain_grace_s`` are operational knobs
     (cadence/GC only, never correctness) and may vary between
     sessions.
@@ -219,6 +216,7 @@ class StreamingLSHIndex:
             "bands": self.bands,
             "rows_per_band": self.rows_per_band,
             "n": self.n,
+            "layout": _LAYOUT,
         }
 
     def _check_params(self) -> None:
@@ -227,13 +225,13 @@ class StreamingLSHIndex:
         if os.path.exists(path):
             with open(path) as fh:
                 stored = json.load(fh)
-            # the chunk-grid layout pinned its modulus; nothing reads it now
-            stored.pop("chunks", None)
             if stored != self._params():
                 raise ValueError(
                     f"index at {self.store_dir} was built with {stored}; "
                     f"refusing to probe it with {self._params()} — banded "
-                    "rows are only comparable under identical parameters"
+                    "rows are only comparable under identical parameters, "
+                    "and the store only reads under the layout it was "
+                    "written in"
                 )
         # a fresh directory is pinned lazily by the first process_batch
 
@@ -276,26 +274,23 @@ class StreamingLSHIndex:
     def _sub(self, table: str) -> str:
         return os.path.join(self.store_dir, table)
 
+    def _l0_dir(self, table: str, batch_id: int) -> str:
+        return os.path.join(self._sub(table), f"batch_id={batch_id}")
+
     # ---------------- compaction marker ----------------
     def _marker_path(self) -> str:
         return os.path.join(self.store_dir, "_compacted.json")
 
     def _compaction(self) -> dict | None:
         """``{"upto": int, "runs": [{"name": str, "rows": int}, ...]}``
-        of the committed run set, if any. The pre-r11 single-run form
-        (``{"upto", "run"}``) is normalized on read so an index folded
-        under the old layout keeps reading."""
+        of the committed run set, if any."""
         try:
             with open(self._marker_path()) as fh:
                 doc = json.load(fh)
         except (OSError, ValueError):
             return None
-        if not isinstance(doc.get("upto"), int):
-            return None
-        if isinstance(doc.get("run"), str):  # pre-r11 single-run marker
-            return {"upto": doc["upto"], "runs": [{"name": doc["run"], "rows": 0}]}
         runs = doc.get("runs")
-        if isinstance(runs, list) and all(
+        if isinstance(doc.get("upto"), int) and isinstance(runs, list) and all(
             isinstance(r, dict) and isinstance(r.get("name"), str) for r in runs
         ):
             return {"upto": doc["upto"], "runs": runs}
@@ -339,43 +334,33 @@ class StreamingLSHIndex:
         return total, files
 
     # ---------------- readers ----------------
-    def _read_or_empty(
-        self, spark: SparkSession, table: str, schema: T.StructType
-    ) -> DataFrame:
-        """Read an OUTPUT table (pairs/novel — per-batch dirs, never
-        compacted), or an empty frame with the right schema when the
-        stream has processed zero batches — callers like ``bench.py``
-        drain the query unconditionally and an empty source directory
-        must mean 'no pairs yet', not a crash."""
-        path = self._sub(table)
-        if not os.path.isdir(path):
-            return spark.createDataFrame([], schema)
-        return spark.read.parquet(path)
-
-    def _read_indexed(self, spark: SparkSession, table: str) -> DataFrame:
-        """Compaction-aware read of a probed table: every committed run
-        UNION the L0 batch dirs newer than the runs. L0 stragglers a
-        crashed cleanup left behind are excluded by the explicit
-        ``batch_id > upto`` filter, so correctness never depends on
-        deletion having finished."""
-        cols = _TABLE_COLS[table]
-        parts = []
-        comp = self._compaction()
-        upto = comp["upto"] if comp else -1
-        if comp:
-            for r in comp["runs"]:
-                parts.append(
-                    self._read_run_table(spark, r["name"], table).select(*cols)
-                )
-        l0_part = self._read_l0(spark, table, self._l0_dirs(table, upto, None))
-        if l0_part is not None:
-            parts.append(l0_part)
+    @staticmethod
+    def _union(spark: SparkSession, table: str, parts: "list[DataFrame]") -> DataFrame:
         if not parts:
             return spark.createDataFrame([], _EMPTY_DDL[table])
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        return reduce(DataFrame.unionByName, parts)
+
+    def _read_indexed(
+        self, spark: SparkSession, table: str, below: "int | None" = None
+    ) -> DataFrame:
+        """Compaction-aware read of an indexed table: every committed run
+        UNION the L0 batch dirs newer than the runs and, with ``below``,
+        older than that batch. L0 stragglers a crashed cleanup left
+        behind are excluded by the explicit ``batch_id > upto`` listing,
+        so correctness never depends on deletion having finished. Runs
+        hold only batches ≤ ``upto`` < the highest, so ``below`` (a
+        batch ≥ the highest) never needs to filter them."""
+        comp = self._compaction()
+        upto = comp["upto"] if comp else -1
+        parts = [
+            self._read_run_table(spark, r["name"], table)
+            for r in (comp["runs"] if comp else [])
+        ]
+        hi = None if below is None else below - 1
+        l0_part = self._read_l0(spark, table, self._l0_dirs(table, upto, hi))
+        if l0_part is not None:
+            parts.append(l0_part)
+        return self._union(spark, table, parts)
 
     # ------------------------------------------------------------------
     def _write_run(
@@ -398,7 +383,7 @@ class StreamingLSHIndex:
         run_dir = self._run_dir(run)
         max_bytes = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
         obs = Observation()
-        for table in _PROBED:
+        for table in _EMPTY_DDL:
             df = dfs[table]
             if table == "banded":
                 df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
@@ -414,9 +399,7 @@ class StreamingLSHIndex:
         a fold of an all-shingle-less batch legitimately writes a run
         table with zero data files, and schema inference would throw
         where an empty frame is the correct answer (the empty-partition
-        guard ``operators/versioning.py`` also needed). A run of the
-        chunk-grid layout also yields its ``pb``/``pd`` partition
-        column; callers select the table columns."""
+        guard ``operators/versioning.py`` also needed)."""
         return spark.read.schema(_EMPTY_DDL[table]).parquet(
             os.path.join(self._run_dir(run_name), table)
         )
@@ -454,13 +437,13 @@ class StreamingLSHIndex:
             spark.read.option("basePath", self._sub(table))
             .schema(_EMPTY_DDL[table])
             .parquet(*dirs)
-            .select(*_TABLE_COLS[table])
         )
 
     @staticmethod
     def _tier(rows: int) -> int:
-        """Size tier = floor(log₄(rows)) (clamped): runs merge only
-        within a tier, so one fold never rewrites a run ≫ its inputs."""
+        """Size tier = floor(log₄(rows)) (clamped), independent of
+        ``tier_fanout``: runs merge only within a tier, so one fold
+        never rewrites a run ≫ its inputs."""
         t = 0
         r = max(int(rows), 1)
         while r >= 4:
@@ -475,11 +458,10 @@ class StreamingLSHIndex:
            marker (``upto < batch_id < highest``; the highest may still
            be replayed by foreachBatch and must stay an overwritable L0
            dir) become ONE new run — I/O = O(new batches).
-        2. **Tier merge**: while any size tier (log₄ of banded rows)
-           holds ≥ ``tier_fanout`` runs, those runs merge into one —
-           I/O = O(merged-tier size); each row is rewritten at most
-           O(log_fanout(batches)) times over the index's life, vs the
-           pre-r11 fold-everything's O(batches/compact_every) rewrites.
+        2. **Tier merge**: while any size tier (floor of log₄ of banded
+           rows) holds ≥ ``tier_fanout`` runs, those runs merge into
+           one — I/O = O(merged-tier size); each row is rewritten
+           O(log₄ rows) times over the index's life.
 
         The new run SET flips atomically via the marker; superseded
         runs and folded L0 dirs are left for ``vacuum`` (grace-aged, so
@@ -498,13 +480,11 @@ class StreamingLSHIndex:
             return False
 
         # phase 1 — fold the new L0 range into one run
-        fold_dirs = {t: self._l0_dirs(t, prev_upto, new_upto) for t in _PROBED}
-        fold_dfs = {}
-        for t, dirs in fold_dirs.items():
-            df = self._read_l0(spark, t, dirs)
-            fold_dfs[t] = (
-                df if df is not None else spark.createDataFrame([], _EMPTY_DDL[t])
-            )
+        fold_dirs = {t: self._l0_dirs(t, prev_upto, new_upto) for t in _EMPTY_DDL}
+        fold_dfs = {
+            t: self._union(spark, t, [self._read_l0(spark, t, d)] if d else [])
+            for t, d in fold_dirs.items()
+        }
         name, rows, fold_bytes, files = self._write_run(spark, fold_dfs, fold_dirs)
         runs = ([dict(r) for r in prev["runs"]] if prev else []) + [
             {"name": name, "rows": rows}
@@ -525,22 +505,18 @@ class StreamingLSHIndex:
             if not overfull:
                 break
             members = overfull[0]
-            merged_dfs = {}
             member_dirs = {
                 table: [os.path.join(self._run_dir(m["name"]), table) for m in members]
-                for table in _PROBED
+                for table in _EMPTY_DDL
             }
-            for table in _PROBED:
-                parts = [
-                    self._read_run_table(spark, m["name"], table).select(
-                        *_TABLE_COLS[table]
-                    )
-                    for m in members
-                ]
-                df = parts[0]
-                for p in parts[1:]:
-                    df = df.unionByName(p)
-                merged_dfs[table] = df
+            merged_dfs = {
+                table: self._union(
+                    spark,
+                    table,
+                    [self._read_run_table(spark, m["name"], table) for m in members],
+                )
+                for table in _EMPTY_DDL
+            }
             mname, mrows, mbytes, mfiles = self._write_run(
                 spark, merged_dfs, member_dirs
             )
@@ -598,7 +574,7 @@ class StreamingLSHIndex:
             except OSError:
                 return False
 
-        for table in _PROBED:
+        for table in _EMPTY_DDL:
             l0 = self._sub(table)
             if not os.path.isdir(l0):
                 continue
@@ -622,12 +598,13 @@ class StreamingLSHIndex:
     def process_batch(self, batch_docs: DataFrame, batch_id: int) -> None:
         """Index + probe one micro-batch (the ``foreachBatch`` hook).
 
-        Work per batch: re-delivery filter against the arrival
-        registry, one shingle pass over the unseen documents, the
-        min-hash lane aggregate, a banded probe join, an exact-Jaccard
-        verification of the candidates over their postings, five
-        ``batch_id``-scoped overwrites, one progress commit, and (every
-        ``compact_every`` batches) a compaction.
+        Work per batch: one registry read (the re-delivery filter and
+        the candidates' texts), one shingle pass over the unseen
+        documents, the min-hash lane aggregate, a banded probe join
+        against the committed index, an exact-Jaccard verification that
+        re-shingles the candidate documents only, one write phase of
+        three ``batch_id``-scoped overwrites, one progress commit, and
+        (every ``compact_every`` batches) a compaction.
         """
         spark = batch_docs.sparkSession
         self._pin_params()
@@ -672,20 +649,15 @@ class StreamingLSHIndex:
                 "documents — keep the checkpoint and index directories "
                 "together, or start a fresh index."
             )
-        # arrival registry: EVERY id of the batch (even shingle-less
-        # docs), used for (a) dropping at-least-once re-deliveries of
-        # already-seen ids — re-indexing an id would re-emit its pairs
-        # under a second batch — and (b) O(1)-width arrival keys for
-        # the novelty verdict. Reads exclude the current batch id so a
-        # replay of THIS batch does not filter itself out.
-        ids_prev = self._read_indexed(spark, "ids").filter(
-            F.col("batch_id") < F.lit(batch_id)
-        )
+        # the committed registry (batch_id < this batch, so a replay of
+        # THIS batch does not filter itself out): drops at-least-once
+        # re-deliveries of already-seen ids — re-indexing an id would
+        # re-emit its pairs under a second batch — and supplies the
+        # texts of earlier candidate documents for verification
+        docs_prev = self._read_indexed(spark, "docs", below=batch_id)
         docs_new = docs.join(
-            ids_prev.select("doc_id"), "doc_id", "left_anti"
+            docs_prev.select("doc_id"), "doc_id", "left_anti"
         ).persist()
-        # ids are unique within the batch after the dedup window above
-        new_ids = docs_new.select("doc_id")
 
         # batch fingerprint — count + xor of xxhash64(doc_id, text) over
         # the batch's NEW rows: deterministic under a genuine
@@ -726,10 +698,9 @@ class StreamingLSHIndex:
         from pyspark.sql import Observation
         from pyspark.util import inheritable_thread_target
 
-        posts_new = shingle_hash_table(
-            docs_new, self.n, distinct=False
-        ).persist()
-        sigs_new = minhash_lanes_from_hashed_posts(posts_new, self.num_hashes)
+        sigs_new = minhash_lanes_from_hashed_posts(
+            shingle_hash_table(docs_new, self.n, distinct=False), self.num_hashes
+        )
         banded_new = (
             sigs_new.select(
                 "doc_id",
@@ -739,70 +710,22 @@ class StreamingLSHIndex:
             .persist()
         )
 
-        # idempotent per-batch writes: a foreachBatch replay overwrites
-        # the same subdirectory with identical rows. The three index
-        # writes are INDEPENDENT sinks over the persisted batch frames,
-        # so they run CONCURRENTLY from a driver thread pool
-        # (optimization round 12, guide §2.6 "overlap independent
-        # jobs"): a warm micro-batch's wall is almost pure per-sink job
-        # floor, and overlapping collapses three floors into one.
-        # Concurrent first-actions racing to fill the docs_new /
-        # posts_new / banded_new caches are safe AND compute-once:
-        # Spark's BlockManager takes a per-partition loading lock, so
-        # one thread computes a block and the others read it. Crash
-        # semantics are unchanged — a batch with SOME sinks written was
-        # already possible sequentially; the replay overwrites every
-        # sink before progress is recorded. Each sink is wrapped with
-        # ``inheritable_thread_target`` so its jobs carry this thread's
-        # local properties — the stream's job group among them, which
-        # ``StreamingQuery.stop()`` cancels by. One wrap per sink: each
-        # wrap takes its own copy, and concurrent sinks write their SQL
-        # execution ids into it.
-        def _pool_run(*sinks) -> None:
-            with ThreadPoolExecutor(max_workers=len(sinks)) as pool:
-                futs = [
-                    pool.submit(inheritable_thread_target(spark)(w))
-                    for w in sinks
-                ]
-                for fut in futs:
-                    fut.result()
-
-        obs = Observation()
-        obs_banded = Observation()
-
-        def _w_ids() -> None:
-            docs_new.observe(obs, *fp_exprs).select("doc_id").write.mode(
-                "overwrite"
-            ).parquet(os.path.join(self._sub("ids"), f"batch_id={batch_id}"))
-
-        def _w_banded() -> None:
-            banded_new.observe(
-                obs_banded, F.count(F.lit(1)).alias("rows")
-            ).write.mode("overwrite").parquet(
-                os.path.join(self._sub("banded"), f"batch_id={batch_id}")
-            )
-
-        def _w_posts() -> None:
-            posts_new.select("doc_id", "sh").write.mode("overwrite").parquet(
-                os.path.join(self._sub("posts"), f"batch_id={batch_id}")
-            )
-
-        _pool_run(_w_ids, _w_banded, _w_posts)
-        if fingerprint is None:
-            fingerprint = [int(obs.get["n"]), int(obs.get["x"])]
-
         # probe: every candidate pair has ≥1 endpoint in THIS batch, so
         # a pair is emitted exactly once — by the batch that completes
         # it. New-new pairs surface twice (once per endpoint's probe
         # row) before the distinct; old-old pairs cannot surface. The
-        # candidates are persisted: both the posting fetch and the
-        # verification broadcast them, and without the cache each
-        # broadcast re-runs the probe join's shuffle stages as jobs of
-        # its own (5–7 more jobs for a 20-document batch).
-        banded_all = self._read_indexed(spark, "banded")
+        # candidates are persisted: the text fetch and the verification
+        # both broadcast them, and without the cache each broadcast
+        # re-runs the probe join's shuffle stages as jobs of its own.
+        banded_prev = self._read_indexed(spark, "banded", below=batch_id)
         cands = (
             banded_new.alias("nw")
-            .join(banded_all.alias("al"), ["band", "bucket"])
+            .join(
+                banded_prev.select("doc_id", "band", "bucket")
+                .unionByName(banded_new)
+                .alias("al"),
+                ["band", "bucket"],
+            )
             .filter(F.col("nw.doc_id") != F.col("al.doc_id"))
             .select(
                 F.least(F.col("nw.doc_id"), F.col("al.doc_id")).alias("i"),
@@ -812,15 +735,19 @@ class StreamingLSHIndex:
             .persist()
         )
 
-        # verification fetches shingle sets for candidate docs only: the
-        # postings are semi-joined against the broadcast candidate ids
+        # verification re-shingles the candidate documents only: their
+        # texts are semi-joined against the broadcast candidate ids
         # (repeats in a semi-join's build side change nothing, so they
-        # are not de-duplicated — no shuffle); CPU is O(candidates), I/O
-        # the live runs + the ≤ compact_every L0 batch dirs
+        # are not de-duplicated), and ``shingle_hash_table`` hashes them
+        # exactly as it hashed the postings the signatures came from
         cand_docs = cands.select(F.explode(F.array("i", "j")).alias("doc_id"))
-        posts_all = self._read_indexed(spark, "posts")
+        texts = (
+            docs_prev.select("doc_id", "text")
+            .unionByName(docs_new)
+            .join(F.broadcast(cand_docs), "doc_id", "left_semi")
+        )
         sets = (
-            posts_all.join(F.broadcast(cand_docs), "doc_id", "left_semi")
+            shingle_hash_table(texts, self.n, distinct=False)
             .groupBy("doc_id")
             .agg(F.collect_set("sh").alias("shset"))
         )
@@ -833,68 +760,73 @@ class StreamingLSHIndex:
         # Chains stay greedy-by-arrival on purpose: C pairing only with
         # the duplicate B is still a duplicate (B is indexed either
         # way), exactly as a batch greedy-by-arrival pass decides.
-        # Decided from NEW-MEMBERSHIP alone (optimization round 11):
-        # every pair this batch emits has ≥1 endpoint among this batch's
-        # new ids (the probe property — ``banded_new`` joins the index),
-        # and re-delivery filtering makes ids unique across batches, so
-        # per pair (i < j):
-        #   both endpoints new → same arrival batch, j (larger id) is
-        #   the pair's duplicate; exactly one endpoint new → the old
-        #   one arrived in an earlier batch, so the NEW one is the
-        #   duplicate. Two broadcast flag joins of the in-hand batch id
-        #   set replace the previous arrival-key formulation (an ids-
-        #   registry view + a 5-stage shuffle join per batch — the most
-        #   expensive phase of a warm micro-batch, for a verdict that
-        #   never needed the registry at all).
-        flag_i = F.broadcast(
-            new_ids.select(F.col("doc_id").alias("i"), F.lit(True).alias("_in"))
-        )
-        flag_j = F.broadcast(
-            new_ids.select(F.col("doc_id").alias("j"), F.lit(True).alias("_jn"))
+        # Every pair has ≥1 new endpoint (the probe property) and ids
+        # are unique across batches (re-delivery filtering), so for a
+        # pair i < j the duplicate is j when j is new — i is then new
+        # too (same batch, smaller id) or older — and i otherwise (j
+        # arrived in an earlier batch). One broadcast flag join of the
+        # batch's new ids decides it.
+        j_new = F.broadcast(
+            docs_new.select(F.col("doc_id").alias("j"), F.lit(True).alias("_jn"))
         )
         dup_ids = (
-            verified.join(flag_i, "i", "left")
-            .join(flag_j, "j", "left")
+            verified.join(j_new, "j", "left")
             .select(
-                F.when(
-                    F.coalesce(F.col("_in"), F.lit(False))
-                    & F.coalesce(F.col("_jn"), F.lit(False)),
-                    F.col("j"),
-                )
-                .when(F.coalesce(F.col("_in"), F.lit(False)), F.col("i"))
-                .otherwise(F.col("j"))
-                .alias("doc_id")
+                F.when(F.col("_jn"), F.col("j")).otherwise(F.col("i")).alias("doc_id"),
+                F.lit(False).alias("novel"),
             )
             .distinct()
         )
-        novel = new_ids.join(dup_ids, "doc_id", "left_anti")
+        docs_out = docs_new.join(dup_ids, "doc_id", "left").select(
+            "doc_id", "text", F.coalesce("novel", F.lit(True)).alias("novel")
+        )
 
-        # pairs + novel are the batch's last two independent sinks —
-        # overlapped like the phase-A trio (both read the persisted
-        # ``verified``; the block-loading lock fills it exactly once)
-        def _w_pairs() -> None:
-            verified.write.mode("overwrite").parquet(
-                os.path.join(self._sub("pairs"), f"batch_id={batch_id}")
-            )
+        # ONE write phase: the three sinks are independent over the
+        # persisted batch frames, so they run CONCURRENTLY from a driver
+        # thread pool — a warm micro-batch's wall is almost pure
+        # per-sink job floor, and overlapping collapses the floors into
+        # one. Concurrent first-actions racing to fill the docs_new /
+        # banded_new / cands / verified caches are safe AND
+        # compute-once: Spark's BlockManager takes a per-partition
+        # loading lock, so one thread computes a block and the others
+        # read it. No sink reads another sink's output, so none has to
+        # finish first. Crash semantics: a batch with SOME sinks written
+        # is replayed, and the replay overwrites every sink before
+        # progress is recorded. Each sink
+        # is wrapped with ``inheritable_thread_target`` so its jobs
+        # carry this thread's local properties — the stream's job group
+        # among them, which ``StreamingQuery.stop()`` cancels by. One
+        # wrap per sink: each wrap takes its own copy, and concurrent
+        # sinks write their SQL execution ids into it.
+        obs = Observation()
+        obs_banded = Observation()
+        sinks = {
+            "banded": banded_new.observe(obs_banded, F.count(F.lit(1)).alias("rows")),
+            "docs": docs_out.observe(obs, *fp_exprs),
+            "pairs": verified,
+        }
 
-        def _w_novel() -> None:
-            novel.write.mode("overwrite").parquet(
-                os.path.join(self._sub("novel"), f"batch_id={batch_id}")
-            )
+        def _sink(table: str):
+            def write() -> None:
+                sinks[table].write.mode("overwrite").parquet(
+                    self._l0_dir(table, batch_id)
+                )
 
-        _pool_run(_w_pairs, _w_novel)
+            return inheritable_thread_target(spark)(write)
+
+        with ThreadPoolExecutor(max_workers=len(sinks)) as pool:
+            for fut in [pool.submit(_sink(t)) for t in sinks]:
+                fut.result()
+        if fingerprint is None:
+            fingerprint = [int(obs.get["n"]), int(obs.get["x"])]
         verified.unpersist()
         cands.unpersist()
-        posts_new.unpersist()
         banded_new.unpersist()
         docs_new.unpersist()
         # write accounting: this batch's L0 footprint, for the
         # write-amplification witness (compact() logs its own entry)
         l0_bytes, l0_files = self._dir_stats(
-            *[
-                os.path.join(self._sub(t), f"batch_id={batch_id}")
-                for t in ("ids", "banded", "posts", "pairs", "novel")
-            ]
+            *[self._l0_dir(t, batch_id) for t in sinks]
         )
         self._log_write(
             {
@@ -915,10 +847,13 @@ class StreamingLSHIndex:
     # ------------------------------------------------------------------
     def near_dup_pairs(self, spark: SparkSession) -> DataFrame:
         """All verified near-dup pairs (i < j, jaccard) emitted so far;
-        empty (with schema) before the first batch."""
-        return self._read_or_empty(spark, "pairs", _PAIRS_SCHEMA).select(
-            "i", "j", "jaccard"
-        )
+        empty (with schema) before the first batch — callers like
+        ``bench.py`` drain the query unconditionally, and an absent
+        output directory must mean 'no pairs yet', not a crash."""
+        path = self._sub("pairs")
+        if not os.path.isdir(path):
+            return spark.createDataFrame([], _PAIRS_DDL)
+        return spark.read.parquet(path).select("i", "j", "jaccard")
 
     def novel_ids(self, spark: SparkSession) -> DataFrame:
         """Ids of documents that were NOVEL at arrival — not a
@@ -929,13 +864,13 @@ class StreamingLSHIndex:
         order. Documents too short to shingle are trivially novel
         (invisible to LSH, same as the batch family); re-deliveries of
         an already-seen id are judged once, at first arrival."""
-        return self._read_or_empty(spark, "novel", _IDS_SCHEMA).select("doc_id")
+        return self._read_indexed(spark, "docs").filter("novel").select("doc_id")
 
     def seen_ids(self, spark: SparkSession) -> DataFrame:
         """Distinct document ids the index has registered (including
         shingle-less documents, which are registered for re-delivery
         filtering but generate no banded rows and so never pair)."""
-        return self._read_indexed(spark, "ids").select("doc_id")
+        return self._read_indexed(spark, "docs").select("doc_id")
 
     # ------------------------------------------------------------------
     def probe_files_touched(self, spark: SparkSession, probe_docs: DataFrame) -> int:
@@ -1005,9 +940,13 @@ def stream_lsh_corpus(
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         index.process_batch(batch_df, batch_id)
         spark = batch_df.sparkSession
-        novel_b = spark.read.parquet(
-            os.path.join(index._sub("novel"), f"batch_id={batch_id}")
-        ).select(F.col("doc_id").alias("__novel_id"))
+        # the batch's own ``docs`` dir: the highest batch is never
+        # folded, so it is still L0 after any compaction just fired
+        novel_b = (
+            index._read_l0(spark, "docs", [index._l0_dir("docs", batch_id)])
+            .filter("novel")
+            .select(F.col("doc_id").alias("__novel_id"))
+        )
         # a doc_id duplicated WITHIN the micro-batch must yield ONE
         # corpus row (ADVICE r10) — and the SAME row the index chose to
         # represent the id (min (xxhash64(text), text)), so corpus text

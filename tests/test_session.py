@@ -41,7 +41,7 @@ def test_default_driver_heap_without_meminfo(tmp_path):
 def test_session_writes_zstd(spark, tmp_path):
     """``get_spark`` sets zstd for shuffle, broadcast, spill and
     checkpoint streams and for parquet, and turns checkpoint
-    compression on; a committed fact file, an L0 ``posts`` file and a
+    compression on; a committed fact file, an L0 ``docs`` file and a
     compacted run's ``banded`` file all report ZSTD in their footers."""
     conf = spark.sparkContext.getConf()
     assert conf.get("spark.io.compression.codec") == "zstd"
@@ -58,11 +58,11 @@ def test_session_writes_zstd(spark, tmp_path):
     ix = StreamingLSHIndex(str(tmp_path / "lsh"), threshold=0.8, compact_every=1)
     for b in range(3):
         ix.process_batch(docs.filter(F.col("doc_id") % 3 == b), b)
-    posts = list(Path(ix._sub("posts")).glob("batch_id=*/*.parquet"))
+    docs_l0 = list(Path(ix._sub("docs")).glob("batch_id=*/*.parquet"))
     banded = [
         p
         for r in ix._compaction()["runs"]
         for p in Path(ix._run_dir(r["name"]), "banded").glob("*.parquet")
     ]
-    for files in (facts, posts, banded):
+    for files in (facts, docs_l0, banded):
         assert files and parquet_codecs(*files) == {"ZSTD"}, files

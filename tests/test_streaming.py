@@ -1458,23 +1458,24 @@ def _store_entries(root) -> int:
 
 
 #: Spark jobs of a 20-document micro-batch that probes one compacted
-#: run (no compaction of its own); it runs 16 on a 4-core host. The
+#: run (no compaction of its own), measured on a 4-core host. The
 #: chunk-grid layout ran 24: it collected the batch's bucket chunks and
 #: the candidates' doc-hash chunks to prune runs by, and broadcast the
 #: candidates twice from two separate computations.
-LSH_PROBE_BATCH_JOBS = 18
+LSH_PROBE_BATCH_JOBS = 16
 
 
 def test_streaming_lsh_run_layout_and_probe_jobs(spark, tmp_path):
-    """A compacted run is plain parquet sized by its bytes: after a
-    compacting ``process_batch`` on a small fixture no ``pb=``/``pd=``
-    chunk directory exists, each run table is one data file, and the
-    batch creates at most 36 directories plus data files under the
-    store (the chunk-grid layout created 91 here, this one 31: the
-    batch's own L0 sinks plus 3 run files in 5 directories). The write
-    log counts the data files of every write. A later batch that
-    probes the run, without compacting, runs at most
-    ``LSH_PROBE_BATCH_JOBS`` Spark jobs."""
+    """A batch writes three L0 tables (``banded``, ``docs``, ``pairs``)
+    and a compacted run holds two (``banded``, ``docs``), each plain
+    parquet sized by its bytes: after a compacting ``process_batch`` on
+    a small fixture no ``pb=``/``pd=`` chunk directory exists, each run
+    table is one data file, and the batch creates at most 19
+    directories plus data files under the store (the chunk-grid layout
+    created 91 here, the five-sink layout 31). The write log counts the
+    data files of every write. A later batch that probes the run,
+    without compacting, runs at most ``LSH_PROBE_BATCH_JOBS`` Spark
+    jobs."""
     from kingsfoil_seed_data_ingestor_spark.streaming.lsh import StreamingLSHIndex
 
     docs = load(spark, SF_DIR, "documents").select("doc_id", "text").filter(
@@ -1490,15 +1491,20 @@ def test_streaming_lsh_run_layout_and_probe_jobs(spark, tmp_path):
     created = _store_entries(store) - before
     comp = ix._compaction()
     assert comp is not None and comp["upto"] == 1 and len(comp["runs"]) == 1
-    assert created <= 36, created
+    assert created <= 19, created
 
     chunk_dirs = [
         d for d, _, _ in os.walk(store)
         if os.path.basename(d).startswith(("pb=", "pd="))
     ]
     assert not chunk_dirs, chunk_dirs
+    tables = {t for t in os.listdir(store) if (store / t).is_dir()}
+    assert tables == {"banded", "docs", "pairs", "runs"}, tables
+    for table in ("banded", "docs", "pairs"):
+        assert (store / table / "batch_id=2").is_dir(), table
     run_dir = ix._run_dir(comp["runs"][0]["name"])
-    for table in ("banded", "posts", "ids"):
+    assert set(os.listdir(run_dir)) == {"banded", "docs"}, os.listdir(run_dir)
+    for table in ("banded", "docs"):
         files = [
             f for f in os.listdir(os.path.join(run_dir, table))
             if f.startswith("part-")
@@ -1506,8 +1512,8 @@ def test_streaming_lsh_run_layout_and_probe_jobs(spark, tmp_path):
         assert len(files) == 1, (table, files)
 
     log = ix.write_log()
-    assert [e["files"] for e in log if e["event"] == "compact"] == [3]
-    assert all(e["files"] >= 5 for e in log if e["event"] == "batch"), log
+    assert [e["files"] for e in log if e["event"] == "compact"] == [2], log
+    assert all(e["files"] >= 9 for e in log if e["event"] == "batch"), log
 
     sc = spark.sparkContext
     sc.setJobGroup("lsh-probe-batch", "lsh-probe-batch")
@@ -1523,84 +1529,32 @@ def test_streaming_lsh_run_layout_and_probe_jobs(spark, tmp_path):
     assert ix.seen_ids(spark).count() == docs.count()
 
 
-def test_streaming_lsh_reads_and_merges_chunk_grid_runs(spark, tmp_path):
-    """An index compacted by the earlier layout — ``chunks`` pinned in
-    ``_params.json``, a marked run whose ``banded``/``posts`` tables are
-    hive-partitioned into ``pb=``/``pd=`` chunk directories — still
-    opens, probes, folds and tier-merges: the legacy run is merged away
-    and the pairs, novelty verdicts and registry equal a fresh index's
-    over the same batches."""
+def test_streaming_lsh_refuses_an_index_of_another_layout(spark, tmp_path):
+    """The store layout is pinned in ``_params.json`` with the banding
+    parameters: an index whose pin lacks the layout entry (written
+    before ``docs`` replaced the ``ids``/``posts``/``novel`` tables) is
+    refused on open instead of being misread, and so is one pinned
+    under any other layout name."""
     import json
 
     from kingsfoil_seed_data_ingestor_spark.streaming.lsh import StreamingLSHIndex
 
     docs = load(spark, SF_DIR, "documents").select("doc_id", "text").filter(
-        F.col("doc_id") < 120
+        F.col("doc_id") < 20
     )
-    clones = docs.filter(F.col("doc_id") % 3 == 0).withColumn(
-        "doc_id", F.col("doc_id") + 5000
-    )
-    batches = _split_batches(docs, 5) + [clones]
-
-    # the old layout, by hand: batches 0..2 in L0, 0..1 folded into a
-    # chunk-partitioned run (4 chunks) named by the marker
-    store = tmp_path / "legacy"
-    old = StreamingLSHIndex(str(store), threshold=0.8, compact_every=0)
-    for b in range(3):
-        old.process_batch(batches[b], b)
-    legacy = "run-chunkgrid"
-    run_dir = store / "runs" / legacy
-
-    def folded(table):
-        return spark.read.parquet(str(store / table)).filter(F.col("batch_id") <= 1)
-
-    banded = folded("banded")
-    rows = banded.count()
-    (
-        banded.withColumn("pb", F.pmod(F.col("bucket"), F.lit(4)))
-        .repartition(4, "pb")
-        .sortWithinPartitions("bucket")
-        .write.partitionBy("pb")
-        .parquet(str(run_dir / "banded"))
-    )
-    (
-        folded("posts")
-        .withColumn("pd", F.pmod(F.xxhash64(F.col("doc_id")), F.lit(4)))
-        .repartition(4, "pd")
-        .sortWithinPartitions("doc_id")
-        .write.partitionBy("pd")
-        .parquet(str(run_dir / "posts"))
-    )
-    folded("ids").coalesce(1).write.parquet(str(run_dir / "ids"))
-    (store / "_compacted.json").write_text(
-        json.dumps({"upto": 1, "runs": [{"name": legacy, "rows": rows}]})
-    )
+    store = tmp_path / "store"
+    StreamingLSHIndex(str(store), threshold=0.8).process_batch(docs, 0)
     params = json.loads((store / "_params.json").read_text())
-    (store / "_params.json").write_text(json.dumps({**params, "chunks": 4}))
-    assert any(p.name.startswith("pb=") for p in (run_dir / "banded").iterdir())
+    assert "layout" in params, params
+    StreamingLSHIndex(str(store), threshold=0.8)  # the same layout opens
 
-    # reopened under the plain layout; tier_fanout=2 so the one-batch
-    # folds of batches 2 and 3 merge, and their merge (two batches'
-    # rows, the legacy run's tier) merges with the legacy run
-    ix = StreamingLSHIndex(
-        str(store), threshold=0.8, compact_every=1, tier_fanout=2
-    )
-    for b in range(3, len(batches)):
-        ix.process_batch(batches[b], b)
-    fresh = StreamingLSHIndex(str(tmp_path / "fresh"), threshold=0.8, compact_every=0)
-    for b, df in enumerate(batches):
-        fresh.process_batch(df, b)
-
-    names = [r["name"] for r in ix._compaction()["runs"]]
-    assert legacy not in names, names
-    assert any(e.get("merge_rows", 0) >= rows for e in ix.write_log()), ix.write_log()
-    for name in names:
-        for _dir, dirs, _files in os.walk(ix._run_dir(name)):
-            assert not [d for d in dirs if d.startswith(("pb=", "pd="))], name
-    got = _snap_lsh(spark, ix)
-    assert got == _snap_lsh(spark, fresh)
-    assert len(got[0]) >= clones.count()  # non-vacuous: planted clones pair
-    assert len(got[2]) == docs.count() + clones.count()
+    old = {k: v for k, v in params.items() if k != "layout"}
+    (store / "_params.json").write_text(json.dumps(old))
+    with pytest.raises(ValueError, match="refusing to probe"):
+        StreamingLSHIndex(str(store), threshold=0.8)
+    (store / "_params.json").write_text(json.dumps({**params, "layout": "other"}))
+    with pytest.raises(ValueError, match="refusing to probe"):
+        StreamingLSHIndex(str(store), threshold=0.8)
 
 
 def test_streaming_lsh_reads_and_merges_snappy_runs(spark, tmp_path):
